@@ -8,10 +8,14 @@ SURVEY.md §2.F) — plus the wider Gelly library family:
 ``linkanalysis/HITS.java``, ``similarity/JaccardIndex.java`` and
 ``similarity/AdamicAdar.java``.
 
-Spark-first shape: pure DataFrame joins + aggregations per superstep,
-``localCheckpoint`` per iteration to truncate lineage. Edges shuffle on
-src/dst — at scale, pre-partition the edge table on src
-(``repartition("src")``) so every superstep reuses the partitioning.
+Spark-first shape: pure DataFrame joins + aggregations per superstep.
+Every iterative algorithm runs on the one superstep driver,
+``iteration_models.iterate`` (or, where it carries two frames, on its
+``checkpoint_counting`` primitive): one eager ``localCheckpoint`` per
+superstep truncates lineage and observes the delta loops' exit count.
+Loop-invariant edge tables are hash-partitioned on the per-superstep
+join key once (``_partitioned``), so each superstep shuffles only the
+state side.
 """
 
 from __future__ import annotations
@@ -20,7 +24,20 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iteration_models import _partitioned, checkpoint_counting, iterate
 from .sizing import sized_shuffle as _sized_shuffle
+
+
+def _two_per_step(superstep, iterations: int):
+    """A driver step, and its step count, running a fixed ``iterations``
+    supersteps two per checkpoint (an odd count ends on a one-superstep
+    step)."""
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        state = superstep(state)
+        return superstep(state) if 2 * i + 1 < iterations else state
+
+    return step, (iterations + 1) // 2
 
 
 def pagerank(
@@ -29,48 +46,31 @@ def pagerank(
     damping: float = 0.85,
 ) -> DataFrame:
     """PageRank over an edge list (src long, dst long). Returns
-    (vertex, rank). Dangling vertices keep the teleport mass."""
+    (vertex, rank). Dangling vertices keep the teleport mass.
+
+    The out-degree rides on the edge list, attached once before the
+    loop. Ranks are read once per superstep (the contribution join; the
+    merge side reads the vertex table), so two supersteps share each
+    checkpoint."""
     with _sized_shuffle(edges):
-        # Round 12 (guide §2.4): both loop-invariant tables are
-        # pre-partitioned on their per-superstep join keys — edges_deg
-        # on src (the contribution join's key) and vertices on vertex
-        # (the rank-merge join's key, which ALSO matches the contrib
-        # groupBy's output partitioning, so the merge join plans with
-        # no exchange on either side). Locally neutral (2.03 -> 1.96 s
-        # matched A/B — the frames are tiny); at scale it removes
-        # iterations x |E| shuffle bytes, the same argument as sssp.
-        width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        vertices = (
+        # partitioned like the contributions' groupBy, so the rank merge
+        # plans with no exchange on either side; persisted, because a
+        # localCheckpoint drops the hash partitioning
+        vertices = _partitioned(
             edges.select(F.col("src").alias("vertex"))
             .union(edges.select(F.col("dst").alias("vertex")))
-            .distinct()
-            .repartition(width, "vertex")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .distinct(),
+            "vertex",
         )
         n = vertices.count()
-        out_deg = (
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+        edges_deg = _partitioned(
+            edges.join(
+                edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src"
+            ),
+            "src",
         )
-        # Guide §2.4: attach the out-degree to the edge list
-        # ONCE before the loop — the r1-r11 shape re-joined out_deg
-        # inside every one of the ``iterations`` supersteps, paying an
-        # extra src-keyed join per round for a value that never changes.
-        edges_deg = (
-            edges.join(out_deg, "src")
-            .repartition(width, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        ranks = vertices.withColumn("rank", F.lit(1.0 / n))
-        # Round 13 (guide §1.2): checkpoint every SECOND superstep —
-        # ranks are referenced exactly ONCE per iteration (the contribs
-        # join; the merge side reads vertices), so letting two
-        # supersteps share one checkpoint halves the materializations
-        # with ZERO re-execution (single-reference lineage, depth
-        # bounded at 2). The last iteration always checkpoints so the
-        # returned frame stays lineage-truncated.
-        for i in range(iterations):
+
+        def superstep(ranks: DataFrame) -> DataFrame:
             contribs = (
                 edges_deg.join(ranks, edges_deg.src == ranks.vertex)
                 .select(
@@ -80,17 +80,19 @@ def pagerank(
                 .groupBy("vertex")
                 .agg(F.sum("c").alias("inflow"))
             )
-            ranks = vertices.join(contribs, "vertex", "left").select(
+            return vertices.join(contribs, "vertex", "left").select(
                 "vertex",
                 (
                     F.lit((1.0 - damping) / n)
                     + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
                 ).alias("rank"),
             )
-            if i % 2 == 1 or i == iterations - 1:
-                ranks = ranks.localCheckpoint(eager=True)
+
+        ranks, _ = iterate(
+            vertices.withColumn("rank", F.lit(1.0 / n)),
+            *_two_per_step(superstep, iterations),
+        )
         vertices.unpersist()
-        out_deg.unpersist()
         edges_deg.unpersist()
         return ranks
 
@@ -99,38 +101,27 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
     """Delta-iteration label propagation (ConnectedComponents.java):
     solution = (vertex, component); workset = vertices whose label
     changed last round. Terminates when the workset empties. Returns
-    (vertex, component) with component = min vertex id in the component."""
+    (vertex, component) with component = min vertex id in the component.
+
+    The state carries the solution and a ``changed`` flag per vertex;
+    ``changed`` ⟺ the candidate is a strict improvement, and the
+    flagged rows are the next workset. Each driver step runs two label
+    propagations under one checkpoint (exact: see ``iterate``)."""
     with _sized_shuffle(edges):
-        # Round 12 (guide §2.4): like sssp, the undirected edge table is
-        # loop-invariant but was re-shuffled on src in every superstep's
-        # candidate join; one repartition behind the persist pins
-        # hashpartitioning(src, width) so each round shuffles only the
-        # (shrinking) workset. Matched A/B at sf0.1: 2.22 -> 2.02 s.
-        width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        und = (
+        und = _partitioned(
             edges.select("src", "dst")
             .union(
                 edges.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
             )
-            .distinct()
-            .repartition(width, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .distinct(),
+            "src",
         )
-        solution = (
-            und.select(F.col("src").alias("vertex"))
-            .distinct()
-            .withColumn("component", F.col("vertex"))
-            .localCheckpoint(eager=True)
-        )
-        workset = solution
 
-        # candidate labels flowing across edges from changed vertices
-        def _relax(ws: DataFrame) -> DataFrame:
-            return (
+        def relax(state: DataFrame) -> DataFrame:
+            ws = state.filter("changed")
+            cand = (
                 und.join(ws, und.src == ws.vertex)
                 .select(
                     F.col("dst").alias("vertex"),
@@ -139,16 +130,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
                 .groupBy("vertex")
                 .agg(F.min("cand").alias("cand"))
             )
-
-        # Round 12 (guide §1.2): ONE merge carries both the new
-        # solution and the changed flag — the r1-r11 shape
-        # checkpointed the solution, then re-joined it against the
-        # old solution and checkpointed AGAIN just to derive the
-        # workset (2 actions + 1 extra vertex-join per superstep).
-        # ``changed`` ⟺ cand < old component ⟺ the strict improvement
-        # the old join+filter computed.
-        def _merge(sol: DataFrame, cand: DataFrame) -> DataFrame:
-            return sol.join(cand, "vertex", "left").select(
+            return state.join(cand, "vertex", "left").select(
                 "vertex",
                 F.least(
                     F.col("component"), F.coalesce("cand", F.col("component"))
@@ -159,24 +141,20 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
                 ).alias("changed"),
             )
 
-        # Round 13 (guide §1.2): TWO label propagations per checkpoint,
-        # the sssp batched-relaxation shape — min-label propagation's
-        # fixpoint is schedule-independent, so the result is identical
-        # (oracle re-verified at both SFs), the exit exact (a second
-        # propagation that improves nothing == fixpoint), and each loop
-        # body pays one materialization + one isEmpty for two
-        # supersteps of progress. K=2 only (see sssp).
-        for _ in range(max_iterations):
-            m1 = _merge(solution, _relax(workset))
-            sol1 = m1.select("vertex", "component")
-            ws1 = m1.filter("changed").select("vertex", "component")
-            merged = _merge(sol1, _relax(ws1)).localCheckpoint(eager=True)
-            solution = merged.select("vertex", "component")
-            workset = merged.filter("changed").select("vertex", "component")
-            if workset.isEmpty():
-                break
+        start = (
+            und.select(F.col("src").alias("vertex"))
+            .distinct()
+            .select(
+                "vertex",
+                F.col("vertex").alias("component"),
+                F.lit(True).alias("changed"),
+            )
+        )
+        state, _ = iterate(
+            start, lambda s, _i: relax(relax(s)), max_iterations, F.col("changed")
+        )
         und.unpersist()
-        return solution
+        return state.select("vertex", "component")
 
 
 def sssp(
@@ -197,38 +175,18 @@ def sssp(
     Delta-iteration shape, matching connected_components above: the
     per-round join touches only the WORKSET (vertices improved last
     round), not the full solution — the work per superstep shrinks as the
-    frontier converges, exactly Flink's workset optimization. Each round
-    is one shuffle on the edge key plus a min-merge groupBy; lineage is
-    truncated per round with localCheckpoint.
+    frontier converges, exactly Flink's workset optimization. Each
+    relaxation is one shuffle on the edge key plus a full-outer min-merge
+    (solution-only rows pass through, candidate-only rows are new
+    frontier); each driver step runs two relaxations under one
+    checkpoint (exact: see ``iterate``).
     """
     with _sized_shuffle(edges):
-        # Round 12 (guide §2.4): pre-partition the loop-invariant edge
-        # table on the per-superstep join key ONCE — the r1-r11 shape
-        # re-shuffled the FULL edge list in every superstep's
-        # frontier join (the workset side shrinks as the frontier
-        # converges; the edge side never does). The persisted
-        # hashpartitioning(src, width) satisfies the join's
-        # distribution requirement, so each round shuffles only the
-        # workset. Matched A/B at sf0.1: 4.05 -> 3.29 s best-of-5;
-        # at scale this is iterations x |E| shuffle bytes removed.
-        width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        e = (
-            edges.select("src", "dst", "weight")
-            .repartition(width, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        solution = (
-            e.sparkSession.createDataFrame(
-                [(source, 0)], "vertex long, distance long"
-            )
-            .localCheckpoint(eager=True)
-        )
-        workset = solution
+        e = _partitioned(edges.select("src", "dst", "weight"), "src")
 
-        def _relax(ws: DataFrame) -> DataFrame:
-            return (
+        def relax(state: DataFrame) -> DataFrame:
+            ws = state.filter("changed")
+            cand = (
                 e.join(ws, e.src == ws.vertex)
                 .select(
                     F.col("dst").alias("vertex"),
@@ -237,17 +195,9 @@ def sssp(
                 .groupBy("vertex")
                 .agg(F.min("cand").alias("cand"))
             )
-
-        # Round 12 (guide §1.2): ONE full-outer merge replaces the
-        # r1-r11 two-checkpoint shape: solution-only rows pass through,
-        # candidate-only rows are new frontier, both-sides rows keep the
-        # min — exactly the old union+min — and ``changed`` marks the
-        # same strict improvements the old filter kept (F.least skips
-        # nulls).
-        def _merge(sol: DataFrame, cand: DataFrame) -> DataFrame:
-            return sol.join(cand, "vertex", "full").select(
+            return state.join(cand, "vertex", "full").select(
                 "vertex",
-                F.least("distance", "cand").alias("dist"),
+                F.least("distance", "cand").alias("distance"),
                 (
                     F.col("cand").isNotNull()
                     & (
@@ -257,35 +207,14 @@ def sssp(
                 ).alias("changed"),
             )
 
-        # Round 13 (guide §1.2 — fewer materializations per unit of
-        # progress): TWO relaxations run under each checkpoint. The
-        # fixpoint is relaxation-schedule-independent (positive weights,
-        # min-merge), so the result is bit-identical — verified
-        # row-for-row against the one-relaxation loop before the switch.
-        # Exit stays exact: if the second relaxation improves nothing,
-        # the first one's improvements were already propagated without
-        # effect, i.e. the fixpoint is reached. Each loop body now pays
-        # ONE localCheckpoint materialization + ONE isEmpty action for
-        # two frontier expansions (the intermediate merge is
-        # re-executed from reused shuffle output — cheaper than
-        # materializing it, measured 3.01 -> 2.66 s best matched A/B at
-        # sf0.1). K=2 only: at K=3 the un-checkpointed intermediate
-        # would appear 4x in the next plan (doubling per level).
-        for _ in range(max_iterations):
-            m1 = _merge(solution, _relax(workset))
-            sol1 = m1.select("vertex", F.col("dist").alias("distance"))
-            ws1 = m1.filter("changed").select(
-                "vertex", F.col("dist").alias("distance")
-            )
-            merged = _merge(sol1, _relax(ws1)).localCheckpoint(eager=True)
-            solution = merged.select("vertex", F.col("dist").alias("distance"))
-            workset = merged.filter("changed").select(
-                "vertex", F.col("dist").alias("distance")
-            )
-            if workset.isEmpty():
-                break
+        start = e.sparkSession.createDataFrame(
+            [(source, 0, True)], "vertex long, distance long, changed boolean"
+        )
+        state, _ = iterate(
+            start, lambda s, _i: relax(relax(s)), max_iterations, F.col("changed")
+        )
         e.unpersist()
-        return solution
+        return state.select("vertex", "distance")
 
 
 def _undirect(edges: DataFrame) -> DataFrame:
@@ -476,41 +405,16 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     (the reference's maxIterations bound, without the early-convergence
     cut, so the unrolled SQL oracle steps in lockstep).
 
-    One shuffle per superstep (message groupBy) plus the final argmax
-    groupBy; labels checkpoint per round to truncate lineage. Round 12:
-    supersteps run under ``sized_shuffle`` like the other iterative
-    pipelines — the per-round checkpoint otherwise materializes at the
-    session shuffle width (scheduling overhead at test scale, see
-    sizing.py).
+    One shuffle per superstep (message groupBy) plus the argmax
+    groupBy. Two supersteps share each checkpoint: the intermediate
+    label frame, read by the next superstep's message join and
+    own-label seed, is re-executed from reused shuffle output, which is
+    cheaper than materializing it.
     """
     with _sized_shuffle(edges):
-        # Round 12 (guide §5): the edge topology is loop-INVARIANT but
-        # was re-planned per superstep — for the registered pipeline
-        # that subtree is a parquet scan + distinct (a full shuffle)
-        # re-executed in all ``iterations`` message joins. Persist once,
-        # unpersist after the final checkpoint owns the result;
-        # pre-partitioned on src (guide §2.4, the sssp precedent) so
-        # each message join shuffles only the label frame.
-        width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        e = edges.repartition(width, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        labels = (
-            e.select(F.col("src").alias("vertex"))
-            .union(e.select(F.col("dst").alias("vertex")))
-            .distinct()
-            .withColumn("label", F.col("vertex"))
-            .localCheckpoint(eager=True)
-        )
-        # Round 13 (guide §1.2, the sssp batched-superstep shape):
-        # checkpoint every SECOND superstep. The intermediate label
-        # frame is referenced twice by the next round (message join +
-        # own-label seed), re-executed from reused shuffle output —
-        # cheaper than materializing it (measured, see
-        # OPTIMIZATION_r13.md). The final superstep always checkpoints.
-        for i in range(iterations):
+        e = _partitioned(edges, "src")
+
+        def superstep(labels: DataFrame) -> DataFrame:
             msgs = e.join(labels, e.src == labels.vertex).select(
                 F.col("dst").alias("vertex"), "label"
             )
@@ -518,14 +422,20 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
                 F.count(F.lit(1)).alias("freq")
             )
             own = labels.withColumn("freq", F.lit(1).cast("long"))
-            labels = (
+            return (
                 counts.unionByName(own)
                 .groupBy("vertex")
                 .agg(F.max(F.struct("freq", "label")).alias("m"))
                 .select("vertex", F.col("m.label").alias("label"))
             )
-            if i % 2 == 1 or i == iterations - 1:
-                labels = labels.localCheckpoint(eager=True)
+
+        start = (
+            e.select(F.col("src").alias("vertex"))
+            .union(e.select(F.col("dst").alias("vertex")))
+            .distinct()
+            .withColumn("label", F.col("vertex"))
+        )
+        labels, _ = iterate(start, *_two_per_step(superstep, iterations))
         e.unpersist()
         return labels
 
@@ -541,43 +451,27 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     count (HITS(int iterations) constructor). Returns
     (vertex, hub, authority).
 
+    Raises ``ValueError`` when ``iterations`` < 1.
+
     Two key-shuffles per iteration plus one scalar aggregate; the
     scalar normalizers come back via one-row crossJoin broadcast, so
     nothing vertex-sized ever reaches the driver.
 
-    Round 13 (guide §1.2 — don't compute what you throw away): the
-    loop carries only the RAW aggregate legs. A vertex absent from a
+    The loop carries only the RAW aggregate legs. A vertex absent from a
     leg has score exactly 0.0, and a 0.0 addend is exact in float
-    summation, so zero-filling inside the loop cannot change any sum
-    (the contribution sums, or the sum-of-squares normalizers) — the
-    r12 shape's two per-half-step ``vertices`` left-joins, the
-    per-iteration h⋈a inner join feeding the next superstep, and the
-    dead intermediate hub normalizers (only ``auth`` is ever consumed
-    by the next iteration) are all folded into ONE final zero-filling
-    projection. Per iteration that leaves exactly: the e⋈auth join +
-    grouped sum (h leg, checkpointed), the e⋈h join + grouped sum
-    (a leg, checkpointed), and the 1-row ``an`` normalizer broadcast
-    into the NEXT superstep's per-edge ``a/an`` division — the same
-    per-row arithmetic, join keys, and checkpoint cadence as r12 on
-    strictly smaller frames. Values are FP-identical: every aggregate
-    consumes the same multiset of nonzero addends as before.
+    summation, so zero-filling inside the loop cannot change any sum;
+    one final zero-filling projection produces the scores. Per
+    iteration that leaves: the e⋈auth join + grouped sum (h leg,
+    checkpointed), the e⋈h join + grouped sum (a leg, checkpointed), and
+    the 1-row ``an`` normalizer broadcast into the NEXT superstep's
+    per-edge ``a/an`` division. The h leg joins on dst and the a leg on
+    src, so the edge list is pre-partitioned on each.
     """
+    if iterations < 1:
+        raise ValueError(f"hits needs iterations >= 1, got {iterations}")
     with _sized_shuffle(edges):
-        # Round 12 (guide §5): the edge list is loop-invariant but was
-        # re-planned in both per-iteration joins (2 x iterations scans).
-        # Guide §2.4 (the sssp precedent), round-12 second pass: the
-        # h-leg joins on dst and the a-leg on src — TWO pre-partitioned
-        # copies remove the edge-side shuffle from both; the 2x edge
-        # storage buys iterations x 2 x |E| shuffle bytes at scale.
-        width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        e = edges.repartition(width, "dst").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        e_src = edges.repartition(width, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        e = _partitioned(edges, "dst")
+        e_src = _partitioned(edges, "src")
         h_raw = a_raw = an_row = None
         for _ in range(iterations):
             if an_row is None:
@@ -593,16 +487,15 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
                         "src", (F.col("a") / F.col("an")).alias("c")
                     )
                 )
-            h_raw = (
-                h_contrib.groupBy(F.col("src").alias("vertex"))
-                .agg(F.sum("c").alias("h"))
-                .localCheckpoint(eager=True)
+            h_raw, _ = checkpoint_counting(
+                h_contrib.groupBy(F.col("src").alias("vertex")).agg(
+                    F.sum("c").alias("h")
+                )
             )
-            a_raw = (
+            a_raw, _ = checkpoint_counting(
                 e_src.join(h_raw, e_src.src == h_raw.vertex)
                 .groupBy(F.col("dst").alias("vertex"))
                 .agg(F.sum("h").alias("a"))
-                .localCheckpoint(eager=True)
             )
             an_row = a_raw.agg(
                 F.sqrt(F.sum(F.col("a") * F.col("a"))).alias("an")
@@ -1079,38 +972,18 @@ def community_detection(
     are EXACT in IEEE arithmetic regardless of summation order and the
     argmax (and its tie-break) is engine-independent — which is what
     makes the SQL oracle sound. One message shuffle + one argmax groupBy
-    per superstep, state checkpointed per round.
+    per superstep, state checkpointed per superstep.
     """
-    # Round 12 (guide §5/§2.2): the bidirectional topology is
-    # loop-invariant but embeds a distinct (full shuffle) that was
-    # re-executed per superstep; persist once. Supersteps run under
-    # sized_shuffle like the other iterative pipelines (the per-round
-    # checkpoint otherwise materializes at the session shuffle width).
     with _sized_shuffle(edges):
         und = _undirect(edges)
-        width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        both = _partitioned(
+            und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+                und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+            ),
+            "src",
         )
-        both = (
-            und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-            .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-            # guide §2.4 (the sssp precedent): partitioned on the
-            # per-superstep message-join key once, so each round
-            # shuffles only the state frame
-            .repartition(width, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        state = (
-            both.select(F.col("src").alias("vertex"))
-            .distinct()
-            .select(
-                "vertex",
-                F.col("vertex").alias("label"),
-                F.lit(1.0).alias("score"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        for step in range(1, iterations + 1):
+
+        def superstep(state: DataFrame, i: int) -> DataFrame:
             msgs = both.join(state, both.src == state.vertex).select(
                 F.col("dst").alias("vertex"), "label", F.col("score").alias("ms")
             )
@@ -1132,21 +1005,28 @@ def community_detection(
                     F.col("m.best").alias("new_best"),
                 )
             )
-            state = (
-                state.join(pick, "vertex", "left")
-                .select(
-                    "vertex",
-                    F.coalesce("new_label", "label").alias("label"),
-                    F.when(F.col("new_label").isNull(), F.col("score"))
-                    .when(
-                        F.col("new_label") != F.col("label"),
-                        F.col("new_best") - F.lit(delta) / step,
-                    )
-                    .otherwise(F.col("new_best"))
-                    .alias("score"),
+            return state.join(pick, "vertex", "left").select(
+                "vertex",
+                F.coalesce("new_label", "label").alias("label"),
+                F.when(F.col("new_label").isNull(), F.col("score"))
+                .when(
+                    F.col("new_label") != F.col("label"),
+                    F.col("new_best") - F.lit(delta) / (i + 1),
                 )
-                .localCheckpoint(eager=True)
+                .otherwise(F.col("new_best"))
+                .alias("score"),
             )
+
+        start = (
+            both.select(F.col("src").alias("vertex"))
+            .distinct()
+            .select(
+                "vertex",
+                F.col("vertex").alias("label"),
+                F.lit(1.0).alias("score"),
+            )
+        )
+        state, _ = iterate(start, superstep, iterations)
         both.unpersist()
         return state.select("vertex", "label")
 
@@ -1779,23 +1659,26 @@ def k_core(
     stops at degree/clustering metrics) but expressed in the same
     delta-iteration discipline as its ConnectedComponents.
 
-    Returns (vertex,) — the k-core membership set. Plan per round: one
-    degree aggregation plus two left-semi joins on the surviving edge
-    set, lineage truncated with localCheckpoint; rounds are bounded by
-    the peel depth (≤ max_iterations guard). The edge frame only ever
-    SHRINKS, so per-round cost decreases — the workset property that
-    makes the loop safe at 100 TB.
+    Returns (vertex,) — the k-core membership set. The peel tracks only
+    the vertex-sized degree table: each round drops the below-k vertices
+    and subtracts their edges from the survivors' degrees via two
+    semi-joins against the (small, shrinking) removed set, so the edge
+    frame is only ever scanned, never rewritten. Edges between two
+    removed vertices only decrement rows the anti-join drops; a
+    (survivor, removed) edge decrements its survivor once. The fixpoint
+    is reached when no vertex is below k — the count the superstep
+    driver observes on each round's checkpoint. Raises ``RuntimeError``
+    when the peel is still going after ``max_iterations`` rounds.
 
     The peel only ever reads the canonical undirected edge set, so the
-    edges-path deliberately does NOT build an ``UndirectedGraphBase``
-    (round-6 verdict: the base persisted three frames — und, degrees,
-    oriented — of which the peel used one, leaking 3 CacheManager
-    entries per call for the session lifetime and polluting every later
-    query's audited plan). ``localCheckpoint`` materializes the start
-    set once without registering anything with the CacheManager; the
-    checkpoint RDDs are reclaimed by the ContextCleaner when the loop's
-    frames go out of scope. Callers that already hold a base pass it
-    via ``base=`` and keep ownership of its lifetime.
+    edges-path deliberately does NOT build an ``UndirectedGraphBase``,
+    whose three persisted frames would stay registered with the
+    CacheManager for the session lifetime and show up in every later
+    query's plan. The checkpoint materializes the edge set once without
+    registering anything with the CacheManager; the checkpoint RDDs are
+    reclaimed by the ContextCleaner when the loop's frames go out of
+    scope. Callers that already hold a base pass it via ``base=`` and
+    keep ownership of its lifetime.
     """
     if base is not None:
         if edges is not None:
@@ -1804,34 +1687,12 @@ def k_core(
     elif edges is None:
         raise ValueError("pass an edge DataFrame or a prebuilt base")
     else:
-        # materialized once: round 1 reads it three times (degree union
-        # ×2 + the semi-join source) and would otherwise re-run the
-        # distinct per consumer
-        e = _undirect(edges).localCheckpoint(eager=True)
-    # Round 13 (guide §1.2 / §2.3 — shuffle metadata, not payloads):
-    # the r6-r12 peel re-CHECKPOINTED the surviving EDGE set every
-    # round (an edge-sized materialization per peel depth). The classic
-    # degree-decrement peel tracks only the vertex-sized degree table:
-    # each round drops the below-k vertices and subtracts their edges
-    # from the survivors' degrees via two broadcast semi-joins against
-    # the (tiny, shrinking) removed set — the loop-invariant edge frame
-    # is only ever SCANNED from its one materialization, never
-    # rewritten. Equivalence: edges between two removed vertices only
-    # decrement rows the anti-join drops; (survivor, removed) edges
-    # decrement exactly once per endpoint orientation; fixpoint when no
-    # vertex falls below k — the same k-core (oracle re-verified at
-    # both SFs; kcore_social 1.90 -> see OPTIMIZATION_r13.md).
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionAll(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
+        # materialized once: the first round reads it three times
+        # (degree union ×2 + the semi-join source)
+        e, _ = checkpoint_counting(_undirect(edges))
+
+    def peel(deg: DataFrame, _i: int) -> DataFrame:
         removed = deg.filter(F.col("c") < k).select("x")
-        if removed.isEmpty():
-            break
         dec = (
             e.join(removed.withColumnRenamed("x", "v"), "v", "left_semi")
             .select(F.col("u").alias("x"))
@@ -1843,16 +1704,20 @@ def k_core(
             .groupBy("x")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        deg = (
+        return (
             deg.join(removed, "x", "left_anti")
             .join(dec, "x", "left")
-            .select(
-                "x",
-                (F.col("c") - F.coalesce("d", F.lit(0))).alias("c"),
-            )
-            .localCheckpoint(eager=True)
+            .select("x", (F.col("c") - F.coalesce("d", F.lit(0))).alias("c"))
         )
-    else:
+
+    deg = (
+        e.select(F.col("u").alias("x"))
+        .unionAll(e.select(F.col("v").alias("x")))
+        .groupBy("x")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    deg, below_k = iterate(deg, peel, max_iterations, F.col("c") < k)
+    if below_k:
         # a silently-truncated peel would return a non-core superset
         raise RuntimeError(
             f"k_core did not converge in {max_iterations} rounds — raise "

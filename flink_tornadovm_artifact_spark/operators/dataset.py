@@ -26,8 +26,9 @@ Design decisions (Spark-first, 100 TB discipline):
   same two-phase shape the reference implements by hand).
 - **reduceGroup materializes each group** (``applyInPandas``) — same
   asymmetry as the reference's ``GroupReduceDriver`` vs ``ReduceDriver``.
-- **Iterations are driver loops** with ``localCheckpoint`` to cut lineage
-  (the analog of the reference's cached marshalled buffers across
+- **Iterations are driver loops** with one eager ``localCheckpoint`` per
+  round to cut lineage (``functions.iteration_models.checkpoint_counting``,
+  the analog of the reference's cached marshalled buffers across
   iterations, ``SpillingResettableMutableObjectIterator.java:136``).
 """
 
@@ -38,6 +39,8 @@ from collections.abc import Callable, Iterable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from ..functions.iteration_models import checkpoint_counting
 
 ColumnOrName = Column | str
 
@@ -229,20 +232,16 @@ class Dataset:
         max_iterations: int,
         step: Callable[[DataFrame, int], DataFrame],
         converged: Callable[[DataFrame, DataFrame], bool] | None = None,
-        checkpoint_every: int = 1,
     ) -> "Dataset":
         """Bulk iteration (DataSet.java:1191): driver loop re-assigning
-        the DataFrame; localCheckpoint truncates lineage each round the
+        the DataFrame; each round is checkpointed, truncating lineage the
         way the reference caches marshalled buffers across iterations."""
         cur = self.df
         for i in range(max_iterations):
-            nxt = step(cur, i)
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-            if converged is not None and converged(cur, nxt):
-                cur = nxt
+            prev = cur
+            cur, _ = checkpoint_counting(step(cur, i))
+            if converged is not None and converged(prev, cur):
                 break
-            cur = nxt
         return Dataset(cur)
 
     def iterate_delta(
@@ -252,13 +251,14 @@ class Dataset:
         step: Callable[[DataFrame, DataFrame, int], tuple[DataFrame, DataFrame]],
     ) -> "Dataset":
         """Delta iteration (DataSet.java:1241): (solution, workset) pairs
-        evolve; terminates early when the workset empties."""
+        evolve; terminates early when the workset empties, a count
+        observed on the workset's own checkpoint."""
         solution, ws = self.df, workset.df
         for i in range(max_iterations):
             solution, ws = step(solution, ws, i)
-            solution = solution.localCheckpoint(eager=True)
-            ws = ws.localCheckpoint(eager=True)
-            if ws.isEmpty():
+            solution, _ = checkpoint_counting(solution)
+            ws, n = checkpoint_counting(ws, F.lit(True))
+            if n == 0:
                 break
         return Dataset(solution)
 

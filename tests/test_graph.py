@@ -4,6 +4,7 @@ ConnectedComponents vs union-find."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from flink_tornadovm_artifact_spark.functions.graph import (
     connected_components,
@@ -16,10 +17,10 @@ def _edges_df(spark, edges):
 
 
 def test_pagerank_matches_numpy(spark):
+    """Iteration counts 1-3 also run the odd remainder of the
+    two-supersteps-per-checkpoint loop."""
     edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0)]
     df = _edges_df(spark, edges)
-    got = {r.vertex: r.rank for r in pagerank(df, iterations=15).collect()}
-
     n = 4
     M = np.zeros((n, n))
     outdeg = {}
@@ -27,11 +28,16 @@ def test_pagerank_matches_numpy(spark):
         outdeg[s] = outdeg.get(s, 0) + 1
     for s, d in edges:
         M[d, s] = 1.0 / outdeg[s]
-    r = np.full(n, 1.0 / n)
-    for _ in range(15):
-        r = (1 - 0.85) / n + 0.85 * (M @ r)
-    for v in range(n):
-        assert abs(got[v] - r[v]) < 1e-9, (v, got[v], r[v])
+    for iterations in (15, 1, 2, 3):
+        got = {
+            r.vertex: r.rank
+            for r in pagerank(df, iterations=iterations).collect()
+        }
+        r = np.full(n, 1.0 / n)
+        for _ in range(iterations):
+            r = (1 - 0.85) / n + 0.85 * (M @ r)
+        for v in range(n):
+            assert abs(got[v] - r[v]) < 1e-9, (v, got[v], r[v])
 
 
 def test_connected_components(spark):
@@ -113,13 +119,14 @@ def test_label_propagation_star_adopts_hub_ties_to_highest(spark):
     )
 
     und = [(5, 1), (1, 5), (5, 2), (2, 5), (5, 3), (3, 5)]
-    got = {
-        r.vertex: r.label
-        for r in label_propagation(
-            _edges_df(spark, und), iterations=2
-        ).collect()
-    }
-    assert got == {1: 5, 2: 5, 3: 5, 5: 5}
+    for iterations in (2, 1, 3):
+        got = {
+            r.vertex: r.label
+            for r in label_propagation(
+                _edges_df(spark, und), iterations=iterations
+            ).collect()
+        }
+        assert got == {1: 5, 2: 5, 3: 5, 5: 5}
 
 
 def test_label_propagation_all_freq_one_takes_highest_label(spark):
@@ -131,13 +138,14 @@ def test_label_propagation_all_freq_one_takes_highest_label(spark):
     )
 
     edges = [(7, 0), (17, 0), (9, 0)]
-    got = {
-        r.vertex: r.label
-        for r in label_propagation(
-            _edges_df(spark, edges), iterations=1
-        ).collect()
-    }
-    assert got[0] == 17
+    for iterations in (1, 2, 3):
+        got = {
+            r.vertex: r.label
+            for r in label_propagation(
+                _edges_df(spark, edges), iterations=iterations
+            ).collect()
+        }
+        assert got[0] == 17
 
 
 def test_hits_bipartite_hand_computed(spark):
@@ -156,6 +164,15 @@ def test_hits_bipartite_hand_computed(spark):
     assert auth[0] == auth[1] == 0  # sources are not authorities
     assert abs(sum(h * h for h in hub.values()) - 1.0) < 1e-9
     assert abs(sum(a * a for a in auth.values()) - 1.0) < 1e-9
+
+
+def test_hits_rejects_fewer_than_one_iteration(spark):
+    from flink_tornadovm_artifact_spark.functions.graph import hits
+
+    df = _edges_df(spark, [(0, 1)])
+    for iterations in (0, -1):
+        with pytest.raises(ValueError, match="iterations"):
+            hits(df, iterations=iterations)
 
 
 def test_jaccard_and_adamic_adar_hand_computed(spark):

@@ -328,3 +328,90 @@ def test_pregel_pagerank_matches_direct(spark):
     assert got.keys() == want.keys()
     assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
     edges.unpersist()
+
+
+def test_delta_loops_exit_without_an_extra_job(spark, monkeypatch):
+    """Every delta loop reads its exit count off the superstep's own
+    checkpoint: with ``DataFrame.isEmpty`` and ``DataFrame.count``
+    disabled, each loop still reaches its fixpoint on a path graph with
+    one back edge (0→1→2→3→4, 4→2, unit weights)."""
+    from flink_tornadovm_artifact_spark.functions.graph import (
+        connected_components,
+        k_core,
+        sssp,
+    )
+    from flink_tornadovm_artifact_spark.operators import Dataset
+
+    rows = [(0, 1, 1), (1, 2, 1), (2, 3, 1), (3, 4, 1), (4, 2, 1)]
+    e = _edges(spark, rows)
+    verts = spark.createDataFrame([(v,) for v in range(5)], "id long")
+    hops = {v: v for v in range(5)}
+
+    def boom(*_a, **_k):
+        raise AssertionError("superstep loop ran a separate exit job")
+
+    frame = type(e)
+    monkeypatch.setattr(frame, "isEmpty", boom)
+    monkeypatch.setattr(frame, "count", boom)
+
+    def as_dict(df, key, value):
+        return {r[key]: r[value] for r in df.collect()}
+
+    got = sssp(e.withColumnRenamed("value", "weight"), source=0)
+    assert as_dict(got, "vertex", "distance") == hops
+    got = connected_components(e.select("src", "dst"))
+    assert as_dict(got, "vertex", "component") == dict.fromkeys(range(5), 0)
+    got = k_core(e.select("src", "dst"), k=2)
+    assert sorted(r.vertex for r in got.collect()) == [2, 3, 4]
+
+    got = gather_sum_apply_iteration(
+        e, verts.withColumn("value", F.col("id")),
+        lambda sv, _ev: sv, F.min, lambda old, new: F.least(old, new), 10,
+    )
+    assert as_dict(got, "id", "value") == dict.fromkeys(range(5), 0)
+
+    inf = 1 << 40
+    got = scatter_gather_iteration(
+        e,
+        verts.withColumn(
+            "value", F.when(F.col("id") == 0, 0).otherwise(inf).cast("long")
+        ),
+        lambda sv, ev: sv + ev, F.min, lambda old, new: F.least(old, new), 10,
+    )
+    assert as_dict(got, "id", "value") == hops
+
+    def compute(_step, sol, msgs):
+        best = msgs.groupBy("id").agg(F.min("msg").alias("msg"))
+        j = sol.join(best, "id", "left")
+        better = F.col("msg").isNotNull() & (F.col("msg") < F.col("value"))
+        sent = (
+            j.filter(better)
+            .join(e, F.col("id") == F.col("src"))
+            .select(F.col("dst").alias("id"), (F.col("msg") + 1).alias("msg"))
+        )
+        return j.select(
+            "id", F.when(better, F.col("msg")).otherwise(F.col("value")).alias("value")
+        ), sent
+
+    got = vertex_centric_iteration(
+        verts.withColumn("value", F.lit(inf).cast("long")),
+        spark.createDataFrame([(0, 0)], "id long, msg long"),
+        compute,
+        10,
+    )
+    assert as_dict(got, "id", "value") == hops
+
+    def bfs(sol, ws, i):
+        new = (
+            e.join(ws, e.src == ws.id)
+            .select(F.col("dst").alias("id"))
+            .distinct()
+            .join(sol, "id", "left_anti")
+        )
+        return sol.unionByName(new.withColumn("hops", F.lit(i + 1))), new
+
+    start = Dataset(spark.createDataFrame([(0, 0)], "id long, hops int"))
+    got = start.iterate_delta(
+        Dataset(spark.createDataFrame([(0,)], "id long")), 10, bfs
+    )
+    assert as_dict(got.df, "id", "hops") == hops

@@ -11,8 +11,10 @@ plan-sharing mechanism and not result caching:
   is a different entry;
 - the excluded queries (whose build EXECUTES their own corpus-scale
   computation) are genuinely unwrapped — every invocation rebuilds;
-- a memoized plan's ACTIONS recompute from the parquet inputs: mutate
-  the file under a cached plan and the next action sees the new data.
+- a memoized plan's ACTIONS recompute from the parquet inputs: a
+  repeat action on a memo hit launches Spark jobs again, and its
+  executed plan scans the parquet files, with no in-memory or local
+  table scan standing in for remembered rows.
 """
 
 from __future__ import annotations
