@@ -389,29 +389,11 @@ for _m in _MODULES:
         _ALL[_name] = _fn
     ORACLE.update(_m.ORACLE)
 
-#: Round 13 (guide §1.2 driver-side): PySpark analyzes the logical plan
-#: eagerly per transformation, so every invocation of a registered query
-#: re-pays its full Catalyst analysis chain — measured 0.15-1.9 s of
-#: pure driver time per query, ~59 s summed over the registry at sf0.1
-#: (jobs-during-build audit: only parquet footer reads and bounded
-#: 1-row probes, no corpus work). The registry therefore serves each
-#: query's BUILT lazy DataFrame from a per-(session, corpus) plan memo
-#: (``_util.plan_memo`` — the `_VITERBI_DF_CACHE` discipline,
-#: registry-wide). The memo caches the PLAN object only: every action
-#: on it still recomputes from the parquet inputs (plus the separately
-#: documented session-lifetime memo frames some plans already
-#: reference); nothing new is persisted.
-#:
-#: EXCLUDED: queries whose build EXECUTES the query's own corpus-scale
-#: computation — memoizing those DataFrames would reuse materialized
-#: state across invocations, i.e. result caching, not plan sharing:
-#: - the iterative pipelines (driver-side loops whose localCheckpointed
-#:   state IS the converged answer);
-#: - the training loops (kmeans/logreg);
-#: - panels that eagerly materialize their own per-doc aggregate or
-#:   collect a corpus-derived vocabulary per invocation
-#:   (decontaminate_verdict_panel, wordpiece/tokenizer vocab legs,
-#:   the pHash signature checkpoint, the power-iteration pair).
+#: The registry serves each query's BUILT lazy DataFrame from
+#: ``_util.session_memo``, except the queries named here: their build
+#: executes corpus-scale work of its own (a driver loop, a training
+#: run, an eager checkpoint or collect of corpus state), so a memoized
+#: plan would hand later calls materialized state instead of a plan.
 PLAN_MEMO_EXCLUDE = frozenset(
     {
         "sssp_pipeline",
@@ -429,6 +411,10 @@ PLAN_MEMO_EXCLUDE = frozenset(
         "multimodal_phash_neardup",
         "embedding_abtt_residuals",
         "embedding_principal_direction",
+        "dedup_simhash",
+        "dedup_semantic",
+        "bipartite_projection_suppliers",
+        "dft_events",
     }
 )
 
@@ -438,12 +424,11 @@ if _unknown_excl:
         f"plan-memo exclusions not registered: {sorted(_unknown_excl)}"
     )
 
-from ._util import plan_memo as _plan_memo  # noqa: E402
+from ._util import session_memo  # noqa: E402
 
 for _name, _fn in list(_ALL.items()):
-    if _name in PLAN_MEMO_EXCLUDE or hasattr(_fn, "_plan_memo_cache"):
-        continue
-    _ALL[_name] = _plan_memo(_fn)
+    if _name not in PLAN_MEMO_EXCLUDE and not hasattr(_fn, "__wrapped__"):
+        _ALL[_name] = session_memo(_fn)
 
 _unknown = set(PRIORITY_WINDOW) - set(_ALL)
 if _unknown:

@@ -12,6 +12,8 @@ shape on both sides so the double division is bit-identical.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -50,71 +52,61 @@ def davg_sql(expr: str) -> str:
     )
 
 
-def evict_stale_session_entries(cache: dict, spark) -> None:
-    """Drop session-scoped memo entries from other (stopped) sessions.
+#: The one session memo: (applicationId, sf_dir, fn, *extra args) -> value.
+_MEMO: dict[tuple, object] = {}
 
-    The cross-query work-sharing memos are keyed ``(applicationId,
-    sf_dir, ...)`` so a new session can never read another session's
-    state — but without eviction the dict itself leaks: entries from
-    stopped sessions accumulate for the life of the Python process, and
-    any persisted DataFrames they hold keep their CacheManager entries
-    pinned for as long as that (possibly still-running) session lives.
-    Called at every memo lookup: one dict scan, no Spark jobs.
 
-    Values may be a DataFrame or a tuple/list containing DataFrames;
-    each is unpersisted on eviction (best-effort — a frame whose
-    session already stopped has no cache left to free, and unpersist
-    on a dead context raises, hence the swallow).
-    """
-    from pyspark.sql import DataFrame as _DF
+def _evict(keep_app: str | None) -> None:
+    """Drop every entry not keyed to ``keep_app`` and unpersist the
+    DataFrames it holds, bare or inside a tuple/list (best-effort: a
+    frame whose session already stopped has no cache left to free, and
+    unpersist on a dead context raises). Without it, entries of stopped
+    sessions pile up for the life of the process, and their persisted
+    frames stay pinned for as long as that session lives. One dict
+    scan, no Spark jobs."""
+    from pyspark.sql import DataFrame
 
-    app = spark.sparkContext.applicationId
-    for key in [k for k in cache if k[0] != app]:
-        val = cache.pop(key)
-        frames = val if isinstance(val, (tuple, list)) else (val,)
-        for f in frames:
-            if isinstance(f, _DF):
+    for key in [k for k in _MEMO if k[0] != keep_app]:
+        val = _MEMO.pop(key)
+        for f in val if isinstance(val, (tuple, list)) else (val,):
+            if isinstance(f, DataFrame):
                 try:
                     f.unpersist(blocking=False)
                 except Exception:
                     pass
 
 
-def plan_memo(fn):
-    """Memoize a query's BUILT DataFrame per (session, corpus).
+def session_memo(fn):
+    """Memoize ``fn(spark, sf_dir, *extra)`` per (session, corpus, args).
 
-    Plan-construction work-sharing, the ``_VITERBI_DF_CACHE`` discipline
-    generalized (round 13, guide §1.2 driver-side): PySpark resolves the
-    logical plan eagerly per transformation, so a deep query pays its
-    whole Catalyst analysis chain again on EVERY invocation — measured
-    0.7-1.9 s of pure driver time for the widest panels. The memo caches
-    the lazy DataFrame object only: every action on it still recomputes
-    from the parquet inputs (or from the separately documented
-    session-lifetime memo frames its plan already referenced — the memo
-    adds no materialization of its own and registers nothing with the
-    CacheManager).
+    What goes where: a lazily built frame that several queries share
+    stays on Spark's CacheManager plan-dedup (persist the same plan, and
+    every consumer's scan reads one cached relation). This memo holds
+    BUILT query plans (PySpark analyzes eagerly per transformation, so a
+    deep query's build repays its Catalyst chain on every call) and
+    values whose build runs jobs: probes, trained artifacts, persisted
+    or checkpointed frames. A cached plan still recomputes from its
+    inputs on every action. Two entries, ``lm_kn_bigram`` and
+    ``_principal_direction_rows``, serve a repeat call its answer.
 
-    Only apply to queries whose build is (a) deterministic per
-    (session, sf_dir) and (b) free of private eager state UNLESS that
-    state is itself a documented memo artifact (the _BPE_CACHE
-    checkpoint-chain precedent). Keyed (applicationId, sf_dir); stale
-    sessions evicted via evict_stale_session_entries.
+    Keyed by the session's applicationId, so a new session never reads
+    another's state. Every lookup drops the entries of other sessions
+    and unpersists their frames; ``session_memo.clear()`` drops all.
     """
-    import functools
-
-    cache: dict[tuple[str, str], object] = {}
 
     @functools.wraps(fn)
-    def wrapped(spark, sf_dir):
-        evict_stale_session_entries(cache, spark)
-        key = (spark.sparkContext.applicationId, sf_dir)
-        hit = cache.get(key)
-        if hit is None:
-            hit = cache[key] = fn(spark, sf_dir)
-        return hit
+    def wrapped(spark, sf_dir, *extra):
+        app = spark.sparkContext.applicationId
+        _evict(app)
+        key = (app, sf_dir, fn, *extra)
+        if key not in _MEMO:
+            _MEMO[key] = fn(spark, sf_dir, *extra)
+        return _MEMO[key]
 
-    wrapped._plan_memo_cache = cache  # introspection for tests
     return wrapped
+
+
+session_memo.clear = lambda: _evict(None)
 
 
 def twin_batch(pdfs, key, last_ts_us: int, last_eid: int):

@@ -55,7 +55,6 @@ from ..functions.graph import (
     triangles,
 )
 from ..tables import load
-from ._util import plan_memo
 
 ORACLE: dict[str, str] = {}
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -562,14 +561,13 @@ FROM lcc
 )
 
 
-@plan_memo
 def triadic_census_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-form undirected triadic census
     (clustering/undirected/TriadicCensus.java).
 
-    plan_memo: the census is a pure-lazy composition over the shared
-    persisted graph base, but its closed-form expression tree costs
-    ~0.4 s of driver-side analysis per build (guide §1.2 driver-side).
+    A pure-lazy composition over the shared persisted graph base, but
+    its closed-form expression tree costs ~0.4 s of driver-side
+    analysis per build, which the registry's session memo saves.
     """
     from ..functions.graph import triadic_census
 
@@ -835,13 +833,13 @@ FROM lcc
 )
 
 
-@plan_memo
 def triadic_census_directed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed 16-class triadic census of the social edge list
     (clustering/directed/TriadicCensus.java).
 
-    plan_memo: pure-lazy, but the 16-class mask-carrying wedge
-    expressions measured ~0.9 s of driver-side analysis per build.
+    Pure-lazy, but the 16-class mask-carrying wedge expressions measured
+    ~0.9 s of driver-side analysis per build, which the registry's
+    session memo saves.
     """
     from ..functions.graph import triadic_census_directed
 
@@ -991,16 +989,12 @@ FROM pv
 # groupBy on the supplier pair: both shuffles are keyed and the src<dst
 # canonicalization emits each pair once.
 # ---------------------------------------------------------------------------
-@plan_memo
 def bipartite_projection_suppliers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # plan_memo: ~0.9 s of build per invocation — the distinct edge
-    # set's eager localCheckpoint below plus the projection's analysis
-    # chain. The checkpointed distinct (supp, part) frame becomes a
-    # session-lifetime memo artifact under the memo (the _BPE_CACHE
-    # checkpoint-chain precedent); the projection self-join — the
-    # query's actual cost — still recomputes on every action.
+    # Not plan-memoized (PLAN_MEMO_EXCLUDE): the build runs the eager
+    # localCheckpoint below, and a memoized plan would pin those blocks
+    # with no way to rebuild them after executor loss.
     from ..functions.bipartite import BipartiteGraph
 
     # Round 12 (guide §5): the projection self-join references the

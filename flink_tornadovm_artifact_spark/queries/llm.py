@@ -31,8 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.sizing import spread_scan
 from ..tables import load
-from ._util import evict_stale_session_entries as _evict_stale_session_entries
-from ._util import plan_memo as _plan_memo
+from ._util import session_memo
 
 ORACLE: dict[str, str] = {}
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -537,33 +536,27 @@ def _emb_with_norm2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.withColumn("n2", _dot("v", "v"))
 
 
-_EMB_DIM_CACHE: dict[str, int] = {}
-
-
+@session_memo
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
     """Embedding width for the plan-time hyperplane-sign fold
     (_plane_sign(j, dim)): a one-row probe of the raw embeddings table,
-    memoized per sf_dir like _CORPUS_N_CACHE. The fixture generator
-    emits a constant width per corpus (the oracle sweep pins the
-    signatures at every SF, so a mixed-width table would surface as a
-    red oracle row, not a silent drift)."""
-    d = _EMB_DIM_CACHE.get(sf_dir)
-    if d is None:
-        row = (
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            .select(F.size("embedding").alias("d"))
-            .first()
+    run once per session and corpus. The fixture generator emits a
+    constant width per corpus (the oracle sweep pins the signatures at
+    every SF, so a mixed-width table would surface as a red oracle row,
+    not a silent drift)."""
+    row = (
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        .select(F.size("embedding").alias("d"))
+        .first()
+    )
+    if row is None:
+        # .first() returns None on an empty table and row["d"] would
+        # raise an opaque TypeError here
+        raise ValueError(
+            f"_emb_dim: embeddings table at {sf_dir!r} is empty — "
+            "cannot probe the embedding width"
         )
-        if row is None:
-            # ADVICE r12: .first() returns None on an empty table and
-            # row["d"] would raise an opaque TypeError here
-            raise ValueError(
-                f"_emb_dim: embeddings table at {sf_dir!r} is empty — "
-                "cannot probe the embedding width"
-            )
-        d = int(row["d"])
-        _EMB_DIM_CACHE[sf_dir] = d
-    return d
+    return int(row["d"])
 
 
 def _cos_pre(a: str, b: str) -> Column:
@@ -2199,38 +2192,28 @@ HAVING COUNT(*) >= {BOILERPLATE_MIN_DOCS}
 # iteration cost is independent of corpus size; the final join is one
 # shuffle on doc_id.
 # ---------------------------------------------------------------------------
-#: (session applicationId, sf_dir) -> persisted (doc_id, component)
-#: map of the verified near-dup match graph. The cluster map is the
-#: dedup pass's OUTPUT artifact: a production pipeline materializes it
-#: once and every downstream consumer (the representatives view, the
-#: datasheet, the impact panel, the release filter) reads the
-#: materialized table — this memo is that materialization's in-process
-#: analog (the _QC_W_CACHE discipline, but holding a session-bound
-#: persisted frame, hence the applicationId in the key: a new session
-#: can never see another session's frame). Without it every consumer
-#: re-pays the full LSH -> exact-verify -> CC-iteration chain.
-_CC_COMP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: The persisted (doc_id, component) map of the verified near-dup match
+#: graph, held in the session memo. The cluster map is the dedup pass's
+#: OUTPUT artifact: a production pipeline materializes it once and every
+#: downstream consumer (the representatives view, the datasheet, the
+#: impact panel, the release filter) reads the materialized table — the
+#: memo entry is that materialization's in-process analog. Without it
+#: every consumer re-pays the full LSH -> exact-verify -> CC-iteration
+#: chain.
+@session_memo
 def _verified_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _evict_stale_session_entries(_CC_COMP_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    comp = _CC_COMP_CACHE.get(key)
-    if comp is None:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        from ..functions.graph import connected_components
+    from ..functions.graph import connected_components
 
-        pairs = dedup_lsh_verified(spark, sf_dir).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        comp = (
-            connected_components(pairs, max_iterations=20)
-            .select(F.col("vertex").alias("doc_id"), "component")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _CC_COMP_CACHE[key] = comp
-    return comp
+    pairs = dedup_lsh_verified(spark, sf_dir).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    return (
+        connected_components(pairs, max_iterations=20)
+        .select(F.col("vertex").alias("doc_id"), "component")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
 def dedup_cluster_representatives(
@@ -3965,33 +3948,21 @@ def _bpe_select_batch(cands, max_m: int):
     return batch
 
 
-#: (session applicationId, sf_dir) -> (merge list, post-merge word-type
-#: DataFrame, round count). Same discipline as pipeline.py's _QC_CACHE
-#: (session-scoped key, eviction via evict_stale_session_entries): the
-#: merge table is a pure function of the corpus and the BPE_* constants,
-#: and BOTH bpe_merge_table and bpe_encode_fertility re-ran the whole
-#: training loop (per-round type-table jobs + candidate collects +
-#: localCheckpoints) before the memo. The words frame is a
-#: localCheckpoint — session-lifetime by construction; eviction keeps
-#: the dict itself from leaking across sessions (round 12, guide §5).
-_BPE_CACHE: dict[tuple[str, str], tuple[list, DataFrame, int]] = {}
-
-
+@session_memo
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """Run the merge-learning loop; returns (merge list, word-type
     DataFrame with the post-merge ``syms`` encoding, round count).
-    The corpus-sized work is the one word-frequency groupBy — round 12:
-    folded out of the shared persisted word-count frame (guide §5);
-    every round after runs on the vocabulary-sized type table and
-    applies up to BPE_BATCH_M merges in one job (batching rule above).
-    Memoized per (session, corpus) — see _BPE_CACHE."""
-    from ._util import evict_stale_session_entries
+    The corpus-sized work is the one word-frequency groupBy, folded out
+    of the shared persisted word-count frame; every round after runs on
+    the vocabulary-sized type table and applies up to BPE_BATCH_M merges
+    in one job (batching rule above).
 
-    evict_stale_session_entries(_BPE_CACHE, spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_CACHE.get(memo_key)
-    if hit is not None:
-        return hit
+    Session-memoized: the merge table is a pure function of the corpus
+    and the BPE_* constants, and both bpe_merge_table and
+    bpe_encode_fertility would otherwise re-run the whole training loop
+    (per-round type-table jobs, candidate collects, localCheckpoints).
+    The words frame is a localCheckpoint, session-lifetime by
+    construction."""
     words = (
         _word_counts_sw(spark, sf_dir)
         .filter(F.length("w") > 0)
@@ -4042,7 +4013,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
         for a, b, _ in batch:
             col = _bpe_merge_fold(col, a, b)
         words = words.withColumn("syms", col).localCheckpoint(eager=True)
-    _BPE_CACHE[memo_key] = (merges, words, rounds)
     return merges, words, rounds
 
 
@@ -4704,22 +4674,14 @@ def _semdedup_planes(n_vectors: int) -> int:
     )
 
 
-_CORPUS_N_CACHE: dict[tuple[str, str], int] = {}
-
-
+@session_memo
 def _corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Corpus size for the occupancy-control mechanisms (SemDeDup plane
     width, pHash band width): a count(*) on the RAW table parquet
     (metadata-only — parquet footers answer it with no column scan),
-    memoized per (sf_dir, table) so repeated query builds / EXPLAINs
-    trigger at most one such job per corpus (round-10 fix: the r9 form
-    counted the projected+derived plan eagerly on every build)."""
-    key = (sf_dir, table)
-    n = _CORPUS_N_CACHE.get(key)
-    if n is None:
-        n = spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
-        _CORPUS_N_CACHE[key] = n
-    return n
+    session-memoized per (corpus, table) so repeated query builds and
+    EXPLAINs trigger at most one such job per corpus."""
+    return spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
 
 
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4869,25 +4831,20 @@ def _kn_seen_prob_sql(
     )
 
 
-#: (session applicationId, sf_dir) -> the persisted corpus KN model
-#: frame (w1, w2, pair_count, p_kn) — bigram-TYPE-bounded, never
-#: corpus-sized. Round 13 (guide §5, the _decon_sset idiom): both
+#: The session memo holds the persisted corpus KN model frame (w1, w2,
+#: pair_count, p_kn) — bigram-TYPE-bounded, never corpus-sized. Both
 #: lm_kn_bigram and lm_perplexity_bucket (which embeds the model as its
-#: scoring join's build side) re-ran the full corpus bigram explode +
-#: three marginal aggregations per invocation; one persisted frame now
-#: serves both. perplexity_decontaminate is NOT a consumer — its model
-#: trains on the benchmark split, a different corpus.
-_KN_MODEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: scoring join's build side) would otherwise re-run the full corpus
+#: bigram explode + three marginal aggregations per call; one persisted
+#: frame serves both (sharing a persisted bigram-count table instead
+#: and building the model per query measured 3.1 -> 5.1 s for the
+#: pair). A repeat call of lm_kn_bigram is served its answer.
+#: perplexity_decontaminate is NOT a consumer — its model trains on the
+#: benchmark split, a different corpus.
+@session_memo
 def lm_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
-    _evict_stale_session_entries(_KN_MODEL_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KN_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load(spark, sf_dir, "documents").select("text")
     bc, ctx, pre, types = _kn_model_tables(docs)
     model = (
@@ -4903,7 +4860,6 @@ def lm_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _KN_MODEL_CACHE[key] = model
     return model
 
 
@@ -5350,27 +5306,21 @@ POWER_ITER_K = 60
 _POWER_RENORM_AT = (20, 40)  # renormalize after these steps (underflow guard)
 
 
-#: (session applicationId, sf_dir) -> the principal-direction rows
-#: (plain Python floats, no RDDs — the _QC_CACHE trained-artifact
-#: discipline). Round 13 ("Not yet optimized" item 1): the K-step
-#: driver power iteration re-ran per invocation, and
-#: embedding_abtt_residuals additionally paid a createDataFrame +
-#: collect round-trip just to read the vector back.
-_PD_CACHE: dict[tuple[str, str], list[tuple]] = {}
-
-
+@session_memo
 def _principal_direction_rows(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    """(dim, loading, lambda1, var_share) rows off the memoized
-    covariance-moment table; memoized per (session, corpus)."""
+    """(dim, loading, lambda1, var_share) rows off the covariance-moment
+    table, as plain Python floats.
+
+    Session-memoized, so a repeat call is served its answer: without
+    the memo the K-step driver power iteration re-runs per call, and
+    embedding_abtt_residuals pays a createDataFrame + collect round-trip
+    to read the vector back (embedding_principal_direction +
+    embedding_abtt_residuals measured 1.5 -> 4.3 s at sf0.1 with the
+    memo cleared)."""
     import math as _math
 
     import numpy as _np
 
-    _evict_stale_session_entries(_PD_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PD_CACHE.get(key)
-    if hit is not None:
-        return hit
     ut = embedding_covariance_panel(spark, sf_dir).select("i", "j", "cov")
     rows = ut.collect()  # d(d+1)/2 rows — dimension-bounded by design
     d = max(r.i for r in rows)
@@ -5390,11 +5340,9 @@ def _principal_direction_rows(spark: SparkSession, sf_dir: str) -> list[tuple]:
     sgn = 1.0 if float(x.sum()) >= 0 else -1.0
     trace = float(C.trace())
     share = lam / trace
-    out = [
+    return [
         (i + 1, sgn * float(x[i]) / nrm, lam, share) for i in range(d)
     ]
-    _PD_CACHE[key] = out
-    return out
 
 
 def embedding_principal_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5481,10 +5429,8 @@ FROM x{POWER_ITER_K} x, nrm, lam, tr
 # corpus-sized ever collected or shuffled.
 # ---------------------------------------------------------------------------
 def embedding_abtt_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round 13: read the memoized direction rows directly — the r8-r12
-    # shape collect()ed the principal-direction DataFrame, paying a
-    # createDataFrame + collect round-trip per invocation for a vector
-    # the driver already holds
+    # read the memoized direction rows directly rather than collecting
+    # the principal-direction DataFrame: the driver already holds them
     pd_rows = sorted(
         _principal_direction_rows(spark, sf_dir), key=lambda r: r[0]
     )
@@ -6378,23 +6324,13 @@ _register(tokenizer_roundtrip_qa, _roundtrip_oracle())
 # vocab collect bounded at <= 1/ratio entries, DP = one expression
 # fold per word TYPE carrying the best-score/piece-count arrays.
 # ---------------------------------------------------------------------------
-#: Round-12 batch 9: unigram_viterbi_panel's vocab is TRAINED (a
-#: substring-frequency aggregate + driver collect) on every invocation;
-#: the (probs, unk_p) pair is corpus-determined, so it memoizes under
-#: the same session-scoped discipline as _BPE_CACHE / _QC_W_CACHE
-#: ((applicationId, sf_dir) key, stale-session eviction). Plain Python
-#: floats — no Spark resources to unpersist on eviction.
-_UNIGRAM_VOCAB_CACHE: dict[tuple[str, str], tuple[dict, float]] = {}
-
-
+#: unigram_viterbi_panel's vocab is TRAINED (a substring-frequency
+#: aggregate + driver collect); the (probs, unk_p) pair is
+#: corpus-determined, so it is session-memoized. Plain Python floats.
+@session_memo
 def _unigram_vocab(
     spark: SparkSession, sf_dir: str
 ) -> tuple[dict, float]:
-    _evict_stale_session_entries(_UNIGRAM_VOCAB_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _UNIGRAM_VOCAB_CACHE.get(key)
-    if hit is not None:
-        return hit
     occ_sw = _word_counts_sw(spark, sf_dir)
     occ = occ_sw.groupBy("w").agg(F.sum("c").alias("c"))
     subs = occ.select(
@@ -6415,34 +6351,15 @@ def _unigram_vocab(
         for r in rows
         if r.freq >= WORDPIECE_VOCAB_RATIO * tot
     }
-    out = (probs, 1.0 / tot)
-    _UNIGRAM_VOCAB_CACHE[key] = out
-    return out
-
-
-#: (session applicationId, sf_dir) -> the BUILT (lazy, un-persisted)
-#: viterbi-panel DataFrame. Round 13: the DP fold is a literal
-#: create_map over the whole trained vocab times a 4-way unrolled
-#: update — a ~10^4-node expression tree whose py4j construction +
-#: Catalyst analysis measured 1.0-1.7 s of DRIVER time per invocation
-#: (event-log gap, zero stage time). The memo caches the PLAN only:
-#: nothing is persisted, every action on it re-executes the full
-#: computation from the shared word-count frame — this is
-#: plan-construction work-sharing, not result caching.
-_VITERBI_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return probs, 1.0 / tot
 
 
 def unigram_viterbi_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math as _math
-
-    _evict_stale_session_entries(_VITERBI_DF_CACHE, spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _VITERBI_DF_CACHE.get(memo_key)
-    if hit is not None:
-        return hit
-
-    # round 12: the shared persisted word-count frame (guide §5); the
-    # trained vocab memoizes per (session, corpus) — see _unigram_vocab
+    # The DP fold below is a ~10^4-node expression tree whose build and
+    # analysis measured 1.0-1.7 s of driver time per call; the registry's
+    # session memo serves the built plan. It reads the shared persisted
+    # word-count frame; the trained vocab is session-memoized
+    # (_unigram_vocab).
     occ_sw = _word_counts_sw(spark, sf_dir)
     occ = occ_sw.groupBy("w").agg(F.sum("c").alias("c"))
     probs, unk_p = _unigram_vocab(spark, sf_dir)
@@ -6486,7 +6403,7 @@ def unigram_viterbi_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at(dp.getField("n"), -1).alias("pieces"),
         F.log(F.element_at(dp.getField("s"), -1)).alias("logprob"),
     )
-    out = (
+    return (
         occ_sw.join(seg, "w")
         .groupBy("source")
         .agg(
@@ -6502,8 +6419,6 @@ def unigram_viterbi_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    _VITERBI_DF_CACHE[memo_key] = out
-    return out
 
 
 def _viterbi_oracle() -> str:
@@ -7232,16 +7147,12 @@ FROM n
 # fixed query benchmark, not all vectors), so the panel stays
 # broadcast-joins + keyed counts; never all-pairs.
 # ---------------------------------------------------------------------------
-@_plan_memo
 def ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NB (round 12): a localCheckpoint on the 4x-referenced exact table
-    # was tried and measured dead-neutral (ReuseExchange already shares
-    # the brute-force subtree's exchanges) — not kept.
-    # plan_memo (round 13): the panel embeds all three similarity
-    # subplans — ~1.9 s of driver-side analysis per build, the
-    # registry's deepest lazy plan; every action still recomputes the
-    # three legs from parquet (+ the documented trained-artifact memos
-    # the similarity family already holds).
+    # The panel embeds all three similarity subplans (~1.9 s of
+    # driver-side analysis per build), which the registry's session memo
+    # saves. A localCheckpoint on the 4x-referenced exact table measured
+    # neutral (ReuseExchange already shares the brute-force subtree's
+    # exchanges), so the plan stays lazy.
     exact = similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
     n_ex = exact.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_exact")
@@ -8458,8 +8369,9 @@ FROM documents d LEFT JOIN coll c ON d.doc_id = c.doc_id
 #
 # The occ frame is persisted (MEMORY_AND_DISK): three registered
 # consumers (spans / removal / exposure) share it within a session via
-# CacheManager plan-dedup — the _corpus_count memo discipline, with the
-# cold cost visible in first-execution spreads (SCALE.md row).
+# CacheManager plan-dedup (the lazily-shared-frame rule in
+# _util.session_memo), with the cold cost visible in first-execution
+# spreads (SCALE.md row).
 # ---------------------------------------------------------------------------
 EXSUB_K = 8  # tokens per k-gram fingerprint
 EXSUB_MIN_TOKENS = 20  # minimum shared-span length that counts as a match

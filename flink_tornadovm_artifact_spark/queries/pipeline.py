@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions.sizing import spread_scan
 from ..tables import load
+from ._util import session_memo
 from .llm import lm_kn_bigram
 
 ORACLE: dict[str, str] = {}
@@ -2055,48 +2056,35 @@ def _qc_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (session applicationId, sf_dir) -> (trained weights, the persisted
-#: feature frame they were trained on). Same discipline as llm.py's
-#: _CC_COMP_CACHE (session-scoped key + eviction-with-unpersist via
-#: _util.evict_stale_session_entries): the weight vector is a pure
-#: function of the (corpus, QC_* constants) pair, and the calibration
-#: panel rebuilds the scored frame — without the memo every panel
-#: build re-pays the QC_ITERS distributed GD passes (measured: the
-#: panel dropped from the registry's most expensive query to roughly
-#: the classifier's single-scan scoring cost once the second training
-#: run went away). Holding the frame IN the memo (rather than
-#: re-persisting per invocation) is what makes eviction able to
-#: unpersist it — ADVICE r11.
-_QC_CACHE: dict[tuple[str, str], tuple[tuple[float, ...], DataFrame]] = {}
-
-
+#: The session memo holds (trained weights, the persisted feature frame
+#: they were trained on): the weight vector is a pure function of the
+#: (corpus, QC_* constants) pair, and the calibration panel rebuilds the
+#: scored frame — without the memo every panel build re-pays the
+#: QC_ITERS distributed GD passes (measured: the panel dropped from the
+#: registry's most expensive query to roughly the classifier's
+#: single-scan scoring cost once the second training run went away).
+#: Holding the frame IN the memo entry (rather than re-persisting per
+#: call) is what lets eviction unpersist it.
+@session_memo
 def _qc_trained(
     spark: SparkSession, sf_dir: str
 ) -> tuple[tuple[float, ...], DataFrame]:
-    """Memoized (weights, persisted feature frame) for this session."""
+    """(weights, persisted feature frame) for this session and corpus."""
     from pyspark import StorageLevel
 
     from ..functions.logreg import train
-    from ._util import evict_stale_session_entries
 
-    evict_stale_session_entries(_QC_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QC_CACHE.get(key)
-    if hit is None:
-        # persisted across train + score: train() persists only its own
-        # (features, label) projection and unpersists it before the
-        # scoring pass runs, which would otherwise re-execute the full
-        # feature build (corpus scan + the 1-row z-score moments
-        # aggregate); the calibration panel's rebuild also reuses this
-        # frame via CacheManager plan-dedup
-        data = _qc_data(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-        w = tuple(
-            float(x)
-            for x in train(data, dim=QC_DIM, iterations=QC_ITERS, lr=QC_LR)
-        )
-        hit = (w, data)
-        _QC_CACHE[key] = hit
-    return hit
+    # persisted across train + score: train() persists only its own
+    # (features, label) projection and unpersists it before the scoring
+    # pass runs, which would otherwise re-execute the full feature build
+    # (corpus scan + the 1-row z-score moments aggregate); the
+    # calibration panel's rebuild also reuses this frame via
+    # CacheManager plan-dedup
+    data = _qc_data(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    w = tuple(
+        float(x) for x in train(data, dim=QC_DIM, iterations=QC_ITERS, lr=QC_LR)
+    )
+    return w, data
 
 
 def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,4 @@
-"""The session-lifetime memo inventory, turned into a failing test
-(VERDICT r11 Next 6 — the k_core leak-test discipline, generalized).
+"""The session-lifetime memo inventory, turned into a failing test.
 
 The engine deliberately keeps a small set of persisted frames alive for
 the session × corpus lifetime — cross-query work-sharing memos whose
@@ -37,46 +36,47 @@ MEMO_INVENTORY = {
     "decontaminate": 6,
     # winnowing per-doc fingerprint frame (panel + explode consumer)
     "winnowing": 1,
-    # quality classifier: the z-scored feature frame held in _QC_CACHE
-    # (training passes + scoring + calibration rebuild share it); the
-    # logreg train loop's own projection is unpersisted before return
+    # quality classifier: the z-scored feature frame held by the
+    # _qc_trained session-memo entry (training passes + scoring +
+    # calibration rebuild share it); the logreg train loop's own
+    # projection is unpersisted before return
     "quality_classifier": 2,
-    # the verified-cluster map (_CC_COMP_CACHE) shared by
-    # representatives / impact / datasheet_v3, + the component-edges
-    # base it is built from
+    # the verified-cluster map (the _verified_components session-memo
+    # entry) shared by representatives / impact / datasheet_v3, + the
+    # component-edges base it is built from
     "cluster_map": 4,
     # exact-substring family: the shared (doc_id, pos, h) occ frame
     "exact_substring": 1,
     # PMI bigram counts (persist=True leg)
     "pmi": 1,
-    # round 12: the shared (source, w, c) word-count frame consumed by
+    # the shared (source, w, c) word-count frame consumed by
     # the tokenizer/sketch family (wordpiece/viterbi/roundtrip, BPE,
     # count-min, HLL)
     "word_counts": 1,
-    # round 12: the (doc_id, mh0..mh7) MinHash signature frame shared
+    # the (doc_id, mh0..mh7) MinHash signature frame shared
     # by dedup_minhash_lsh / lsh_verified / estimate-error panel /
     # stream_neardup_ingest batch twin
     "minhash_sig": 1,
-    # round 12: the per-doc datasheet signal frame shared by
+    # the per-doc datasheet signal frame shared by
     # corpus_datasheet_v2/v3 (copy counts fold out of its h column)
     "datasheet_per_doc": 1,
-    # round 12: the HLL union matrix's per-source register-array frame
+    # the HLL union matrix's per-source register-array frame
     # (three references inside the one query; plan-deduped across
     # invocations)
     "hll_register_arrays": 1,
-    # round 12: the BPE train memo (_BPE_CACHE) — the words frame is a
-    # localCheckpoint chain (initial + one per merge round, bounded by
-    # BPE_N_MERGES but ~2 on real data); the memo pins ONE chain per
-    # (session, corpus) where the un-memoized loop re-checkpointed per
-    # consumer invocation
+    # the BPE trainer (the _bpe_train session-memo entry) — the words
+    # frame is a localCheckpoint chain (initial + one per merge round,
+    # bounded by BPE_N_MERGES but ~2 on real data); the memo pins ONE
+    # chain per (session, corpus) where the un-memoized loop
+    # re-checkpointed per consumer invocation
     "bpe": 4,
-    # round 12 (opt batch 6): the (i, j, s, n, si) covariance-moment
+    # the (i, j, s, n, si) covariance-moment
     # table — d(d+1)/2 rows — shared by embedding_covariance_panel /
     # embedding_principal_direction / embedding_abtt_residuals
     "cov_stats": 1,
-    # round 13: the corpus KN model frame (w1, w2, pair_count, p_kn) —
-    # bigram-type-bounded — shared by lm_kn_bigram and
-    # lm_perplexity_bucket (which embeds it as the scoring join's
+    # the corpus KN model frame (w1, w2, pair_count, p_kn) held by the
+    # lm_kn_bigram session-memo entry — bigram-type-bounded — shared
+    # with lm_perplexity_bucket (which embeds it as the scoring join's
     # build side)
     "kn_corpus_model": 1,
 }

@@ -25,9 +25,9 @@ checks Spark == DuckDB; these check the operators mean what they claim):
   repetition), and the schedule's telescoping identities (per-source
   epoch rows sum back to the budget row; marginal value opens at 1.0
   and never increases — the diminishing-returns shape the paper fits).
-- evict_stale_session_entries: entries keyed to another (stopped)
-  session's applicationId are dropped and their frames unpersisted;
-  the live session's entries survive.
+- session_memo: entries keyed to another (stopped) session's
+  applicationId are dropped on lookup and their frames unpersisted;
+  the live session's entries survive; clear() drops them all.
 """
 
 from __future__ import annotations
@@ -490,24 +490,30 @@ def test_mixture_epoch_schedule_telescopes(spark):
 
 
 # ---------------------------------------------------------------------------
-# evict_stale_session_entries
+# session_memo eviction
 # ---------------------------------------------------------------------------
-def test_evict_stale_session_entries(spark):
-    from flink_tornadovm_artifact_spark.queries._util import (
-        evict_stale_session_entries,
-    )
+def test_session_memo_evicts_stale_sessions(spark):
+    from flink_tornadovm_artifact_spark.queries._util import _MEMO, session_memo
 
+    def frame(spark, sf_dir):
+        return spark.range(3).persist()
+
+    memo_frame = session_memo(frame)
     app = spark.sparkContext.applicationId
-    live = spark.range(3).persist()
+    live = memo_frame(spark, "sf")
+    assert memo_frame(spark, "sf") is live  # a hit, no rebuild
     stale = spark.range(4).persist()
     stale.count()
     assert stale.storageLevel.useMemory
-    cache = {
-        (app, "sf"): live,
-        ("application_dead_0000", "sf"): (("w",), stale),
-    }
-    evict_stale_session_entries(cache, spark)
-    assert list(cache) == [(app, "sf")]
-    assert cache[(app, "sf")] is live
+    stale_key = ("application_dead_0000", "sf", frame)
+    _MEMO[stale_key] = (("w",), stale)
+    memo_frame(spark, "sf")
+    assert stale_key not in _MEMO
+    assert _MEMO[(app, "sf", frame)] is live
     assert stale.storageLevel.useMemory is False  # unpersisted on eviction
-    live.unpersist(blocking=True)
+    # clear() drops the live session's entries too, frames unpersisted
+    live.count()
+    assert live.storageLevel.useMemory
+    session_memo.clear()
+    assert not _MEMO
+    assert live.storageLevel.useMemory is False

@@ -702,24 +702,24 @@ def test_retrieval_eval_is_consistent_with_topk(spark):
 
 
 def test_unigram_vocab_memo_session_scoped(spark):
-    """Round-12 batch 9: the trained unigram vocab memoizes per
-    (applicationId, sf_dir) — one substring-frequency aggregate +
-    collect per session per corpus, the _BPE_CACHE discipline."""
-    from flink_tornadovm_artifact_spark.queries.llm import (
-        _UNIGRAM_VOCAB_CACHE,
-        _unigram_vocab,
-    )
+    """The trained unigram vocab is session-memoized per (applicationId,
+    sf_dir) — one substring-frequency aggregate + collect per session
+    per corpus."""
+    from flink_tornadovm_artifact_spark.queries._util import _MEMO
+    from flink_tornadovm_artifact_spark.queries.llm import _unigram_vocab
 
     app = spark.sparkContext.applicationId
-    _UNIGRAM_VOCAB_CACHE.pop((app, SF_SMOKE), None)
+    key = (app, SF_SMOKE, _unigram_vocab.__wrapped__)
+    _MEMO.pop(key, None)
     probs, unk_p = _unigram_vocab(spark, SF_SMOKE)
     assert probs and 0.0 < unk_p < 1.0
-    assert (app, SF_SMOKE) in _UNIGRAM_VOCAB_CACHE
+    assert key in _MEMO
     # memo hit: a poisoned entry is served back untouched
-    _UNIGRAM_VOCAB_CACHE[(app, SF_SMOKE)] = ({"x": 1.0}, 0.5)
+    _MEMO[key] = ({"x": 1.0}, 0.5)
     assert _unigram_vocab(spark, SF_SMOKE) == ({"x": 1.0}, 0.5)
     # stale-session eviction: a foreign-app key is dropped on lookup
-    _UNIGRAM_VOCAB_CACHE[("dead-app", SF_SMOKE)] = ({}, 0.1)
+    dead = ("dead-app",) + key[1:]
+    _MEMO[dead] = ({}, 0.1)
     _unigram_vocab(spark, SF_SMOKE)
-    assert ("dead-app", SF_SMOKE) not in _UNIGRAM_VOCAB_CACHE
-    _UNIGRAM_VOCAB_CACHE.pop((app, SF_SMOKE), None)
+    assert dead not in _MEMO
+    _MEMO.pop(key, None)

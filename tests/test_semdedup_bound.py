@@ -104,20 +104,19 @@ def test_plane_sign_literal_fold_matches(spark):
 
 def test_emb_dim_probe(spark):
     """_emb_dim reads the fixture's constant embedding width and
-    memoizes it (one probe job per sf_dir)."""
-    from flink_tornadovm_artifact_spark.queries.llm import (
-        _EMB_DIM_CACHE,
-        _emb_dim,
-    )
+    memoizes it (one probe job per session and sf_dir)."""
+    from flink_tornadovm_artifact_spark.queries._util import _MEMO
+    from flink_tornadovm_artifact_spark.queries.llm import _emb_dim
 
-    _EMB_DIM_CACHE.pop(SF001, None)
+    key = (spark.sparkContext.applicationId, SF001, _emb_dim.__wrapped__)
+    _MEMO.pop(key, None)
     d = _emb_dim(spark, SF001)
     assert d == 64
-    assert _EMB_DIM_CACHE[SF001] == 64
-    # memo hit: no re-read (poison the cache and observe it is served)
-    _EMB_DIM_CACHE[SF001] = 12345
+    assert _MEMO[key] == 64
+    # memo hit: no re-read (poison the entry and observe it is served)
+    _MEMO[key] = 12345
     assert _emb_dim(spark, SF001) == 12345
-    _EMB_DIM_CACHE[SF001] = d
+    _MEMO[key] = d
 
 
 def test_widened_signature_is_prefix_extension(spark):
