@@ -59,7 +59,7 @@ def iterate(
     iteration's empty workset; without it the loop runs a fixed count.
     Returns the final checkpointed state and the last observed count,
     which is nonzero only when the loop stopped at ``max_steps`` short of
-    its fixpoint.
+    its fixpoint. Raises ``ValueError`` when ``max_steps`` < 1.
 
     A ``step`` may run several relaxations under one checkpoint. For the
     min-merge delta iterations (sssp, connected components) that is
@@ -69,6 +69,8 @@ def iterate(
     un-checkpointed intermediate is read twice by the next relaxation
     (workset and merge side), so at three it would appear four times in
     the plan, doubling per level."""
+    if max_steps < 1:
+        raise ValueError(f"iterate needs max_steps >= 1, got {max_steps}")
     state, n = checkpoint_counting(state, changed)
     for i in range(max_steps):
         if n == 0:

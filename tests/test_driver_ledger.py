@@ -1,14 +1,10 @@
-"""Self-enforcing window-rotation policy (round-6 guard).
+"""The driver-coverage ledger (DRIVER_CHECKED.json) and the driver window
+derived from it.
 
-Round 5's priority window was byte-identical to round 4's, so the driver
-re-checked the same 50 queries while 20 registered queries had never had
-a driver row — the documented rotation policy in queries/__init__.py was
-not executed and nothing failed. These tests make that failure mode a
-red test, the same move that made zero-row passes (vacuity guard) and
-driver-unsortable schemas (schema guard) impossible to reintroduce.
-
-The ledger (DRIVER_CHECKED.json) is regenerated from CORRECTNESS_r*.json
-by tools/update_driver_ledger.py at the start of each round.
+The verification driver oracle-checks only the first 50 entries of
+``__spark_entry__.queries()``, which are the ledger's ``window``. The
+ledger is regenerated from CORRECTNESS_r*.json and a plan-fingerprint
+pass by tools/update_driver_ledger.py at the start of each round.
 """
 
 from __future__ import annotations
@@ -17,17 +13,16 @@ import glob
 import json
 import os
 import re
+import sys
 
 import pytest
 
-from flink_tornadovm_artifact_spark.queries import (
-    ORACLE,
-    PRIORITY_WINDOW,
-    QUERIES,
-    WINDOW_KEEP_FRESH,
-)
+from flink_tornadovm_artifact_spark.queries import ORACLE, QUERIES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+from tools.update_driver_ledger import driver_window  # noqa: E402
+
 LEDGER_PATH = os.path.join(REPO, "DRIVER_CHECKED.json")
 
 
@@ -42,7 +37,7 @@ def ledger():
 
 def test_ledger_is_fresh(ledger):
     """CORRECTNESS_r*.json rounds must be folded into the ledger —
-    otherwise the rotation guards below reason from stale coverage. The
+    otherwise the window is derived from stale coverage. The
     single newest file may postdate the ledger (the driver writes it at
     round END, after the ledger was rebuilt at round start), so exactly
     one round of lag is tolerated; two is a skipped update."""
@@ -57,94 +52,32 @@ def test_ledger_is_fresh(ledger):
     )
 
 
-def test_never_checked_queries_are_scheduled(ledger):
-    """If an oracle-backed query registered before the current round has
-    never had a driver row, it must be IN the window — unless the window
-    has no rotatable slot (no entry green in both of the two most recent
-    rounds). Red on the round-5 window (20 unscheduled never-checked
-    queries vs 49 twice-green incumbents); green after the round-6
-    rotation."""
-    current = ledger["current_round"]
-    green = ledger["green"]
-    last_two = ledger["rounds"][-2:]
-    rotatable = [
-        w for w in PRIORITY_WINDOW if set(last_two) <= set(green.get(w, []))
-    ]
-    never = [
-        q
-        for q in QUERIES
-        if q in ORACLE
-        and not ledger["checked"].get(q)
-        and ledger["registered_asof"].get(q, current) < current
-    ]
-    unscheduled = [q for q in never if q not in PRIORITY_WINDOW]
-    assert not (unscheduled and rotatable), (
-        f"{len(unscheduled)} never-driver-checked queries are not in the "
-        f"window while {len(rotatable)} window slots are held by entries "
-        f"driver-green in both of rounds {last_two}: {sorted(unscheduled)}. "
-        "Execute the rotation policy in queries/__init__.py."
-    )
-
-
-def test_window_actually_rotates(ledger):
-    """The current window must not be byte-identical to a PREVIOUS
-    round's recorded window while twice-green incumbents occupy slots —
-    the exact round-5 failure (window frozen, driver re-verifying known
-    answers). Window snapshots accumulate in the ledger from round 6 on."""
-    current = ledger["current_round"]
-    green = ledger["green"]
-    last_two = ledger["rounds"][-2:]
-    rotatable = [
-        w for w in PRIORITY_WINDOW if set(last_two) <= set(green.get(w, []))
-    ]
-    for rnd, window in ledger["windows"].items():
-        if int(rnd) >= current:
-            continue
-        assert not (list(PRIORITY_WINDOW) == window and rotatable), (
-            f"PRIORITY_WINDOW is byte-identical to round {rnd}'s window "
-            f"while {len(rotatable)} entries are twice-green — rotate."
-        )
-
-
-def test_stale_queries_rotate_in(ledger):
-    """Round-7 guard (extends the never-checked rule to AGE): a window
-    slot may not be held by an entry whose driver row is ≤2 rounds old
-    while an oracle-backed query whose last row is ≥4 rounds stale
-    waits outside the window. Entries whose PLAN changed this round are
-    exempt via WINDOW_KEEP_FRESH (rule 1: changed queries must be
-    re-verified even if recently green) — the dict doubles as the
-    audit trail of why each fresh entry holds a slot. Red on the
-    round-6 window (50 fresh incumbents vs the r1-r3 cohort waiting);
-    green after the round-7 staleness rotation."""
-    current = ledger["current_round"]
-    green = ledger["green"]
-    last = {
-        q: max(green.get(q, [0])) for q in QUERIES if q in ORACLE
+def test_driver_window_ranks_unverified_stalest_first():
+    """Changed and never-verified queries rank ahead of verified ones,
+    stalest first, and the window stops at 50."""
+    names = [f"q{i:03d}" for i in range(70)]
+    fingerprint = {q: f"fp-{q}" for q in names}
+    green = {q: [1 + i % 5] for i, q in enumerate(names)}
+    green_fp = dict(fingerprint)
+    green_fp["q010"] = "stale"  # plan changed since it went green (round 1)
+    green_fp["q011"] = "stale"  # round 2
+    del green_fp["q002"]  # green in round 3, no recorded fingerprint
+    del green["q020"], green_fp["q020"]  # never green
+    ledger = {
+        "oracle_backed": names,
+        "green": green,
+        "fingerprint": fingerprint,
+        "green_fingerprint": green_fp,
     }
-    waiting_stale = [
-        q
-        for q, r in last.items()
-        if r and current - r >= 4 and q not in PRIORITY_WINDOW
-    ]
-    fresh_incumbents = [
-        w
-        for w in PRIORITY_WINDOW
-        if current - max(green.get(w, [0])) <= 2 and w not in WINDOW_KEEP_FRESH
-    ]
-    assert not (waiting_stale and fresh_incumbents), (
-        f"{len(waiting_stale)} queries ≥4 rounds stale wait outside the "
-        f"window while {len(fresh_incumbents)} slots are held by ≤2-round-"
-        f"old green entries not in WINDOW_KEEP_FRESH: "
-        f"{sorted(fresh_incumbents)}. Rotate the stalest in."
-    )
+    window = driver_window(ledger)
+    assert len(window) == 50
+    assert window[:4] == ["q020", "q010", "q011", "q002"]
+    verified = [q for q in names if q not in window[:4]]
+    assert window[4:] == sorted(verified, key=lambda q: (green[q], q))[:46]
 
 
-def test_keep_fresh_entries_are_in_window():
-    """WINDOW_KEEP_FRESH lists plan-changed entries held per rule 1 —
-    each must actually be in the window (else the exemption is dead
-    weight that silently widens next round)."""
-    missing = sorted(set(WINDOW_KEEP_FRESH) - set(PRIORITY_WINDOW))
-    assert not missing, f"keep-fresh entries not in window: {missing}"
+def test_stored_window_is_derived(ledger):
+    assert ledger["window"] == driver_window(ledger)
 
 
 def test_ledger_registry_names_are_live(ledger):
@@ -153,14 +86,17 @@ def test_ledger_registry_names_are_live(ledger):
     renamed between registration and its first driver row left a
     phantom `dedup_bloom_ingest` row in round 10 (232 ledger rows vs
     231 live queries) that nothing could catch; the regenerator now
-    prunes dead names and this assertion makes any future slip red."""
-    ledger_names = set(ledger["registered_asof"])
+    prunes dead names and this assertion makes any future slip red.
+    The ``fingerprint`` map must cover the same names, or the window is
+    ranked over a stale registry."""
     live = set(QUERIES)
-    assert ledger_names == live, (
-        f"phantom ledger rows: {sorted(ledger_names - live)}; "
-        f"unregistered live queries: {sorted(live - ledger_names)} — "
-        "run `python tools/update_driver_ledger.py`"
-    )
+    for key in ("registered_asof", "fingerprint"):
+        ledger_names = set(ledger[key])
+        assert ledger_names == live, (
+            f"{key}: phantom ledger rows: {sorted(ledger_names - live)}; "
+            f"unregistered live queries: {sorted(live - ledger_names)} — "
+            "run `python tools/update_driver_ledger.py`"
+        )
 
 
 def test_rows_only_exemption_is_exact(ledger):

@@ -415,3 +415,28 @@ def test_delta_loops_exit_without_an_extra_job(spark, monkeypatch):
         Dataset(spark.createDataFrame([(0,)], "id long")), 10, bfs
     )
     assert as_dict(got.df, "id", "hops") == hops
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda g, e: g.connected_components(e, max_iterations=0),
+        lambda g, e: g.sssp(e.withColumn("weight", F.lit(1)), 0, max_iterations=0),
+        lambda g, e: g.pagerank(e, iterations=0),
+        lambda g, e: g.label_propagation(e, iterations=0),
+        lambda g, e: g.k_core(e, k=1, max_iterations=0),
+        lambda g, e: g.community_detection(e, iterations=0),
+    ],
+    ids=[
+        "connected_components", "sssp", "pagerank",
+        "label_propagation", "k_core", "community_detection",
+    ],
+)
+def test_superstep_loops_reject_zero_steps(spark, call):
+    """A loop asked for no supersteps raises instead of returning its
+    unpropagated initial state."""
+    from flink_tornadovm_artifact_spark.functions import graph
+
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3), (3, 0)], "src long, dst long")
+    with pytest.raises(ValueError, match="max_steps"):
+        call(graph, e)

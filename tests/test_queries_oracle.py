@@ -40,14 +40,19 @@ def test_rows_only_queries_run(name, spark):
 
 
 def test_priority_window_is_first_50_with_oracles():
-    """The driver oracle-checks only the first 50 registry entries; pin
-    that the window is exactly PRIORITY_WINDOW and fully oracle-backed
-    (round-1 regression: module order silently dropped 30 queries)."""
-    from flink_tornadovm_artifact_spark.queries import PRIORITY_WINDOW
+    """The driver oracle-checks only the first 50 entries of
+    ``queries()``; pin that they are the ledger's derived window and
+    fully oracle-backed (round-1 regression: module order silently
+    dropped 30 queries)."""
+    import json
 
-    names = list(QUERIES)
-    assert len(PRIORITY_WINDOW) == 50
-    assert names[:50] == list(PRIORITY_WINDOW)
+    import __spark_entry__ as e
+
+    with open(e._LEDGER) as f:
+        window = json.load(f)["window"]
+    names = list(e.queries())
+    assert len(window) == 50
+    assert names[:50] == window
     assert [n for n in names[:50] if n not in ORACLE] == []
 
 

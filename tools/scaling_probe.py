@@ -78,7 +78,7 @@ SFS = ["0.001", "0.01", "0.1"]
 
 
 def main() -> None:
-    from flink_tornadovm_artifact_spark.queries import _ALL
+    from flink_tornadovm_artifact_spark.queries import QUERIES
     from flink_tornadovm_artifact_spark.session import get_spark
 
     names = sys.argv[1:] or HEAVY
@@ -87,7 +87,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     for name in names:
-        fn = _ALL[name]
+        fn = QUERIES[name]
         times = []
         for sf in SFS:
             sf_dir = os.path.join(base, f"sf{sf}")
