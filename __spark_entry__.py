@@ -40,6 +40,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted for non-SQL-expressible
-    ops, which get the driver's rows-only check)."""
+    """DuckDB-equivalent SQL per query; every query has one."""
     return dict(ORACLE)

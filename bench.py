@@ -317,6 +317,92 @@ BASELINE_20 = [
 ]
 
 
+#: Sub-second queries take each interleaved rep as the best of
+#: MICRO_REPS back-to-back executions (see ``time_queries``).
+MICRO_REPS, MICRO_CUTOFF_S = 3, 1.0
+
+
+def time_queries(spark, queries, names, sf_dir, reps, label):
+    """Time ``queries[name](spark, sf_dir)`` on the noop sink for each
+    name: {name: {"best", "median", "spread"}} in seconds over ``reps``.
+
+    Each query is first warmed at the smallest sf (whole-stage codegen +
+    JVM JIT), so the timings measure steady-state execution, not
+    first-compile cost — the same averaged-over-repeats protocol as the
+    reference (Evaluation/Speedups.java calculateAVG over repeated job
+    runs).
+
+    Best-of-``reps`` per query: the box is shared, and a single run can
+    catch a CPU-contention spike; min is the standard noise-robust
+    estimator for cold-cache-free repeated runs. Reps are INTERLEAVED
+    (full pass over all queries per rep) so one query's reps are
+    minutes apart — a transient load burst can then inflate at most one
+    rep of each query, not all of them. SUB-SECOND queries additionally
+    take each rep as the best of MICRO_REPS back-to-back executions
+    (round-9 kernel-trio attribution, SCALE.md: a load transient
+    multiplies a 0.3 s Python-worker-bound kernel by 2×, and best-of-3
+    single samples can all land inside one burst; 3 consecutive
+    micro-samples cost ~2×Σ(short queries) ≈ 80 s per pass and bound the
+    estimator by the quietest instant of each visit). Jobs are labelled
+    ``<label>:<name>`` (guide §1.5) so an event-log / UI reading of a
+    pass attributes time to queries.
+    """
+    warm_dir = "/root/testdata/sf0.001"
+    for name in names:
+        try:
+            queries[name](spark, warm_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception:
+            pass  # warmup is best-effort; the timed run surfaces errors
+
+    def run_once(name: str) -> float:
+        t0 = time.perf_counter()
+        queries[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        return time.perf_counter() - t0
+
+    rep_times: dict[str, list[float]] = {name: [] for name in names}
+    for _ in range(reps):
+        for name in names:
+            # one py4j call per visit, outside the timed region
+            spark.sparkContext.setJobDescription(f"{label}:{name}")
+            t = run_once(name)
+            if t < MICRO_CUTOFF_S:
+                t = min([t] + [run_once(name) for _ in range(MICRO_REPS - 1)])
+            rep_times[name].append(t)
+            spark.sparkContext.setJobDescription(None)
+    return {
+        name: {
+            "best": round(min(ts), 3),
+            "median": round(sorted(ts)[len(ts) // 2], 3),
+            "spread": round(max(ts) - min(ts), 3),
+        }
+        for name, ts in rep_times.items()
+    }
+
+
+def keep_standing_snapshot(
+    prev: dict | None, sf: float, reps: int, n_queries: int
+) -> bool:
+    """Whether a run must leave the standing BENCH_stats.json ``prev``
+    in place. Clobber guard (rounds 5 and 7 both lost a committed n=5
+    snapshot to the driver's end-of-round n=3 run; round 9 nearly lost it
+    to a subset run at a DIFFERENT sf — the guard originally only
+    compared same-sf runs): the standing snapshot's sf is STICKY — a run
+    at any other sf never replaces it (delete the file to rebase), and at
+    the same sf it may only be replaced by a run with at least as many
+    reps covering at least as many queries. A lower-rep / partial /
+    other-sf run still prints its stats line but leaves the file alone.
+    """
+    return prev is not None and (
+        prev.get("sf") != sf
+        or prev.get("n", 0) > reps
+        or len(prev.get("stats", {})) > n_queries
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -349,64 +435,9 @@ def main() -> None:
     )
 
     spark = get_spark(app_name="bench")
-    # Warm each query's whole-stage-codegen + JVM JIT at the smallest sf
-    # so the sf timings measure steady-state execution, not first-compile
-    # cost — the same averaged-over-repeats protocol as the reference
-    # (Evaluation/Speedups.java calculateAVG over repeated job runs).
-    warm_dir = "/root/testdata/sf0.001"
-    for name in headline:
-        try:
-            QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass  # warmup is best-effort; the timed run surfaces errors
-
-    # best-of-N per query (default 3): the box is shared, and a single
-    # run can catch a CPU-contention spike; min is the standard
-    # noise-robust estimator for cold-cache-free repeated runs.
-    # Reps are INTERLEAVED (full pass over all queries per rep) so one
-    # query's reps are minutes apart — a transient load burst can then
-    # inflate at most one rep of each query, not all of them.
-    # SUB-SECOND queries additionally take each rep as the best of
-    # MICRO_REPS back-to-back executions (round-9 kernel-trio
-    # attribution, SCALE.md: a load transient multiplies a 0.3 s
-    # Python-worker-bound kernel by 2×, and best-of-3 single samples
-    # can all land inside one burst; 3 consecutive micro-samples cost
-    # ~2×Σ(short queries) ≈ 80 s per pass and bound the estimator by
-    # the quietest instant of each visit).
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    MICRO_REPS, MICRO_CUTOFF_S = 3, 1.0
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
-
-    rep_times: dict[str, list[float]] = {name: [] for name in headline}
-    for _ in range(reps):
-        for name in headline:
-            # Label the jobs (guide §1.5) so an event-log / UI reading of
-            # a bench pass attributes time to queries; one py4j call per
-            # visit, outside the timed region.
-            spark.sparkContext.setJobDescription(f"bench:{name}")
-            t = run_once(name)
-            if t < MICRO_CUTOFF_S:
-                t = min([t] + [run_once(name) for _ in range(MICRO_REPS - 1)])
-            rep_times[name].append(t)
-            spark.sparkContext.setJobDescription(None)
-
-    times = {name: round(min(ts), 3) for name, ts in rep_times.items()}
-    stats = {
-        name: {
-            "best": round(min(ts), 3),
-            "median": round(sorted(ts)[len(ts) // 2], 3),
-            "spread": round(max(ts) - min(ts), 3),
-        }
-        for name, ts in rep_times.items()
-    }
+    stats = time_queries(spark, QUERIES, headline, sf_dir, reps, "bench")
+    times = {name: s["best"] for name, s in stats.items()}
 
     # The driver tails stdout and parses the LAST JSON line as the bench
     # contract; round 3's single line grew past its tail window once the
@@ -429,29 +460,13 @@ def main() -> None:
     stats_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_stats.json"
     )
-    # Clobber guard (rounds 5 and 7 both lost a committed n=5 snapshot
-    # to the driver's end-of-round n=3 run; round 9 nearly lost it to a
-    # subset run at a DIFFERENT sf — the guard originally only compared
-    # same-sf runs): the standing snapshot's sf is STICKY — a run at any
-    # other sf never replaces it (delete the file to rebase), and at the
-    # same sf it may only be replaced by a run with at least as many
-    # reps covering at least as many queries. A lower-rep / partial /
-    # other-sf run still prints its stats line but leaves the file
-    # alone.
-    write_stats = True
     prev = None
     try:
         with open(stats_path) as f:
             prev = json.load(f)
-        if (
-            prev.get("sf") != sf
-            or prev.get("n", 0) > reps
-            or len(prev.get("stats", {})) > len(stats)
-        ):
-            write_stats = False
     except (OSError, ValueError):
         pass
-    if write_stats:
+    if not keep_standing_snapshot(prev, sf, reps, len(stats)):
         with open(stats_path, "w") as f:
             json.dump(stats_out, f, indent=2)
     print(json.dumps(stats_out))

@@ -1,4 +1,5 @@
-"""Shared helpers for the declared query set.
+"""Shared helpers for the declared query set, and its registry
+(``register`` fills ``QUERIES`` and ``ORACLE``).
 
 Oracle-exact aggregation: the verification driver hash-compares Spark vs
 DuckDB with floats rounded to 4 decimals. A double SUM over 10^5+ rows can
@@ -13,6 +14,7 @@ shape on both sides so the double division is bit-identical.
 from __future__ import annotations
 
 import functools
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -107,6 +109,35 @@ def session_memo(fn):
 
 
 session_memo.clear = lambda: _evict(None)
+
+
+#: Every declared query, name -> callable(spark, sf_dir) -> DataFrame, and
+#: its DuckDB oracle SQL, in registration (= module import) order.
+QUERIES: dict[str, Callable] = {}
+ORACLE: dict[str, str] = {}
+
+
+def register(fn: Callable, oracle: str, memo: bool = True) -> Callable:
+    """Declare ``fn`` as query ``fn.__name__``, checked against ``oracle``.
+
+    The registry serves each query's BUILT lazy DataFrame from
+    :func:`session_memo`. Pass ``memo=False`` when the build itself
+    executes corpus-scale work (a driver loop, a training run, an eager
+    checkpoint or collect of corpus state): a memoized plan would hand
+    later calls that materialized state instead of a plan. A ``fn`` that
+    is already a ``session_memo`` wrapper is stored as it is.
+
+    Returns ``fn`` unchanged, so the module-level name stays the raw build.
+    """
+    name = fn.__name__
+    if name in QUERIES:
+        raise ValueError(f"duplicate query name {name!r}")
+    if not oracle:
+        raise ValueError(f"query {name!r} has no oracle SQL")
+    wrap = memo and not hasattr(fn, "__wrapped__")
+    QUERIES[name] = session_memo(fn) if wrap else fn
+    ORACLE[name] = oracle
+    return fn
 
 
 def twin_batch(pdfs, key, last_ts_us: int, last_eid: int):

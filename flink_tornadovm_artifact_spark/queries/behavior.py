@@ -26,16 +26,12 @@ Engine-portability notes (shared by every query here):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load
-from ._util import DEC
+from ._util import DEC, register
 
-ORACLE: dict[str, str] = {}
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 def _pctl(col: str, prob: float, approx: bool):
     """Grouped percentile with the 100 TB flip as a MECHANISM (round 9;
@@ -99,8 +95,7 @@ def cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["cohort_retention_weekly"] = cohort_retention_weekly
-ORACLE["cohort_retention_weekly"] = f"""
+register(cohort_retention_weekly, f"""
 WITH a AS (
   SELECT DISTINCT user_id,
          CAST(floor({_DAYS_SQL.format(c="ts")} / 7) AS BIGINT) AS week
@@ -118,7 +113,7 @@ WITH a AS (
 SELECT m.cohort_week, m.week_offset, m.n_active, s.n_cohort,
        m.n_active * 1.0 / s.n_cohort AS retention
 FROM m JOIN s ON m.cohort_week = s.cohort_week
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -153,8 +148,7 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["markov_event_transitions"] = markov_event_transitions
-ORACLE["markov_event_transitions"] = """
+register(markov_event_transitions, """
 WITH seq AS (
   SELECT event_type AS from_type,
          LEAD(event_type) OVER (
@@ -170,7 +164,7 @@ WITH seq AS (
 SELECT p.from_type, p.to_type, p.n_trans, t.n_from,
        p.n_trans * 1.0 / t.n_from AS p_trans
 FROM p JOIN t ON p.from_type = t.from_type
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -252,8 +246,7 @@ def survival_km_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["survival_km_purchase"] = survival_km_purchase
-ORACLE["survival_km_purchase"] = f"""
+register(survival_km_purchase, f"""
 WITH u AS (
   SELECT user_id, MIN(s) AS s0,
          MIN(CASE WHEN event_type = 'purchase' THEN s END) AS sp,
@@ -290,7 +283,7 @@ SELECT dur_min, n_events, n_at_risk,
 FROM s
 WINDOW w AS (ORDER BY dur_min
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -375,8 +368,7 @@ def experiment_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["experiment_ab_ztest"] = experiment_ab_ztest
-ORACLE["experiment_ab_ztest"] = f"""
+register(experiment_ab_ztest, f"""
 WITH u AS (
   SELECT user_id,
          MAX(CASE WHEN event_type = 'purchase' AND value >= {CONV_VALUE_MIN}
@@ -408,7 +400,7 @@ SELECT n_a, conv_a, n_b, conv_b,
                         * (1.0 - (conv_a + conv_b) * 1.0 / (n_a + n_b))
                         * (1.0 / n_a + 1.0 / n_b)) END AS z_score
 FROM a
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -477,8 +469,7 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top
 
 
-QUERIES["session_path_topk"] = session_path_topk
-ORACLE["session_path_topk"] = f"""
+register(session_path_topk, f"""
 WITH e AS (
   SELECT user_id, ts, event_id, event_type,
          {_SECS_SQL.format(c="ts")} AS s
@@ -512,7 +503,7 @@ SELECT path, CAST(COUNT(*) AS BIGINT) AS n_sessions,
 FROM p GROUP BY 1
 ORDER BY n_sessions DESC, path
 LIMIT {PATH_TOPK}
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -598,8 +589,7 @@ def rfm_segment_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["rfm_segment_panel"] = rfm_segment_panel
-ORACLE["rfm_segment_panel"] = f"""
+register(rfm_segment_panel, f"""
 WITH cust AS (
   SELECT o_custkey, MAX({_DAYS_SQL.format(c="o_orderdate")}) AS d_last,
          CAST(COUNT(*) AS BIGINT) AS freq,
@@ -636,7 +626,7 @@ SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_customers,
        AVG(freq) AS avg_frequency,
        AVG(m_cents) / 100.0 AS avg_monetary
 FROM s GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -755,8 +745,7 @@ FROM s{STAT_ITERS} s JOIN emp ON emp.t = s.t
 """
 
 
-QUERIES["markov_stationary_panel"] = markov_stationary_panel
-ORACLE["markov_stationary_panel"] = _stationary_oracle()
+register(markov_stationary_panel, _stationary_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -796,8 +785,7 @@ def scd2_dimension_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["scd2_dimension_build"] = scd2_dimension_build
-ORACLE["scd2_dimension_build"] = """
+register(scd2_dimension_build, """
 WITH s AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
          ROW_NUMBER() OVER (PARTITION BY user_id, ts
@@ -812,7 +800,7 @@ SELECT user_id,
        LEAD(ts) OVER w IS NULL AS is_current
 FROM v
 WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -863,8 +851,7 @@ def anomaly_mad_events(
     )
 
 
-QUERIES["anomaly_mad_events"] = anomaly_mad_events
-ORACLE["anomaly_mad_events"] = f"""
+register(anomaly_mad_events, f"""
 WITH med AS (
   SELECT event_type, quantile_cont(value, 0.5) AS med_v
   FROM events GROUP BY 1
@@ -884,7 +871,7 @@ SELECT dev.event_type, MIN(dev.med_v) AS med_v, MIN(mad.mad_v) AS mad_v,
                 THEN 1 ELSE 0 END) * 1.0 / COUNT(*) AS outlier_rate
 FROM dev JOIN mad ON mad.event_type = dev.event_type
 GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -974,8 +961,7 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["market_basket_rules"] = market_basket_rules
-ORACLE["market_basket_rules"] = """
+register(market_basket_rules, """
 WITH b AS (
   SELECT DISTINCT l.l_orderkey AS k, p.p_type AS i
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -1002,7 +988,7 @@ FROM directed d
 JOIN items ante ON ante.i = d.ia
 JOIN items cons ON cons.i = d.ib
 CROSS JOIN nb
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1092,8 +1078,7 @@ def experiment_cuped_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["experiment_cuped_panel"] = experiment_cuped_panel
-ORACLE["experiment_cuped_panel"] = f"""
+register(experiment_cuped_panel, f"""
 WITH u AS (
   SELECT user_id,
          CAST(SUM(CASE WHEN d < {CUPED_SPLIT_DAY} THEN 1 ELSE 0 END)
@@ -1176,7 +1161,7 @@ SELECT n_a, CAST(n - n_a AS BIGINT) AS n_b,
                 * ((sxx - sx * 1.0 * sx / n) / n))
              / ((syy - sy * 1.0 * sy / n) / n) AS var_reduction
 FROM m
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1538,8 +1523,7 @@ def orders_independence_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["orders_independence_chi2"] = orders_independence_chi2
-ORACLE["orders_independence_chi2"] = f"""
+register(orders_independence_chi2, f"""
 WITH obs AS (
   SELECT ({_DAYS_SQL.format(c="o_orderdate")} + 4) % 7 AS dow,
          o_orderpriority AS prio, CAST(COUNT(*) AS BIGINT) AS o
@@ -1566,7 +1550,7 @@ SELECT p.chi2,
        sqrt(p.chi2 / (t.n_tot * least(d.n_rows - 1, d.n_cols - 1)))
          AS cramers_v
 FROM p, d, t
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1627,9 +1611,6 @@ def funnel_lag_percentiles(
     )
 
 
-QUERIES["funnel_lag_percentiles"] = funnel_lag_percentiles
-
-
 def _funnel_lag_oracle() -> str:
     from .temporal_q import FUNNEL_STEPS
 
@@ -1665,7 +1646,7 @@ FROM lags GROUP BY 1
 """
 
 
-ORACLE["funnel_lag_percentiles"] = _funnel_lag_oracle()
+register(funnel_lag_percentiles, _funnel_lag_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1728,8 +1709,7 @@ def revenue_concentration_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shares
 
 
-QUERIES["revenue_concentration_panel"] = revenue_concentration_panel
-ORACLE["revenue_concentration_panel"] = """
+register(revenue_concentration_panel, """
 WITH cust AS (
   SELECT o_custkey,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) * 100 AS BIGINT)
@@ -1754,7 +1734,7 @@ SELECT thr.n_customers,
          * 1.0 / SUM(cust.m_cents) AS share_above_p99
 FROM cust CROSS JOIN thr
 GROUP BY 1, 2, 3, 4, 5
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1828,8 +1808,7 @@ def events_autocorrelation_panel(
     )
 
 
-QUERIES["events_autocorrelation_panel"] = events_autocorrelation_panel
-ORACLE["events_autocorrelation_panel"] = f"""
+register(events_autocorrelation_panel, f"""
 WITH e AS (
   SELECT event_type,
          CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 3600) AS BIGINT) AS h
@@ -1869,7 +1848,7 @@ SELECT event_type, lag_h, n AS n_pairs,
                         * CAST(n * syy - sy * sy AS DOUBLE)) END
          AS autocorr
 FROM mom
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1916,8 +1895,7 @@ def lineitem_discount_elasticity(
     )
 
 
-QUERIES["lineitem_discount_elasticity"] = lineitem_discount_elasticity
-ORACLE["lineitem_discount_elasticity"] = """
+register(lineitem_discount_elasticity, """
 WITH j AS (
   SELECT p.p_type,
          CAST(l.l_discount AS DECIMAL(18,4)) AS x,
@@ -1940,7 +1918,7 @@ SELECT p_type, n AS n_lines,
                  / (((sxx - sx * sx / n) / n) * ((syy - sy * sy / n) / n))
        END AS r2
 FROM mom
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1994,8 +1972,7 @@ def concurrent_sessions_timeline(
     ).filter(F.col("n_concurrent") > 0)
 
 
-QUERIES["concurrent_sessions_timeline"] = concurrent_sessions_timeline
-ORACLE["concurrent_sessions_timeline"] = f"""
+register(concurrent_sessions_timeline, f"""
 WITH e AS (
   SELECT user_id, ts, event_id, {_SECS_SQL.format(c="ts")} AS s
   FROM events
@@ -2029,7 +2006,7 @@ SELECT h, CAST(SUM(d) OVER (ORDER BY h
                             AND CURRENT ROW) AS BIGINT) AS n_concurrent
 FROM hourly
 QUALIFY n_concurrent > 0
-""".replace("{gap}", str(SESSION_GAP_S))
+""".replace("{gap}", str(SESSION_GAP_S)))
 
 
 # ---------------------------------------------------------------------------
@@ -2065,8 +2042,7 @@ def shipping_delay_panel(
     )
 
 
-QUERIES["shipping_delay_panel"] = shipping_delay_panel
-ORACLE["shipping_delay_panel"] = f"""
+register(shipping_delay_panel, f"""
 WITH j AS (
   SELECT o.o_orderpriority,
          {_DAYS_SQL.format(c="l.l_shipdate")}
@@ -2080,7 +2056,7 @@ SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_lines,
        quantile_cont(delay_d, 0.75) AS p75_d,
        MAX(delay_d) AS max_d
 FROM j GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2169,8 +2145,7 @@ def cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["cdc_merge_upsert"] = cdc_merge_upsert
-ORACLE["cdc_merge_upsert"] = f"""
+register(cdc_merge_upsert, f"""
 WITH e AS (
   SELECT event_id, user_id, event_type, value,
          {_DAYS_SQL.format(c="ts")} AS d, CAST(ts AS TIMESTAMP) AS ts
@@ -2226,7 +2201,7 @@ SELECT
   CAST(COUNT(v) AS BIGINT) AS n_final,
   CAST(SUM(CAST(v AS DECIMAL(18,4))) AS DOUBLE) AS checksum_v
 FROM m
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2298,8 +2273,7 @@ def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["events_peak_detection"] = events_peak_detection
-ORACLE["events_peak_detection"] = """
+register(events_peak_detection, """
 WITH e AS (
   SELECT event_type,
          CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 3600) AS BIGINT) AS h
@@ -2343,7 +2317,7 @@ SELECT p.event_type, p.n_hours, p.mean_c, p.std_c,
        p.h AS peak_h, p.c AS peak_c, p.z AS peak_z, a.n_above_3sigma
 FROM peaks p JOIN above a ON a.event_type = p.event_type
 WHERE p.rn = 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2375,8 +2349,7 @@ def supplier_hhi_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["supplier_hhi_panel"] = supplier_hhi_panel
-ORACLE["supplier_hhi_panel"] = """
+register(supplier_hhi_panel, """
 WITH per_supp AS (
   SELECT p.p_type, l.l_suppkey,
          SUM(CAST(l.l_quantity AS DECIMAL(18,4))) AS q
@@ -2387,7 +2360,7 @@ SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n_suppliers,
        CAST(SUM(q) AS DOUBLE) AS total_qty,
        CAST(SUM(q * q) AS DOUBLE) / CAST(SUM(q) * SUM(q) AS DOUBLE) AS hhi
 FROM per_supp GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2460,8 +2433,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["stream_dedup_events"] = stream_dedup_events
-ORACLE["stream_dedup_events"] = f"""
+register(stream_dedup_events, f"""
 WITH arrivals AS (
   SELECT event_id, ts, user_id, event_type, value, 0 AS copy_no FROM events
   UNION ALL
@@ -2479,4 +2451,4 @@ SELECT event_type,
             AS DOUBLE) AS dup_value_at_risk
 FROM arrivals
 GROUP BY event_type
-"""
+""")

@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..tables import load
+from ._util import ORACLE, register
 
-ORACLE: dict[str, str] = {}
 
 #: Pattern parameters: clicks followed by a purchase within 30 minutes.
 A_TYPE, B_TYPE, WITHIN = "click", "purchase", "30 minutes"
@@ -75,7 +75,7 @@ def cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the Spark side — so the within-T boundary comparison agrees between
 # engines (a ns-precision comparison could flip a pair sitting within
 # 1 µs of the boundary).
-ORACLE["cep_followed_by"] = f"""
+register(cep_followed_by, f"""
 WITH ab AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
   FROM events
@@ -93,7 +93,7 @@ SELECT event_id AS a_event_id, user_id, ts AS a_ts, b_ts
 FROM scanned
 WHERE event_type = '{A_TYPE}' AND b_ts IS NOT NULL
   AND b_ts <= ts + INTERVAL {WITHIN}
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -135,7 +135,7 @@ def cep_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_times"] = f"""
+register(cep_times, f"""
 WITH a AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
   FROM events WHERE event_type = '{A_TYPE}'
@@ -150,7 +150,7 @@ counted AS (
 )
 SELECT event_id AS a_event_id, user_id, ts AS a_ts, n_in_window
 FROM counted WHERE n_in_window >= {TIMES_N}
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -193,7 +193,7 @@ def cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_not_followed_by"] = f"""
+register(cep_not_followed_by, f"""
 WITH ab AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
   FROM events
@@ -211,7 +211,7 @@ SELECT event_id AS a_event_id, user_id, ts AS a_ts
 FROM scanned
 WHERE event_type = '{NOT_A_TYPE}'
   AND (b_ts IS NULL OR b_ts > ts + INTERVAL {NOT_WITHIN})
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -246,7 +246,7 @@ def cep_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_next"] = f"""
+register(cep_next, f"""
 WITH scanned AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
          LEAD(event_type) OVER w AS next_type,
@@ -259,15 +259,7 @@ SELECT event_id AS a_event_id, next_id AS b_event_id, user_id,
        ts AS a_ts, next_ts AS b_ts
 FROM scanned
 WHERE event_type = '{NEXT_A_TYPE}' AND next_type = '{NEXT_B_TYPE}'
-"""
-
-
-QUERIES = {
-    "cep_followed_by": cep_followed_by,
-    "cep_times": cep_times,
-    "cep_not_followed_by": cep_not_followed_by,
-    "cep_next": cep_next,
-}
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -316,7 +308,7 @@ def cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_one_or_more"] = f"""
+register(cep_one_or_more, f"""
 WITH flagged AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
          ROW_NUMBER() OVER w AS rn,
@@ -345,7 +337,7 @@ SELECT n.event_id AS b_event_id, n.user_id, r.a_first_ts,
 FROM numbered n
 JOIN runs r ON n.user_id = r.user_id AND n.rn = r.end_rn + 1
 WHERE n.event_type = '{ONE_B_TYPE}'
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -388,7 +380,7 @@ def cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_optional"] = f"""
+register(cep_optional, f"""
 WITH scanned AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
          LAG(event_type) OVER w AS p1t, LAG(event_id) OVER w AS p1i,
@@ -406,7 +398,7 @@ FROM scanned
 WHERE event_type = '{OPT_B_TYPE}'
   AND (p1t = '{OPT_V_TYPE}'
        OR (p1t = '{OPT_C_TYPE}' AND p2t = '{OPT_V_TYPE}'))
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -426,14 +418,11 @@ def cep_times_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_times_range"] = (
+register(
+    cep_times_range,
     ORACLE["cep_one_or_more"].rstrip()
-    + f"\n  AND r.run_len BETWEEN {RANGE_FROM} AND {RANGE_TO}\n"
+    + f"\n  AND r.run_len BETWEEN {RANGE_FROM} AND {RANGE_TO}\n",
 )
-
-QUERIES["cep_one_or_more"] = cep_one_or_more
-QUERIES["cep_optional"] = cep_optional
-QUERIES["cep_times_range"] = cep_times_range
 
 
 # ---------------------------------------------------------------------------
@@ -596,9 +585,10 @@ FROM cand{strategy_filter}
 """
 
 
-ORACLE["cep_after_match_no_skip"] = _after_match_oracle("")
-ORACLE["cep_after_match_skip_to_last"] = _after_match_oracle(
-    "\nWHERE pos = 1 OR pos = run_len"
+register(cep_after_match_no_skip, _after_match_oracle(""))
+register(
+    cep_after_match_skip_to_last,
+    _after_match_oracle("\nWHERE pos = 1 OR pos = run_len"),
 )
 
 
@@ -662,7 +652,7 @@ def cep_one_or_more_until(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_one_or_more_until"] = f"""
+register(cep_one_or_more_until, f"""
 WITH flagged AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value,
          ROW_NUMBER() OVER w AS rn,
@@ -693,11 +683,7 @@ SELECT n.event_id AS b_event_id, n.user_id, r.a_first_ts,
 FROM numbered n
 JOIN runs r ON n.user_id = r.user_id AND n.rn = r.end_rn + 1
 WHERE n.event_type = '{ONE_B_TYPE}' AND r.triggered = 0
-"""
-
-QUERIES["cep_after_match_no_skip"] = cep_after_match_no_skip
-QUERIES["cep_after_match_skip_to_last"] = cep_after_match_skip_to_last
-QUERIES["cep_one_or_more_until"] = cep_one_or_more_until
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -756,7 +742,7 @@ def cep_followed_by_any(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_followed_by_any"] = f"""
+register(cep_followed_by_any, f"""
 WITH a AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
   FROM events WHERE event_type = '{A_TYPE}'
@@ -771,9 +757,7 @@ FROM a JOIN b
   ON a.user_id = b.user_id
  AND (b.ts > a.ts OR (b.ts = a.ts AND b.event_id > a.event_id))
  AND b.ts <= a.ts + INTERVAL {ANY_WITHIN_SEC} SECONDS
-"""
-
-QUERIES["cep_followed_by_any"] = cep_followed_by_any
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -832,7 +816,7 @@ def cep_group_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_group_followed_by"] = f"""
+register(cep_group_followed_by, f"""
 WITH scanned AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
          LEAD(event_type) OVER w AS next_type,
@@ -855,9 +839,7 @@ counted AS (
 )
 SELECT v_event_id, c_event_id, user_id, ts AS group_ts, n_groups
 FROM counted WHERE n_groups >= {GRP_TIMES_N}
-"""
-
-QUERIES["cep_group_followed_by"] = cep_group_followed_by
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -887,7 +869,7 @@ def cep_not_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_not_next"] = f"""
+register(cep_not_next, f"""
 WITH scanned AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
          LEAD(event_type) OVER w AS next_type
@@ -898,9 +880,7 @@ SELECT event_id AS a_event_id, user_id, ts AS a_ts
 FROM scanned
 WHERE event_type = '{NEXT_A_TYPE}'
   AND (next_type IS NULL OR next_type <> '{NEXT_B_TYPE}')
-"""
-
-QUERIES["cep_not_next"] = cep_not_next
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -977,7 +957,7 @@ def cep_allow_combinations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["cep_allow_combinations"] = f"""
+register(cep_allow_combinations, f"""
 WITH flagged AS (
   SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
          ROW_NUMBER() OVER w AS rn,
@@ -1016,6 +996,4 @@ SELECT b_event_id, user_id, run_len, a_first_ts, b_ts,
             CAST(pow(2, run_len - 1) AS BIGINT))) AS BIGINT)) + 1
             AS INTEGER) AS n_matched
 FROM joined
-"""
-
-QUERIES["cep_allow_combinations"] = cep_allow_combinations
+""")

@@ -42,8 +42,6 @@ normalized scores and inverse-log sums, far inside the driver's
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,16 +53,7 @@ from ..functions.graph import (
     triangles,
 )
 from ..tables import load
-
-ORACLE: dict[str, str] = {}
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def _register(fn: Callable, sql: str | None) -> Callable:
-    QUERIES[fn.__name__] = fn
-    if sql is not None:
-        ORACLE[fn.__name__] = sql
-    return fn
+from ._util import register
 
 
 #: Canonical undirected simple edges of the mod-997 social graph, as SQL.
@@ -123,7 +112,7 @@ def triangle_enum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangles(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     triangle_enum,
     # id-ordered triple join — enumerates the same triangle set the
     # degree-oriented Spark plan produces, each triangle once as
@@ -182,7 +171,7 @@ SELECT vertex, label FROM {prev}
 """
 
 
-_register(label_propagation_communities, _lp_oracle_sql())
+register(label_propagation_communities, _lp_oracle_sql(), memo=False)
 
 
 _HITS_ITERATIONS = 3
@@ -242,7 +231,7 @@ SELECT vertex, hub, auth FROM {prev}
 """
 
 
-_register(hits_scores, _hits_oracle_sql())
+register(hits_scores, _hits_oracle_sql(), memo=False)
 
 
 #: Reference minimum-score option: report pairs sharing ≥ 2 neighbors.
@@ -264,7 +253,7 @@ def jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_index(_social_edges(spark, sf_dir), min_shared=_MIN_SHARED)
 
 
-_register(
+register(
     jaccard_similarity,
     f"""
 WITH {_E_SQL},
@@ -283,7 +272,7 @@ def adamic_adar_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return adamic_adar(_social_edges(spark, sf_dir), min_shared=_MIN_SHARED)
 
 
-_register(
+register(
     adamic_adar_similarity,
     f"""
 WITH {_E_SQL},
@@ -307,7 +296,7 @@ def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clustering_coefficients(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     local_clustering_coefficient,
     f"""
 WITH {_E_SQL},
@@ -341,7 +330,7 @@ def global_clustering_coefficient_q(
     return global_clustering_coefficient(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     global_clustering_coefficient_q,
     f"""
 WITH {_E_SQL},
@@ -373,7 +362,7 @@ def graph_summarization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     graph_summarization,
     # The Spark pipeline summarizes the DIRECTED social edge list (the
     # reference condenses the graph as given, not its undirected
@@ -409,7 +398,7 @@ def vertex_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vertex_metrics(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     vertex_metrics_q,
     f"""
 WITH {_E_SQL},
@@ -481,7 +470,7 @@ SELECT vertex, label FROM {prev}
 """
 
 
-_register(community_detection_labels, _cd_oracle_sql())
+register(community_detection_labels, _cd_oracle_sql(), memo=False)
 
 
 def edge_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,7 +481,7 @@ def edge_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edge_metrics(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     edge_metrics_q,
     f"""
 WITH {_E_SQL},
@@ -528,7 +517,7 @@ def average_clustering_coefficient_q(
     return average_clustering_coefficient(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     average_clustering_coefficient_q,
     f"""
 WITH {_E_SQL},
@@ -574,7 +563,7 @@ def triadic_census_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triadic_census(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     triadic_census_q,
     f"""
 WITH {_E_SQL},
@@ -608,7 +597,7 @@ def vertex_metrics_directed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vertex_metrics_directed(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     vertex_metrics_directed_q,
     """
 WITH de AS MATERIALIZED (
@@ -653,7 +642,7 @@ def triangle_listing_directed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_listing_directed(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     triangle_listing_directed_q,
     f"""
 WITH de AS MATERIALIZED (
@@ -687,7 +676,7 @@ def local_clustering_coefficient_directed_q(
     return local_clustering_coefficient_directed(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     local_clustering_coefficient_directed_q,
     f"""
 WITH de AS MATERIALIZED (
@@ -765,7 +754,7 @@ def global_clustering_coefficient_directed_q(
     return global_clustering_coefficient_directed(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     global_clustering_coefficient_directed_q,
     f"""
 WITH {_DE_SQL},
@@ -793,7 +782,7 @@ def average_clustering_coefficient_directed_q(
     return average_clustering_coefficient_directed(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     average_clustering_coefficient_directed_q,
     f"""
 WITH {_DE_SQL},
@@ -940,7 +929,7 @@ FROM edge_t
 """
 
 
-_register(triadic_census_directed_q, _triadic_census_directed_sql())
+register(triadic_census_directed_q, _triadic_census_directed_sql())
 
 
 def edge_metrics_directed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -951,7 +940,7 @@ def edge_metrics_directed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edge_metrics_directed(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     edge_metrics_directed_q,
     f"""
 WITH {_DE_SQL},
@@ -992,7 +981,7 @@ FROM pv
 def bipartite_projection_suppliers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # Not plan-memoized (PLAN_MEMO_EXCLUDE): the build runs the eager
+    # Registered with memo=False: the build runs the eager
     # localCheckpoint below, and a memoized plan would pin those blocks
     # with no way to rebuild them after executor loss.
     from ..functions.bipartite import BipartiteGraph
@@ -1021,7 +1010,7 @@ def bipartite_projection_suppliers(
     )
 
 
-_register(
+register(
     bipartite_projection_suppliers,
     """
 WITH e AS (
@@ -1033,6 +1022,7 @@ FROM e a
 JOIN e b ON a.part = b.part AND a.supp < b.supp
 GROUP BY a.supp, b.supp
 """,
+    memo=False,
 )
 
 
@@ -1049,7 +1039,7 @@ def asm_vertex_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vertex_degrees(_social_edges(spark, sf_dir))
 
 
-_register(
+register(
     asm_vertex_degrees,
     # ddeg is the SHARED distinct-neighbor degree CTE (_DDEG_SQL) the
     # directed metric oracles already use — one definition to fix if
@@ -1093,7 +1083,7 @@ def generator_hypercube_degrees(
     )
 
 
-_register(
+register(
     generator_hypercube_degrees,
     f"""
 WITH v AS (SELECT i FROM range({2 ** _HYPERCUBE_DIMS}) t(i)),
@@ -1151,8 +1141,7 @@ SELECT DISTINCT x AS vertex FROM (
     return "".join(parts)
 
 
-QUERIES["kcore_social"] = kcore_social
-ORACLE["kcore_social"] = _kcore_oracle_sql()
+register(kcore_social, _kcore_oracle_sql(), memo=False)
 
 
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1212,7 +1201,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     graph_assortativity,
     f"""
 WITH {_E_SQL},

@@ -16,9 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..tables import load
-from ._util import davg, davg_sql, dsum, dsum_sql
-
-ORACLE: dict[str, str] = {}
+from ._util import davg, davg_sql, dsum, dsum_sql, register
 
 
 # ---------------------------------------------------------------------------
@@ -35,12 +33,12 @@ def q17_iot_global_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q17_iot_global_reduce"] = f"""
+register(q17_iot_global_reduce, f"""
 SELECT MIN(value) AS min_value, MAX(value) AS max_value,
        {dsum_sql('value')} AS sum_value, {davg_sql('value')} AS avg_value,
        COUNT(*) AS cnt
 FROM events
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -70,14 +68,14 @@ def q18_iot_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q18_iot_window_agg"] = f"""
+register(q18_iot_window_agg, f"""
 SELECT time_bucket(INTERVAL '5 minutes', ts) AS win_start, user_id,
        MIN(value) AS min_value, MAX(value) AS max_value,
        {dsum_sql('value')} AS sum_value, {davg_sql('value')} AS avg_value,
        COUNT(*) AS cnt
 FROM events
 GROUP BY win_start, user_id
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -110,7 +108,7 @@ def q19_iot_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "win_start", "value")
 
 
-ORACLE["q19_iot_outliers"] = """
+register(q19_iot_outliers, """
 SELECT event_id, user_id, win_start, value
 FROM (
   SELECT event_id, user_id,
@@ -121,7 +119,7 @@ FROM (
   WINDOW w AS (PARTITION BY user_id, time_bucket(INTERVAL '1 day', ts))
 )
 WHERE ABS(value - mean_v) > 2 * sd_v
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -145,14 +143,14 @@ def q36_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q36_json_extract"] = """
+register(q36_json_extract, """
 SELECT event_type,
        CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
        CAST(SUM(CASE WHEN CAST(json_extract(props, '$.k') AS BIGINT) > 50
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
        COUNT(*) AS cnt
 FROM events GROUP BY event_type
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -176,18 +174,11 @@ def q52_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q52_from_json_struct"] = """
+register(q52_from_json_struct, """
 SELECT event_type,
        CAST(json_extract(props, '$.k') AS BIGINT) % 10 AS k_mod,
        COUNT(*) AS cnt,
        CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
 FROM events
 GROUP BY event_type, k_mod
-"""
-
-
-QUERIES = {
-    name: fn
-    for name, fn in sorted(globals().items())
-    if name.startswith("q") and callable(fn)
-}
+""")

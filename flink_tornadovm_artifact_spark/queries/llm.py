@@ -24,24 +24,12 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.sizing import spread_scan
 from ..tables import load
-from ._util import session_memo
-
-ORACLE: dict[str, str] = {}
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def _register(fn: Callable, sql: str | None) -> Callable:
-    QUERIES[fn.__name__] = fn
-    if sql is not None:
-        ORACLE[fn.__name__] = sql
-    return fn
+from ._util import ORACLE, register, session_memo
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +49,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dedup_exact,
     """
 SELECT COUNT(*) AS n_distinct,
@@ -281,7 +269,7 @@ _LSH_BANDS_CTE = f"""WITH toks AS (
 {_band_sql}
 )"""
 
-_register(
+register(
     dedup_minhash_lsh,
     f"""
 {_LSH_BANDS_CTE}
@@ -367,13 +355,14 @@ _bit_sql = " ||\n       ".join(
     for k in range(_SIMHASH_BITS)
 )
 
-_register(
+register(
     dedup_simhash,
     f"""
 SELECT doc_id,
        {_bit_sql} AS simhash
 FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
 """,
+    memo=False,
 )
 
 
@@ -428,7 +417,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dedup_ngram_jaccard,
     f"""
 WITH toks AS (
@@ -489,7 +478,7 @@ def dedup_lsh_verified(
 
 _pairs_sql = ORACLE["dedup_minhash_lsh"].strip()
 
-_register(
+register(
     dedup_lsh_verified,
     f"""
 WITH pairs AS (
@@ -595,7 +584,7 @@ _cos_sql = (
     " / sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))"
 )
 
-_register(
+register(
     dedup_embedding_cosine,
     f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_cos_sql} AS cosine
@@ -627,7 +616,7 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     similarity_topk,
     f"""
 SELECT query_id, neighbor_id, cosine, CAST(rn AS BIGINT) AS rn
@@ -758,7 +747,7 @@ _plane_bit_sql = " || ".join(
     for j in range(8)
 )
 
-_register(
+register(
     similarity_lsh_bucketed,
     f"""
 WITH vv AS (
@@ -891,7 +880,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     similarity_ivf,
     # The coarse quantization IS oracle-checkable: assignment margins on
     # this corpus (min rank1-rank2 gap 2.3e-4, rank2-rank3 5.3e-5,
@@ -958,7 +947,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_token_count,
     """
 SELECT doc_id,
@@ -996,7 +985,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _stop_in = ", ".join(f"'{s}'" for s in _STOPWORDS)
-_register(
+register(
     text_quality_score,
     f"""
 SELECT doc_id,
@@ -1061,7 +1050,7 @@ def _lang_score_sql(m: tuple[str, ...]) -> str:
 
 
 _s = {lang: _lang_score_sql(m) for lang, m in _LANG_MARKERS.items()}
-_register(
+register(
     text_lang_id,
     f"""
 SELECT doc_id,
@@ -1087,7 +1076,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", fp.alias("fingerprint"))
 
 
-_register(
+register(
     text_fingerprint,
     """
 SELECT doc_id,
@@ -1158,7 +1147,7 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _rh_terms = _poly_terms_sql(_RH_N)
 
-_register(
+register(
     text_rolling_hash,
     f"""
 WITH coded AS (
@@ -1216,7 +1205,7 @@ def text_udtf_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_udtf_ngrams,
     """
 SELECT doc_id,
@@ -1245,7 +1234,7 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     multimodal_binary_meta,
     """
 SELECT doc_id,
@@ -1297,7 +1286,7 @@ _feat_sql = ", ".join(
     for i in range(8)
 )
 
-_register(
+register(
     multimodal_feature_extract,
     f"""
 WITH h AS (
@@ -1457,7 +1446,7 @@ def multimodal_phash_neardup(
 
 # the px CTE is shared by the bands construction; 8-bit static twin of
 # the derived-width Spark plan (exact at every test SF — see above)
-_register(
+register(
     multimodal_phash_neardup,
     f"""
 WITH px AS (
@@ -1490,6 +1479,7 @@ WHERE list_sum(list_transform(range(0, {PHASH_BANDS}), k ->
         bit_count(xor(CAST(bu[k + 1] AS BIGINT), CAST(bv[k + 1] AS BIGINT)))))
       <= {_PHASH_HAM_MAX}
 """,
+    memo=False,
 )
 
 
@@ -1544,7 +1534,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_decontaminate,
     f"""
 WITH toks AS (
@@ -1724,7 +1714,7 @@ _bloom_positions_sql = (
     + "])"
 )
 
-_register(
+register(
     bloom_decontaminate_screen,
     f"""
 WITH mexp AS (
@@ -1839,7 +1829,7 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_repetition_metrics,
     """
 WITH toks AS (
@@ -1922,7 +1912,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_bigram_lm_score,
     """
 WITH toks AS (
@@ -1997,7 +1987,7 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_tfidf_keywords,
     f"""
 WITH tok AS (
@@ -2052,7 +2042,7 @@ def text_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_importance_sample,
     """
 WITH base AS (
@@ -2097,7 +2087,7 @@ def embedding_outlier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     embedding_outlier_score,
     """
 WITH ex AS (
@@ -2158,7 +2148,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_boilerplate_ngrams,
     f"""
 WITH toks AS (
@@ -2250,7 +2240,7 @@ r(vertex, reach) AS (
 ),
 cc AS (SELECT vertex, MIN(reach) AS comp FROM r GROUP BY vertex)"""
 
-_register(
+register(
     dedup_cluster_representatives,
     # the verified-pair SQL nests wholesale as a CTE body; the closure
     # is the same recursive-CTE technique as connected_components_pipeline
@@ -2293,7 +2283,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     corpus_datasheet,
     """
 SELECT source, lang,
@@ -2513,7 +2503,7 @@ _DATASHEET_SELECT = """source, lang,
          AS n_pred_und,
        AVG(CASE WHEN c.copies > 1 THEN 1.0 ELSE 0.0 END) AS exact_dup_frac"""
 
-_register(
+register(
     corpus_datasheet_v2,
     f"""
 WITH {_DATASHEET_CTES}
@@ -2564,7 +2554,7 @@ def corpus_datasheet_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     corpus_datasheet_v3,
     # the recursive-CTE closure is the shared _CC_KEEPSET_SQL fragment
     # (the dedup_cluster_representatives rule); the datasheet CTEs are
@@ -2631,7 +2621,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_chunk_windows,
     f"""
 WITH toks AS (
@@ -2697,7 +2687,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_vocab_coverage,
     f"""
 WITH tok AS (
@@ -2745,7 +2735,7 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_length_histogram,
     """
 WITH per AS (
@@ -2823,7 +2813,7 @@ def sketch_count_min_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     sketch_count_min_tokens,
     f"""
 WITH tok AS (
@@ -3045,7 +3035,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_pmi_bigrams,
     f"""
 WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
@@ -3142,7 +3132,7 @@ def corpus_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     corpus_train_split,
     f"""
 WITH a AS (
@@ -3206,7 +3196,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     split_leakage_audit,
     f"""
 WITH toks AS (
@@ -3262,7 +3252,7 @@ def text_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_domain_cap,
     f"""
 WITH r AS (
@@ -3315,7 +3305,7 @@ def sample_stratified_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     sample_stratified_lang,
     """
 WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
@@ -3367,7 +3357,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dedup_incremental,
     f"""
 WITH d AS (
@@ -3467,7 +3457,7 @@ def sketch_hll_registers_stream(docs_stream: DataFrame) -> DataFrame:
     )
 
 
-_register(
+register(
     sketch_hyperloglog_tokens,
     f"""
 WITH tok AS (
@@ -3601,7 +3591,7 @@ def text_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_duplicate_passages,
     f"""
 WITH base AS (
@@ -3719,7 +3709,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     source_overlap_matrix,
     f"""
 WITH base AS (
@@ -3801,7 +3791,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     embedding_quantize_int8,
     """
 WITH el AS (
@@ -4073,7 +4063,7 @@ def _bpe_oracle_sql(n_merges: int) -> str:
     return _bpe_oracle_ctes(n_merges) + "\n" + selects
 
 
-_register(bpe_merge_table, _bpe_oracle_sql(BPE_N_MERGES))
+register(bpe_merge_table, _bpe_oracle_sql(BPE_N_MERGES))
 
 
 # ---------------------------------------------------------------------------
@@ -4111,7 +4101,7 @@ def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     bpe_encode_fertility,
     _bpe_oracle_ctes(BPE_N_MERGES)
     + f""",
@@ -4174,7 +4164,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     corpus_mixture_weights,
     """
 WITH per AS (
@@ -4244,7 +4234,7 @@ def release_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     release_shard_manifest,
     f"""
 WITH keep AS (
@@ -4397,7 +4387,7 @@ def embedding_covariance_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     embedding_covariance_panel,
     """
 WITH e AS (SELECT embedding AS v FROM embeddings),
@@ -4479,7 +4469,7 @@ def quality_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     quality_retention_curve,
     f"""
 WITH q AS (
@@ -4597,7 +4587,7 @@ def release_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     release_sequence_packing,
     f"""
 WITH d AS (
@@ -4720,7 +4710,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vid").alias("vec_id"), "kept_by", "cosine_to_rep")
 
 
-_register(
+register(
     dedup_semantic,
     f"""
 WITH vv AS (
@@ -4740,6 +4730,7 @@ SELECT vid AS vec_id, CAST(MIN(u) AS BIGINT) AS kept_by,
 FROM pairs WHERE cosine >= {SEMDEDUP_TAU}
 GROUP BY vid
 """,
+    memo=False,
 )
 
 
@@ -4863,7 +4854,7 @@ def lm_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return model
 
 
-_register(
+register(
     lm_kn_bigram,
     f"""
 WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
@@ -4950,7 +4941,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_char_entropy,
     f"""
 WITH ch AS (
@@ -5032,7 +5023,7 @@ def corpus_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     corpus_snapshot_delta,
     """
 WITH tagged AS (
@@ -5163,7 +5154,7 @@ def similarity_hard_negatives(
     )
 
 
-_register(
+register(
     similarity_hard_negatives,
     f"""
 WITH vv AS (
@@ -5246,7 +5237,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dedup_containment,
     f"""
 WITH toks AS (
@@ -5368,7 +5359,7 @@ x{k}n AS MATERIALIZED (
 
 _x_ctes = "\n".join(_power_cte(k) for k in range(1, POWER_ITER_K + 1))
 
-_register(
+register(
     embedding_principal_direction,
     # the covariance CTE is the embedding_covariance_panel oracle
     # verbatim; the iteration is a generated K-step CTE chain (the
@@ -5406,6 +5397,7 @@ SELECT x.dim, nrm.sgn * x.val / nrm.nrm AS loading,
        lam.lambda1 / tr.var_total AS var_share
 FROM x{POWER_ITER_K} x, nrm, lam, tr
 """.replace("{COV_SQL}", ORACLE["embedding_covariance_panel"]),
+    memo=False,
 )
 
 
@@ -5472,7 +5464,7 @@ def embedding_abtt_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     embedding_abtt_residuals,
     # pd nests the full principal-direction oracle (itself nesting the
     # covariance oracle) — the audited v IS the shipped one
@@ -5501,6 +5493,7 @@ SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
        1 - SUM(proj * proj) / SUM(sq) AS residual_share
 FROM per GROUP BY 1
 """.replace("{PD_SQL}", ORACLE["embedding_principal_direction"]),
+    memo=False,
 )
 
 
@@ -5602,7 +5595,7 @@ def dedup_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dedup_recall_panel,
     f"""
 WITH lsh AS (
@@ -5808,7 +5801,7 @@ def sketch_hll_union_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     sketch_hll_union_matrix,
     f"""
 WITH tok AS (
@@ -5928,7 +5921,7 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     langid_confusion_matrix,
     f"""
 WITH p AS (
@@ -6126,7 +6119,7 @@ GROUP BY 1
 """
 
 
-_register(wordpiece_fertility_panel, _wordpiece_oracle())
+register(wordpiece_fertility_panel, _wordpiece_oracle(), memo=False)
 
 
 # ---------------------------------------------------------------------------
@@ -6301,7 +6294,7 @@ GROUP BY 1
 """
 
 
-_register(tokenizer_roundtrip_qa, _roundtrip_oracle())
+register(tokenizer_roundtrip_qa, _roundtrip_oracle(), memo=False)
 
 
 # ---------------------------------------------------------------------------
@@ -6498,7 +6491,7 @@ GROUP BY 1
 """
 
 
-_register(unigram_viterbi_panel, _viterbi_oracle())
+register(unigram_viterbi_panel, _viterbi_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -6569,7 +6562,7 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     sketch_cms_heavy_hitters,
     f"""
 WITH tok AS (
@@ -6692,7 +6685,7 @@ def sketch_quantile_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     sketch_quantile_doc_length,
     f"""
 WITH stats AS (
@@ -6777,7 +6770,7 @@ def lm_good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     lm_good_turing_counts,
     """
 WITH tok AS (
@@ -6842,7 +6835,7 @@ def sample_weighted_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(WS_TOPK)
 
 
-_register(
+register(
     sample_weighted_quality,
     f"""
 WITH q AS (
@@ -6905,7 +6898,7 @@ def text_burstiness_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_burstiness_panel,
     """
 WITH per_doc AS (
@@ -6991,7 +6984,7 @@ def text_ks_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_ks_length_drift,
     r"""
 WITH d AS (
@@ -7100,7 +7093,7 @@ def text_normalize_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     text_normalize_panel,
     f"""
 WITH raw AS (
@@ -7210,7 +7203,7 @@ FROM (
 """
 
 
-_register(
+register(
     ann_recall_panel,
     f"""
 WITH exact_k AS (
@@ -7298,7 +7291,7 @@ def epoch_shuffle_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # static twin: at every test SF n < 10^6, so the derived prime is the
 # list head — the same constant-vs-mechanism contract as the pHash
 # band width's 8-bit static oracle
-_register(
+register(
     epoch_shuffle_contract,
     f"""
 WITH ranked AS (
@@ -7382,7 +7375,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _frame_d = _frame_exprs("//")
 
-_register(
+register(
     multimodal_frame_sample,
     f"""
 WITH frames AS (
@@ -7476,7 +7469,7 @@ _exact_sql = (
     " / (len(a.sset) + len(b.sset) - len(list_intersect(a.sset, b.sset)))"
 )
 
-_register(
+register(
     minhash_estimate_error_panel,
     f"""
 WITH pairs AS (
@@ -7633,7 +7626,7 @@ def _ppl_over_flagged(
     )
 
 
-_register(
+register(
     perplexity_decontaminate,
     f"""
 WITH pr AS (
@@ -7766,7 +7759,7 @@ _probe_d = (
     " AS INTEGER), 1)))"
 )
 
-_register(
+register(
     multimodal_audio_window_panel,
     f"""
 WITH wins AS (
@@ -7879,7 +7872,7 @@ def decontaminate_verdict_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     decontaminate_verdict_panel,
     f"""
 WITH bloom AS (
@@ -7902,6 +7895,7 @@ FROM bloom
 LEFT JOIN exact ON bloom.doc_id = exact.doc_id
 LEFT JOIN ppl ON bloom.doc_id = ppl.doc_id
 """,
+    memo=False,
 )
 
 
@@ -7966,7 +7960,7 @@ def decontaminate_overlap_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     decontaminate_overlap_runs,
     f"""
 WITH toks AS (
@@ -8148,7 +8142,7 @@ def winnowing_fingerprint_panel(
 
 _winnow_poly = _poly_terms_sql(WINNOW_K)
 
-_register(
+register(
     winnowing_fingerprint_panel,
     f"""
 WITH coded AS (
@@ -8242,7 +8236,7 @@ def dedup_impact_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dedup_impact_panel,
     # keep-set closure = the shared _CC_KEEPSET_SQL fragment (the
     # dedup_cluster_representatives rule the Spark side composes)
@@ -8322,7 +8316,7 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fold_verdicts(ex, docs)
 
 
-_register(
+register(
     stream_neardup_ingest,
     f"""
 {_LSH_BANDS_CTE},
@@ -8451,7 +8445,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     exact_substring_spans,
     f"""
 WITH {_EXSUB_OCC_CTE},
@@ -8556,7 +8550,7 @@ def exact_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     exact_substring_removal,
     f"""
 WITH {_EXSUB_OCC_CTE},
@@ -8644,7 +8638,7 @@ def dup_ngram_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dup_ngram_exposure,
     f"""
 WITH {_EXSUB_OCC_CTE},

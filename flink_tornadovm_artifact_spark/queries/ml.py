@@ -18,9 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..tables import load
-from ._util import davg, davg_sql, dsum, dsum_sql
+from ._util import davg, davg_sql, dsum, dsum_sql, register
 
-ORACLE: dict[str, str] = {}
 
 #: Fixed centroid seed set (id, x, y) in the (l_quantity, 100*l_discount)
 #: plane — deterministic, mirrored literally in the oracle SQL.
@@ -83,7 +82,7 @@ for _i, (_c, _x, _y) in enumerate(CENTROIDS[:-1]):
     _case.append(f"WHEN {_conds} THEN {_c}")
 _case_sql = "CASE " + " ".join(_case) + f" ELSE {CENTROIDS[-1][0]} END"
 
-ORACLE["q20_kmeans_assign"] = f"""
+register(q20_kmeans_assign, f"""
 WITH points AS (
   SELECT l_quantity AS px, l_discount * 100 AS py FROM lineitem
 ), assigned AS (
@@ -93,11 +92,4 @@ SELECT cid, COUNT(*) AS n_points,
        {davg_sql('px')} AS avg_x, {davg_sql('py')} AS avg_y
 FROM assigned
 GROUP BY cid
-"""
-
-
-QUERIES = {
-    name: fn
-    for name, fn in sorted(globals().items())
-    if name.startswith("q") and callable(fn)
-}
+""")

@@ -37,25 +37,13 @@ the hot path); scale notes are per-op below.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.sizing import spread_scan
 from ..tables import load
-from ._util import session_memo
+from ._util import ORACLE, register, session_memo
 from .llm import lm_kn_bigram
-
-ORACLE: dict[str, str] = {}
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def _register(fn: Callable, sql: str | None) -> Callable:
-    QUERIES[fn.__name__] = fn
-    if sql is not None:
-        ORACLE[fn.__name__] = sql
-    return fn
 
 
 # ---------------------------------------------------------------------------
@@ -144,7 +132,7 @@ SELECT '{table}' AS table_name, '{col}' AS column_name,
 FROM {table}"""
 
 
-_register(
+register(
     pii_pattern_audit,
     "\nUNION ALL\n".join(
         _pii_oracle_one(t, c) for t, cols in PII_COLUMNS.items() for c in cols
@@ -227,7 +215,7 @@ def _pii_redact_sql(col: str) -> str:  # DuckDB twin of _pii_redact
     return f"regexp_replace({r}, '{PII_IP_PATTERN}', '<IP>', 'g')"
 
 
-_register(
+register(
     pii_redact_transform,
     f"""
 WITH leaky AS (
@@ -322,11 +310,8 @@ def lm_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the model CTE is the lm_kn_bigram oracle verbatim (composition in
 # the oracle mirrors composition in the Spark code)
-from . import llm as _llm  # noqa: E402  (oracle text composition)
-
-_register(lm_perplexity_bucket, None)
-ORACLE["lm_perplexity_bucket"] = f"""
-WITH model AS ({_llm.ORACLE["lm_kn_bigram"]}),
+register(lm_perplexity_bucket, f"""
+WITH model AS ({ORACLE["lm_kn_bigram"]}),
 dpr AS (
   SELECT doc_id, lang,
          unnest(list_transform(range(0, len(t) - 1),
@@ -365,7 +350,7 @@ SELECT q.lang,
        AVG(exp(xent)) AS avg_ppl
 FROM q JOIN bounds ON q.lang = bounds.lang
 GROUP BY 1, 2
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -406,7 +391,7 @@ def zipf_token_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     zipf_token_panel,
     f"""
 WITH freq AS (
@@ -522,7 +507,7 @@ def dq_table_profile(
     )
 
 
-_register(
+register(
     dq_table_profile,
     "\nUNION ALL\n".join(
         f"""
@@ -613,7 +598,7 @@ def dq_referential_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_register(
+register(
     dq_referential_checks,
     """
 SELECT 'orders_pk_unique' AS check_name,
@@ -711,7 +696,7 @@ def release_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     release_length_buckets,
     f"""
 WITH per AS (
@@ -791,7 +776,7 @@ def corpus_drift_js(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     corpus_drift_js,
     """
 WITH tok AS (
@@ -1005,7 +990,7 @@ FROM f GROUP BY 1
 """
 
 
-_register(quality_gopher_rules, _gopher_oracle())
+register(quality_gopher_rules, _gopher_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1098,7 +1083,7 @@ GROUP BY 1, 2
 """
 
 
-_register(text_ngram_novelty, _novelty_oracle())
+register(text_ngram_novelty, _novelty_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1221,7 +1206,7 @@ FROM wt JOIN fin ON fin.item = wt.i
 """
 
 
-_register(pref_bradley_terry, _bt_oracle())
+register(pref_bradley_terry, _bt_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1348,7 +1333,7 @@ SELECT query_id, doc_id, score, rk FROM ranked WHERE rk <= {BM25_TOPK}
 """
 
 
-_register(retrieval_bm25_topk, _bm25_oracle())
+register(retrieval_bm25_topk, _bm25_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1397,7 +1382,7 @@ def curriculum_length_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     curriculum_length_phases,
     """
 WITH d AS (
@@ -1492,7 +1477,7 @@ FROM (SELECT {cols}, COUNT(*) AS n FROM {table} GROUP BY {cols})"""
     return "\nUNION ALL\n".join(legs)
 
 
-_register(dq_k_anonymity, _k_anon_oracle())
+register(dq_k_anonymity, _k_anon_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1593,7 +1578,7 @@ FROM per_q p JOIN n_rel n ON p.query_id = n.query_id
 """
 
 
-_register(retrieval_eval_panel, _retrieval_eval_oracle())
+register(retrieval_eval_panel, _retrieval_eval_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1646,7 +1631,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     dp_noisy_counts,
     f"""
 WITH counts AS (
@@ -1770,7 +1755,7 @@ def url_canonicalize_hostdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     url_canonicalize_hostdedup,
     f"""
 WITH raw AS (
@@ -1856,7 +1841,7 @@ def phrase_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     phrase_search_topk,
     f"""
 WITH toks AS (
@@ -1954,7 +1939,7 @@ def entity_resolution_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     entity_resolution_blocking,
     f"""
 WITH src AS (
@@ -2183,7 +2168,7 @@ FROM data
 """
 
 
-_register(quality_classifier_score, _qc_oracle_sql())
+register(quality_classifier_score, _qc_oracle_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -2257,7 +2242,7 @@ def quality_calibration_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     quality_calibration_panel,
     f"""
 WITH scored AS (
@@ -2360,7 +2345,7 @@ def _epoch_budget_ctes() -> str:
     from .llm import MIX_ALPHA, MIX_BUDGET_EPOCHS
 
     return f"""impact AS (
-{_llm.ORACLE["dedup_impact_panel"].strip()}
+{ORACLE["dedup_impact_panel"].strip()}
 ), per AS (
   SELECT source,
          CAST(SUM(n_tokens) - SUM(tokens_removed) AS BIGINT)
@@ -2382,7 +2367,7 @@ b AS (
 )"""
 
 
-_register(
+register(
     epoch_repetition_budget,
     f"""
 WITH {_epoch_budget_ctes()}
@@ -2445,7 +2430,7 @@ def mixture_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     mixture_epoch_schedule,
     f"""
 WITH {_epoch_budget_ctes()},

@@ -29,8 +29,6 @@ NumPy in tests/ — mirroring the reference's CPU-vs-GPU self-verification.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,16 +39,7 @@ from ..functions.kmeans import kmeans
 from ..functions.logreg import train
 from ..queries.ml import CENTROIDS
 from ..tables import load
-
-ORACLE: dict[str, str] = {}
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def _register(fn: Callable, sql: str | None) -> Callable:
-    QUERIES[fn.__name__] = fn
-    if sql is not None:
-        ORACLE[fn.__name__] = sql
-    return fn
+from ._util import register
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +53,7 @@ def vector_add_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vector_add(ev, "a", "b", out="s", keep=("event_id",))
 
 
-_register(
+register(
     vector_add_kernel,
     """
 SELECT event_id, value + CAST(user_id AS DOUBLE) AS s FROM events
@@ -99,7 +88,7 @@ def matmul_rows_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("k", F.col("k").cast("long"))
 
 
-_register(
+register(
     matmul_rows_kernel,
     f"""
 SELECT vec_id, ks.k,
@@ -152,7 +141,7 @@ def pi_estimation_weyl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     pi_estimation_weyl,
     f"""
 WITH s AS (
@@ -198,7 +187,7 @@ def dft_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dft(np.asarray(sig), spark, partitions=8)
 
 
-_register(
+register(
     dft_events,
     # O(N²) definition DFT: the oracle mirrors the kernel's exact
     # angle-expression order ((-2π·k·n)/N) so the only Spark↔DuckDB
@@ -217,6 +206,7 @@ SELECT k,
        SUM(sin((-2 * pi() * k * n) / (SELECT N FROM nn)) * x) AS im
 FROM ks CROSS JOIN sig GROUP BY k
 """,
+    memo=False,
 )
 
 
@@ -278,7 +268,7 @@ SELECT cid, cx, cy FROM {prev}
 """
 
 
-_register(kmeans_pipeline, _kmeans_oracle_sql(3))
+register(kmeans_pipeline, _kmeans_oracle_sql(3), memo=False)
 
 
 def logreg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,7 +323,7 @@ SELECT d, (SELECT w FROM {prev})[CAST(d AS INT) + 1] AS weight FROM dims
 """
 
 
-_register(logreg_pipeline, _logreg_oracle_sql(_MM_D, 5, 0.1))
+register(logreg_pipeline, _logreg_oracle_sql(_MM_D, 5, 0.1), memo=False)
 
 
 def _order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,7 +374,7 @@ SELECT vertex, rank FROM {prev}
 """
 
 
-_register(pagerank_pipeline, _pagerank_oracle_sql(5))
+register(pagerank_pipeline, _pagerank_oracle_sql(5), memo=False)
 
 
 def connected_components_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,7 +382,7 @@ def connected_components_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     return connected_components(_order_edges(spark, sf_dir), max_iterations=20)
 
 
-_register(
+register(
     connected_components_pipeline,
     # Exact-integer oracle: component = min vertex id reachable, computed
     # by a recursive-CTE transitive closure. Valid because the delta
@@ -412,6 +402,7 @@ WITH RECURSIVE und AS (
 )
 SELECT vertex, MIN(reach) AS component FROM r GROUP BY vertex
 """,
+    memo=False,
 )
 
 
@@ -483,4 +474,4 @@ SELECT vertex, distance FROM {prev}
 """
 
 
-_register(sssp_pipeline, _sssp_oracle_sql(18))
+register(sssp_pipeline, _sssp_oracle_sql(18), memo=False)

@@ -23,9 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..tables import load
-from ._util import DEC, davg, davg_sql, dsum, dsum_sql
-
-ORACLE: dict[str, str] = {}
+from ._util import DEC, davg, davg_sql, dsum, dsum_sql, register
 
 
 # ---------------------------------------------------------------------------
@@ -37,9 +35,9 @@ def q01_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.filter(F.col("l_quantity") > 30).select("l_orderkey", "l_extendedprice")
 
 
-ORACLE["q01_filter_project"] = """
+register(q01_filter_project, """
 SELECT l_orderkey, l_extendedprice FROM lineitem WHERE l_quantity > 30
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -56,14 +54,14 @@ def q02_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q02_global_agg"] = f"""
+register(q02_global_agg, f"""
 SELECT {dsum_sql('l_extendedprice')} AS sum_price,
        MIN(l_extendedprice) AS min_price,
        MAX(l_extendedprice) AS max_price,
        {davg_sql('l_extendedprice')} AS avg_price,
        COUNT(*) AS cnt
 FROM lineitem
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -91,7 +89,7 @@ def q03_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q03_tpch_q1"] = f"""
+register(q03_tpch_q1, f"""
 SELECT l_returnflag, l_linestatus,
        {dsum_sql('l_quantity')} AS sum_qty,
        {dsum_sql('l_extendedprice')} AS sum_base_price,
@@ -109,7 +107,7 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -140,7 +138,7 @@ def q04_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q04_tpch_q3"] = """
+register(q04_tpch_q3, """
 SELECT l_orderkey, o_orderdate,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
@@ -151,7 +149,7 @@ WHERE c_mktsegment = 'BUILDING'
   AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
   AND l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
 GROUP BY l_orderkey, o_orderdate
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -172,12 +170,12 @@ def q05_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q05_outer_join"] = """
+register(q05_outer_join, """
 SELECT COUNT(*) AS total_rows,
        CAST(SUM(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_customer_side,
        CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_order_side
 FROM customer FULL OUTER JOIN orders ON c_custkey = o_custkey
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -200,13 +198,13 @@ def q06_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q06_broadcast_join"] = f"""
+register(q06_broadcast_join, f"""
 SELECT r_name, COUNT(*) AS n_suppliers, {dsum_sql('s_acctbal')} AS sum_acctbal
 FROM supplier
 JOIN nation ON s_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -226,13 +224,13 @@ def q07_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_orders.crossJoin(without_orders)
 
 
-ORACLE["q07_semi_anti"] = """
+register(q07_semi_anti, """
 SELECT
   (SELECT COUNT(*) FROM customer
    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_with_orders,
   (SELECT COUNT(*) FROM customer
    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_without_orders
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -257,14 +255,14 @@ def q08_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q08_cogroup"] = """
+register(q08_cogroup, """
 SELECT COALESCE(c.c_custkey, o.o_custkey) AS custkey,
        COALESCE(c.n_cust, 0) AS n_cust,
        COALESCE(o.n_orders, 0) AS n_orders
 FROM (SELECT c_custkey, COUNT(*) AS n_cust FROM customer GROUP BY c_custkey) c
 FULL OUTER JOIN (SELECT o_custkey, COUNT(*) AS n_orders FROM orders GROUP BY o_custkey) o
 ON c.c_custkey = o.o_custkey
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -281,11 +279,11 @@ def q09_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q09_cross"] = """
+register(q09_cross, """
 SELECT COUNT(*) AS cnt,
        CAST(SUM(r_regionkey * n_nationkey) AS BIGINT) AS checksum
 FROM region CROSS JOIN nation
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -296,9 +294,9 @@ def q10_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select("l_returnflag", "l_linestatus").distinct()
 
 
-ORACLE["q10_distinct"] = """
+register(q10_distinct, """
 SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -322,13 +320,13 @@ def q11_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q11_maxby"] = """
+register(q11_maxby, """
 SELECT o_custkey, o_orderkey AS best_orderkey, o_totalprice AS best_totalprice
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
                                    ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
       FROM orders)
 WHERE rn = 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -343,10 +341,10 @@ def q12_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q12_topk_global"] = """
+register(q12_topk_global, """
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-"""
+""")
 
 
 def q12_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,13 +359,13 @@ def q12_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q12_topk_per_group"] = """
+register(q12_topk_per_group, """
 SELECT c_mktsegment, c_custkey, c_acctbal, CAST(rn AS BIGINT) AS rn
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY c_mktsegment
                                    ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
       FROM customer)
 WHERE rn <= 3
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -384,12 +382,12 @@ def q13_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q13_union_distinct"] = """
+register(q13_union_distinct, """
 SELECT COUNT(*) AS cnt, CAST(SUM(o_orderkey) AS BIGINT) AS key_checksum
 FROM (SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 2 = 0
       UNION
       SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey < 1000)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -406,11 +404,11 @@ def q14_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q14_rollup"] = f"""
+register(q14_rollup, f"""
 SELECT l_returnflag, l_linestatus,
        {dsum_sql('l_quantity')} AS sum_qty, COUNT(*) AS cnt
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -432,7 +430,7 @@ def q15_over_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q15_over_windows"] = """
+register(q15_over_windows, """
 SELECT o_custkey, o_orderkey,
        CAST(ROW_NUMBER() OVER w AS BIGINT) AS order_seq,
        CAST(RANK() OVER (PARTITION BY o_custkey
@@ -441,7 +439,7 @@ SELECT o_custkey, o_orderkey,
        LEAD(o_totalprice, 1) OVER w AS next_price
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -472,7 +470,7 @@ def q16_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q16_scalar_functions"] = """
+register(q16_scalar_functions, """
 SELECT o_orderkey,
        UPPER(SUBSTR(o_orderpriority, 3, 10)) AS prio_word,
        CAST(LENGTH(o_orderstatus) AS BIGINT) AS status_len,
@@ -482,7 +480,7 @@ SELECT o_orderkey,
        CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(0.1 AS DECIMAL(2,1)), 2) AS DOUBLE) AS tithe,
        CONCAT('C', CAST(o_custkey AS VARCHAR)) AS cust_tag
 FROM orders
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -511,7 +509,7 @@ def q23_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q23_tpch_q10"] = """
+register(q23_tpch_q10, """
 SELECT c_custkey, c_name, n_name,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
@@ -522,7 +520,7 @@ WHERE l_returnflag = 'R' AND l_orderkey = o_orderkey
 GROUP BY c_custkey, c_name, n_name
 ORDER BY revenue DESC, c_custkey ASC
 LIMIT 20
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -555,7 +553,7 @@ def q24_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q24_promo_revenue"] = """
+register(q24_promo_revenue, """
 WITH j AS (
   SELECT CAST(l_extendedprice AS DECIMAL(18,4))
          * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS rev,
@@ -567,7 +565,7 @@ SELECT CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev ELSE CAST(0 AS DECIMAL(18,4)
        100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
          / CAST(SUM(rev) AS DOUBLE) AS promo_pct
 FROM j
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -587,7 +585,7 @@ def q25_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.crossJoin(only_even)
 
 
-ORACLE["q25_intersect_except"] = """
+register(q25_intersect_except, """
 SELECT
   (SELECT COUNT(*) FROM
     (SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0
@@ -597,7 +595,7 @@ SELECT
     (SELECT DISTINCT o_custkey FROM orders WHERE o_orderkey % 2 = 0
      EXCEPT
      SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')) AS n_except
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -613,13 +611,13 @@ def q26_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q26_count_distinct"] = """
+register(q26_count_distinct, """
 SELECT l_returnflag,
        COUNT(DISTINCT l_partkey) AS nd_parts,
        COUNT(DISTINCT l_suppkey) AS nd_supps,
        COUNT(*) AS cnt
 FROM lineitem GROUP BY l_returnflag
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -643,14 +641,14 @@ def q27_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q27_sql_api"] = """
+register(q27_sql_api, """
 SELECT o_orderpriority,
        COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
 GROUP BY o_orderpriority
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -682,12 +680,12 @@ def q29_reduce_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q29_reduce_group"] = """
+register(q29_reduce_group, """
 SELECT l_returnflag, COUNT(*) AS n,
        MIN(l_orderkey) AS first_key, MAX(l_orderkey) AS last_key,
        CAST(SUM(l_orderkey) AS BIGINT) AS key_checksum
 FROM lineitem GROUP BY l_returnflag
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -713,10 +711,10 @@ def q28_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q28_pandas_udaf"] = """
+register(q28_pandas_udaf, """
 SELECT event_type, AVG(value) AS mean_value, COUNT(*) AS cnt
 FROM events GROUP BY event_type
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -747,7 +745,7 @@ def q30_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q30_tpch_q5"] = """
+register(q30_tpch_q5, """
 SELECT n_name,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
@@ -758,7 +756,7 @@ WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey
   AND c_nationkey = n_nationkey AND n_regionkey = r_regionkey
   AND r_name = 'ASIA'
 GROUP BY n_name
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -779,14 +777,14 @@ def q31_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q31_tpch_q18"] = f"""
+register(q31_tpch_q18, f"""
 SELECT o_orderkey, o_custkey, o_totalprice, total_qty
 FROM orders
 JOIN (SELECT l_orderkey, {dsum_sql('l_quantity')} AS total_qty
       FROM lineitem GROUP BY l_orderkey
       HAVING {dsum_sql('l_quantity')} > 150) big
   ON o_orderkey = big.l_orderkey
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -808,12 +806,12 @@ def q32_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q32_correlated_subquery"] = """
+register(q32_correlated_subquery, """
 SELECT c_custkey, c_nationkey, c_acctbal
 FROM customer c
 WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer
                    WHERE c_nationkey = c.c_nationkey)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -840,7 +838,7 @@ def q33_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q33_window_frames"] = """
+register(q33_window_frames, """
 SELECT o_custkey, o_orderkey,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER w AS DOUBLE) AS running_total,
        FIRST_VALUE(o_orderkey) OVER w AS first_order,
@@ -848,7 +846,7 @@ SELECT o_custkey, o_orderkey,
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -866,11 +864,11 @@ def q34_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q34_explode_tokens"] = """
+register(q34_explode_tokens, """
 SELECT token, COUNT(*) AS n
 FROM (SELECT unnest(string_split(o_orderpriority, '-')) AS token FROM orders)
 GROUP BY token
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -888,13 +886,13 @@ def q35_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q35_percentiles"] = """
+register(q35_percentiles, """
 SELECT o_orderstatus,
        quantile_cont(o_totalprice, 0.5) AS p50,
        quantile_cont(o_totalprice, 0.9) AS p90,
        COUNT(*) AS cnt
 FROM orders GROUP BY o_orderstatus
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -965,7 +963,7 @@ def q49_approx_aggregates(
     )
 
 
-ORACLE["q49_approx_aggregates"] = """
+register(q49_approx_aggregates, """
 SELECT l_returnflag,
        COUNT(*) AS cnt,
        COUNT(DISTINCT l_partkey) AS exact_nd,
@@ -976,7 +974,7 @@ SELECT l_returnflag,
            - quantile_cont(l_extendedprice, 0.5))
          <= 0.01 * quantile_cont(l_extendedprice, 0.5) AS p50_within_band
 FROM lineitem GROUP BY l_returnflag
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -996,16 +994,9 @@ def q50_cube_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q50_cube_grouping_id"] = f"""
+register(q50_cube_grouping_id, f"""
 SELECT l_returnflag, l_linestatus,
        {dsum_sql('l_quantity')} AS sum_qty, COUNT(*) AS cnt,
        GROUPING(l_returnflag, l_linestatus) AS gid
 FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-QUERIES = {
-    name: fn
-    for name, fn in sorted(globals().items())
-    if name.startswith("q") and callable(fn)
-}
+""")

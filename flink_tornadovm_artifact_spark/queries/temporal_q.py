@@ -14,16 +14,12 @@ semantics, which makes the differential check strong.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.temporal import temporal_join
 from ..tables import load
-
-ORACLE: dict[str, str] = {}
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+from ._util import register
 
 
 def temporal_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,8 +53,7 @@ def temporal_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["temporal_join_events"] = temporal_join_events
-ORACLE["temporal_join_events"] = """
+register(temporal_join_events, """
 WITH s AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, value AS signup_value,
          ROW_NUMBER() OVER (PARTITION BY user_id, ts
@@ -74,7 +69,7 @@ f AS (
 SELECT f.purchase_id, f.user_id, f.purchase_ts, f.purchase_value,
        v.signup_value
 FROM f ASOF JOIN v ON f.user_id = v.user_id AND f.purchase_ts >= v.vts
-"""
+""")
 
 
 def hypertable_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,8 +86,7 @@ def hypertable_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["hypertable_rollup_events"] = hypertable_rollup_events
-ORACLE["hypertable_rollup_events"] = """
+register(hypertable_rollup_events, """
 SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS bucket_start,
        event_type,
        CAST(COUNT(*) AS BIGINT) AS n,
@@ -102,7 +96,7 @@ SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS bucket_start,
        SUM(value) / COUNT(*) AS avg_v
 FROM events
 GROUP BY 1, 2
-"""
+""")
 
 
 RANGE_LOWER, RANGE_UPPER = 1.0, 5.0
@@ -130,15 +124,14 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
-QUERIES["range_join_events"] = range_join_events
-ORACLE["range_join_events"] = f"""
+register(range_join_events, f"""
 SELECT a.user_id AS user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs
 FROM events a JOIN events b
   ON a.user_id = b.user_id
  AND b.value BETWEEN a.value + {RANGE_LOWER} AND a.value + {RANGE_UPPER}
  AND a.event_id <> b.event_id
 GROUP BY a.user_id
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -219,8 +212,7 @@ def hypertable_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["hypertable_gapfill_locf"] = hypertable_gapfill_locf
-ORACLE["hypertable_gapfill_locf"] = """
+register(hypertable_gapfill_locf, """
 WITH e AS (
   SELECT user_id,
          CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 3600) AS BIGINT) AS h,
@@ -247,7 +239,7 @@ SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_hours_span,
        AVG(hv) AS observed_avg,
        AVG(fv) AS locf_avg
 FROM l GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -336,8 +328,7 @@ def funnel_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["funnel_conversion_events"] = funnel_conversion_events
-ORACLE["funnel_conversion_events"] = f"""
+register(funnel_conversion_events, f"""
 WITH s1 AS (
   SELECT user_id, MIN(ts) AS t1 FROM events
   WHERE event_type = '{FUNNEL_STEPS[0]}' GROUP BY 1
@@ -366,7 +357,7 @@ SELECT CAST(2 AS INTEGER), '{FUNNEL_STEPS[1]}', CAST(n2 AS BIGINT),
 UNION ALL
 SELECT CAST(3 AS INTEGER), '{FUNNEL_STEPS[2]}', CAST(n3 AS BIGINT),
        n3 * 1.0 / n2, n3 * 1.0 / n1 FROM c
-"""
+""")
 
 
 # ---------------------------------------------------------------------------

@@ -31,9 +31,8 @@ from pyspark.sql import functions as F
 
 from ..functions.sizing import spread_scan
 from ..tables import load
-from ._util import DEC, dsum, dsum_sql
+from ._util import DEC, dsum, dsum_sql, register
 
-ORACLE: dict[str, str] = {}
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))"
 
@@ -66,7 +65,7 @@ def q37_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q37_tpch_q4"] = """
+register(q37_tpch_q4, """
 SELECT o_orderpriority, COUNT(*) AS n_orders
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -74,7 +73,7 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND EXISTS (SELECT 1 FROM lineitem
               WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
 GROUP BY o_orderpriority
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -104,7 +103,7 @@ def q38_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q38_tpch_q6"] = """
+register(q38_tpch_q6, """
 SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
               * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
        COUNT(*) AS n_lines
@@ -113,7 +112,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
   AND l_discount BETWEEN 0.02 AND 0.06
   AND l_quantity < 24
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -138,7 +137,7 @@ def q39_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q39_tpch_q12"] = """
+register(q39_tpch_q12, """
 SELECT l_returnflag,
        CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
        CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
@@ -146,7 +145,7 @@ FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
 GROUP BY l_returnflag
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -170,14 +169,14 @@ def q40_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q40_tpch_q13"] = """
+register(q40_tpch_q13, """
 SELECT c_count, COUNT(*) AS custdist
 FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
       FROM customer LEFT OUTER JOIN orders
         ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
       GROUP BY c_custkey)
 GROUP BY c_count
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -202,13 +201,13 @@ def q41_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q41_tpch_q16"] = """
+register(q41_tpch_q16, """
 SELECT p_brand, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE p_type <> 'PROMO' AND p_size IN (1, 5, 9, 13)
   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY p_brand, p_size
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -237,14 +236,14 @@ def q42_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q42_tpch_q17"] = f"""
+register(q42_tpch_q17, f"""
 SELECT {dsum_sql('l_extendedprice')} / 7.0 AS avg_yearly,
        COUNT(*) AS n_lines
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE p_brand = 'Brand#3'
   AND l_quantity < (SELECT 0.5 * ({dsum_sql('l_quantity')} / COUNT(l_quantity))
                     FROM lineitem WHERE l_partkey = p_partkey)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -278,13 +277,13 @@ def q43_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q43_tpch_q19"] = f"""
+register(q43_tpch_q19, f"""
 SELECT CAST(SUM({_REV}) AS DOUBLE) AS revenue, COUNT(*) AS n_lines
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 11)
    OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 10 AND 20)
    OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 30 AND l_quantity BETWEEN 20 AND 30)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -319,14 +318,14 @@ def q44_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q44_tpch_q22"] = f"""
+register(q44_tpch_q22, f"""
 SELECT c_nationkey, COUNT(*) AS numcust, {dsum_sql('c_acctbal')} AS totacctbal
 FROM customer
 WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
   AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                   AND o_orderdate >= DATE '2000-01-01')
 GROUP BY c_nationkey
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -368,7 +367,7 @@ def q45_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q45_tpch_q7"] = f"""
+register(q45_tpch_q7, f"""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(YEAR(l_shipdate) AS BIGINT) AS l_year,
        CAST(SUM({_REV}) AS DOUBLE) AS revenue
@@ -381,7 +380,7 @@ JOIN nation n2 ON c_nationkey = n2.n_nationkey
 WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
 GROUP BY n1.n_name, n2.n_name, YEAR(l_shipdate)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -429,7 +428,7 @@ def q46_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q46_tpch_q8"] = f"""
+register(q46_tpch_q8, f"""
 WITH vols AS (
   SELECT YEAR(o_orderdate) AS o_year,
          {_REV} AS vol,
@@ -450,7 +449,7 @@ SELECT CAST(o_year AS BIGINT) AS o_year,
          / CAST(SUM(vol) AS DOUBLE) AS mkt_share
 FROM vols
 GROUP BY o_year
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -481,7 +480,7 @@ def q47_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q47_tpch_q15"] = f"""
+register(q47_tpch_q15, f"""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
          CAST(SUM({_REV}) AS DOUBLE) AS total_revenue
@@ -493,7 +492,7 @@ WITH revenue AS (
 SELECT supplier_no, total_revenue
 FROM revenue
 WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -518,13 +517,13 @@ def q48_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q48_tpch_q11"] = f"""
+register(q48_tpch_q11, f"""
 SELECT l_partkey, {dsum_sql('l_extendedprice')} AS part_value
 FROM lineitem
 GROUP BY l_partkey
 HAVING {dsum_sql('l_extendedprice')} >
        (SELECT {dsum_sql('l_extendedprice')} * 0.0006 FROM lineitem)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -576,7 +575,7 @@ def q51_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q51_tpch_q9"] = f"""
+register(q51_tpch_q9, f"""
 SELECT n_name AS nation, CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
        CAST(SUM({_REV}
                 - CAST(0.01 AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4))
@@ -588,7 +587,7 @@ JOIN part     ON l_partkey = p_partkey
 JOIN nation   ON s_nationkey = n_nationkey
 WHERE p_name LIKE '%e%'
 GROUP BY n_name, YEAR(o_orderdate)
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -657,7 +656,7 @@ def q53_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q53_tpch_q2"] = """
+register(q53_tpch_q2, """
 WITH supply AS (
   SELECT l_partkey AS partkey, l_suppkey AS suppkey,
          MIN(l_extendedprice / l_quantity) AS cost
@@ -677,7 +676,7 @@ FROM offers o
 WHERE cost = (SELECT MIN(cost) FROM offers i WHERE i.p_partkey = o.p_partkey)
 ORDER BY s_acctbal DESC, n_name, s_name, p_partkey, s_suppkey
 LIMIT 100
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -732,7 +731,7 @@ def q54_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q54_tpch_q20"] = """
+register(q54_tpch_q20, """
 SELECT s_name, s_acctbal
 FROM supplier
 JOIN nation ON s_nationkey = n_nationkey
@@ -751,7 +750,7 @@ WHERE r_name = 'EUROPE'
                        AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
                       THEN CAST(l_quantity AS DECIMAL(18,4)) END)
   )
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -810,7 +809,7 @@ def q55_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q55_tpch_q21"] = """
+register(q55_tpch_q21, """
 SELECT s_name, COUNT(*) AS numwait
 FROM lineitem l1
 JOIN orders   ON l1.l_orderkey = o_orderkey
@@ -828,7 +827,7 @@ WHERE o_orderstatus = 'F'
                     AND l3.l_suppkey <> l1.l_suppkey
                     AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
 GROUP BY s_name
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -865,7 +864,7 @@ def q56_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q56_tpch_q14"] = f"""
+register(q56_tpch_q14, f"""
 SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_REV}
                              ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
              / CAST(SUM({_REV}) AS DOUBLE)       AS promo_revenue_pct,
@@ -874,11 +873,4 @@ SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_REV}
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-"""
-
-
-QUERIES = {
-    name: fn
-    for name, fn in sorted(globals().items())
-    if name.startswith("q") and callable(fn)
-}
+""")

@@ -12,22 +12,12 @@ sample ⊆ input) are pinned in tests/test_operators.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.utils import sample_with_size, zip_with_index, zip_with_unique_id
 from ..tables import load
-
-ORACLE: dict[str, str] = {}
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def _register(fn: Callable, sql: str) -> Callable:
-    QUERIES[fn.__name__] = fn
-    ORACLE[fn.__name__] = sql
-    return fn
+from ._util import register
 
 
 def zip_with_index_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,7 +30,7 @@ def zip_with_index_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     zip_with_index_contract,
     """
 SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -60,7 +50,7 @@ def zip_with_unique_id_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     zip_with_unique_id_contract,
     """
 SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -78,7 +68,7 @@ def sample_with_size_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.agg(F.count(F.lit(1)).alias("cnt"))
 
 
-_register(
+register(
     sample_with_size_contract,
     f"""
 SELECT CAST(LEAST({_SAMPLE_K}, COUNT(*)) AS BIGINT) AS cnt FROM documents

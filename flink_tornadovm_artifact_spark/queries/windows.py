@@ -14,9 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load
-from ._util import dsum, dsum_sql
-
-ORACLE: dict[str, str] = {}
+from ._util import dsum, dsum_sql, register
 
 
 # ---------------------------------------------------------------------------
@@ -36,11 +34,11 @@ def q21_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q21_tumbling_window"] = f"""
+register(q21_tumbling_window, f"""
 SELECT time_bucket(INTERVAL '10 minutes', ts) AS win_start, event_type,
        COUNT(*) AS cnt, {dsum_sql('value')} AS sum_value
 FROM events GROUP BY win_start, event_type
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -56,7 +54,7 @@ def q21_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q21_sliding_window"] = f"""
+register(q21_sliding_window, f"""
 WITH assigned AS (
   SELECT time_bucket(INTERVAL '5 minutes', ts) AS win_start, value FROM events
   UNION ALL
@@ -65,7 +63,7 @@ WITH assigned AS (
 )
 SELECT win_start, COUNT(*) AS cnt, {dsum_sql('value')} AS sum_value
 FROM assigned GROUP BY win_start
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +85,7 @@ def q21_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q21_session_window"] = f"""
+register(q21_session_window, f"""
 WITH marked AS (
   SELECT user_id, ts, value, event_id,
          CASE WHEN LAG(ts) OVER w IS NULL
@@ -104,7 +102,7 @@ WITH marked AS (
 SELECT MIN(ts) AS sess_start, user_id,
        COUNT(*) AS cnt, {dsum_sql('value')} AS sum_value
 FROM numbered GROUP BY user_id, sess_id
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -131,7 +129,7 @@ def q21_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q21_session_window_dynamic"] = f"""
+register(q21_session_window_dynamic, f"""
 WITH ends AS (
   SELECT user_id, ts, value, event_id,
          ts + CASE WHEN event_type = 'click' THEN INTERVAL '5 minutes'
@@ -154,7 +152,7 @@ WITH ends AS (
 SELECT MIN(ts) AS sess_start, user_id,
        COUNT(*) AS cnt, {dsum_sql('value')} AS sum_value
 FROM numbered GROUP BY user_id, sess_id
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -200,18 +198,11 @@ def q22_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q22_interval_join"] = """
+register(q22_interval_join, """
 SELECT a.user_id AS user_id, COUNT(*) AS n_pairs
 FROM events a JOIN events b
   ON a.user_id = b.user_id
  AND b.ts BETWEEN a.ts - INTERVAL '5 minutes' AND a.ts + INTERVAL '5 minutes'
  AND a.event_id < b.event_id
 GROUP BY a.user_id
-"""
-
-
-QUERIES = {
-    name: fn
-    for name, fn in sorted(globals().items())
-    if name.startswith("q") and callable(fn)
-}
+""")

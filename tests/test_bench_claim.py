@@ -31,6 +31,8 @@ import re
 
 import pytest
 
+from tools.bench_compare import delta
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CLAIM_RE = re.compile(
@@ -44,16 +46,8 @@ def _delta(old_path: str, new_path: str) -> tuple[int, float, float]:
         old = json.load(f)["stats"]
     with open(os.path.join(REPO, new_path)) as f:
         new = json.load(f)["stats"]
-    common = sorted(set(old) & set(new))
-    bo = sum(old[q]["best"] for q in common)
-    bn = sum(new[q]["best"] for q in common)
-    mo = sum(old[q]["median"] for q in common)
-    mn = sum(new[q]["median"] for q in common)
-    return (
-        len(common),
-        round(100 * (bn - bo) / bo, 1),
-        round(100 * (mn - mo) / mo, 1),
-    )
+    common, best, median = delta(old, new)
+    return len(common), best[2], median[2]
 
 
 def _claims() -> list[tuple[str, str, int, float, float]]:

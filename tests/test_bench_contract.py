@@ -67,25 +67,10 @@ def test_stats_clobber_guard():
     (b) fewer-query runs, and (c) runs at a DIFFERENT sf — the round-9
     near-miss: a subset smoke at sf0.001 slipped past the original
     same-sf-only comparison and clobbered the n=5 sf0.1 snapshot."""
-    guard_src = open(os.path.join(REPO, "bench.py")).read()
-    # replicate the guard decision exactly as written
-    def decide(prev, sf, reps, stats):
-        if (
-            prev.get("sf") != sf
-            or prev.get("n", 0) > reps
-            or len(prev.get("stats", {})) > len(stats)
-        ):
-            return False
-        return True
-
+    keep = bench.keep_standing_snapshot
     prev = {"sf": 0.1, "n": 5, "stats": {f"q{i}": {} for i in range(108)}}
-    full = {f"q{i}": {} for i in range(108)}
-    assert decide(prev, 0.1, 5, full)          # equal run may refresh
-    assert decide(prev, 0.1, 7, full)          # more reps may refresh
-    assert not decide(prev, 0.1, 3, full)      # driver n=3: keep
-    assert not decide(prev, 0.1, 5, {"a": {}})  # subset: keep
-    assert not decide(prev, 0.001, 9, full)    # other sf: keep (round-9 hole)
-    # and the decision matches the shipped source, so the replica can't
-    # silently drift from bench.py
-    assert 'prev.get("sf") != sf' in guard_src
-    assert 'prev.get("n", 0) > reps' in guard_src
+    assert not keep(prev, 0.1, 5, 108)  # equal run may refresh
+    assert not keep(prev, 0.1, 7, 108)  # more reps may refresh
+    assert keep(prev, 0.1, 3, 108)  # driver n=3: keep
+    assert keep(prev, 0.1, 5, 1)  # subset: keep
+    assert keep(prev, 0.001, 9, 108)  # other sf: keep (round-9 hole)

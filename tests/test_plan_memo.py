@@ -1,8 +1,8 @@
 """The registry-wide plan memo.
 
-``queries/__init__.py`` wraps every registered query except the
-``PLAN_MEMO_EXCLUDE`` set in ``_util.session_memo``: the BUILT lazy
-DataFrame is served per (session applicationId, sf_dir), skipping the
+``_util.register`` wraps every query in ``_util.session_memo``, except
+those registered with ``memo=False``: the BUILT lazy DataFrame is
+served per (session applicationId, sf_dir), skipping the
 repeated Catalyst analysis chain (~59 s summed over the registry at
 sf0.1). These tests pin the three properties that make the memo a
 plan-sharing mechanism and not result caching:
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import shutil
 
-from flink_tornadovm_artifact_spark.queries import PLAN_MEMO_EXCLUDE, QUERIES
+from flink_tornadovm_artifact_spark.queries import QUERIES
 
 from .conftest import SF_SMOKE
 
@@ -61,12 +61,31 @@ def test_excluded_queries_rebuild_every_invocation(spark):
         assert a is not b, name
 
 
-def test_exclusions_are_registered_and_unwrapped():
-    assert PLAN_MEMO_EXCLUDE <= set(QUERIES)
-    for name in PLAN_MEMO_EXCLUDE:
-        assert not hasattr(QUERIES[name], "__wrapped__"), name
-    for name in set(QUERIES) - PLAN_MEMO_EXCLUDE:
-        assert hasattr(QUERIES[name], "__wrapped__"), name
+def test_unmemoized_queries_are_pinned():
+    """Exactly these registry entries are unwrapped (``memo=False``);
+    dropping or adding one changes which builds re-execute per call."""
+    unwrapped = {n for n, fn in QUERIES.items() if not hasattr(fn, "__wrapped__")}
+    assert unwrapped == {
+        "sssp_pipeline",
+        "connected_components_pipeline",
+        "pagerank_pipeline",
+        "label_propagation_communities",
+        "community_detection_labels",
+        "kcore_social",
+        "hits_scores",
+        "kmeans_pipeline",
+        "logreg_pipeline",
+        "decontaminate_verdict_panel",
+        "wordpiece_fertility_panel",
+        "tokenizer_roundtrip_qa",
+        "multimodal_phash_neardup",
+        "embedding_abtt_residuals",
+        "embedding_principal_direction",
+        "dedup_simhash",
+        "dedup_semantic",
+        "bipartite_projection_suppliers",
+        "dft_events",
+    }
 
 
 def test_memoized_plan_recomputes_from_parquet(spark):

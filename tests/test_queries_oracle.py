@@ -33,10 +33,24 @@ def test_query_matches_oracle(name, spark, sf_and_con):
     assert ok, f"{name}@{sf_dir}: {msg}"
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE)))
-def test_rows_only_queries_run(name, spark):
-    df = QUERIES[name](spark, SF_ORACLE)
-    assert df.count() >= 0
+def test_register_rejects_before_touching_the_registry():
+    """A duplicate name or an empty oracle raises before either dict
+    changes, so a bad registration cannot leave a half-declared query."""
+    from flink_tornadovm_artifact_spark.queries._util import register
+
+    def q38_tpch_q6(spark, sf_dir):  # already registered
+        raise AssertionError
+
+    def fresh_query_without_oracle(spark, sf_dir):
+        raise AssertionError
+
+    before = (dict(QUERIES), dict(ORACLE))
+    with pytest.raises(ValueError, match="duplicate"):
+        register(q38_tpch_q6, "SELECT 1")
+    for oracle in ("", None):
+        with pytest.raises(ValueError, match="no oracle"):
+            register(fresh_query_without_oracle, oracle)
+    assert (dict(QUERIES), dict(ORACLE)) == before
 
 
 def test_priority_window_is_first_50_with_oracles():

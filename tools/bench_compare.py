@@ -39,6 +39,22 @@ def _load(spec: str) -> dict:
         return json.load(f)
 
 
+def delta(old: dict, new: dict) -> tuple[list[str], tuple, tuple]:
+    """Compare two ``stats`` maps over the queries both hold:
+    (common names, best, median), each of the last two an
+    (old_sum_s, new_sum_s, pct) triple with pct the relative change of
+    the summed seconds rounded to one decimal (None on a zero old sum).
+    """
+    common = sorted(set(old) & set(new))
+
+    def summed(key: str) -> tuple:
+        o = sum(old[q][key] for q in common)
+        n = sum(new[q][key] for q in common)
+        return o, n, round(100 * (n - o) / o, 1) if o else None
+
+    return common, summed("best"), summed("median")
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--force"]
     force = "--force" in sys.argv
@@ -60,17 +76,13 @@ def main() -> None:
         )
 
     so, sn = old["stats"], new["stats"]
-    common = sorted(set(so) & set(sn))
-    to = sum(so[q]["best"] for q in common)
-    tn = sum(sn[q]["best"] for q in common)
-    mo = sum(so[q]["median"] for q in common)
-    mn = sum(sn[q]["median"] for q in common)
+    common, (to, tn, best_pct), (mo, mn, median_pct) = delta(so, sn)
     if not common or to == 0 or mo == 0:
         sys.exit("no common queries to compare (or old total is 0.0)")
     print(
         f"common {len(common)} queries: best {to:.1f}s -> {tn:.1f}s "
-        f"({100 * (tn - to) / to:+.1f}%), median {mo:.1f}s -> {mn:.1f}s "
-        f"({100 * (mn - mo) / mo:+.1f}%)  [n_old={old.get('n')} "
+        f"({best_pct:+.1f}%), median {mo:.1f}s -> {mn:.1f}s "
+        f"({median_pct:+.1f}%)  [n_old={old.get('n')} "
         f"n_new={new.get('n')} sf={new.get('sf')}]"
     )
     # the SCALE.md claim line, ready to paste (tests/test_bench_claim.py
@@ -87,8 +99,8 @@ def main() -> None:
         if not any(r.startswith("..") for r in rels):
             print(
                 f"    bench-delta: {rels[0]} -> {rels[1]} "
-                f"common={len(common)} best={100 * (tn - to) / to:+.1f}% "
-                f"median={100 * (mn - mo) / mo:+.1f}%"
+                f"common={len(common)} best={best_pct:+.1f}% "
+                f"median={median_pct:+.1f}%"
             )
     movers = [
         (q, so[q]["best"], sn[q]["best"])

@@ -2,10 +2,10 @@
 """Round-12 optimization measurement harness.
 
 For each named query: capture the ``.explain("formatted")`` plan into
-``plans/r12/<query>_<tag>.txt`` and time the noop-sink execution with
-the same interleaved best-of-N + sub-second micro-rep protocol as
-bench.py, so isolated before/after numbers are comparable with the
-committed BENCH_stats snapshots.
+``plans/<query>_<tag>.txt`` (gitignored; ``--out-dir`` overrides) and
+time the noop-sink execution with bench.py's ``time_queries`` (warm-up,
+interleaved best-of-N, sub-second micro-reps), so isolated before/after
+numbers are comparable with the committed BENCH_stats snapshots.
 
 Usage:
   python tools/opt_measure.py --tag before --reps 5 q1 q2 ...
@@ -23,7 +23,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,9 +46,10 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = args.out_dir or os.path.join(repo, "plans", "r12")
+    out_dir = args.out_dir or os.path.join(repo, "plans")
     os.makedirs(out_dir, exist_ok=True)
 
+    from bench import time_queries
     from flink_tornadovm_artifact_spark.queries import QUERIES
     from flink_tornadovm_artifact_spark.session import get_spark
 
@@ -71,43 +71,7 @@ def main() -> None:
     if args.plan_only:
         return
 
-    # Warm codegen/JIT at the smallest sf (bench.py protocol).
-    warm_dir = "/root/testdata/sf0.001"
-    for name in names:
-        try:
-            QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
-
-    MICRO_REPS, MICRO_CUTOFF_S = 3, 1.0
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
-
-    rep_times: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(args.reps):
-        for name in names:
-            spark.sparkContext.setJobDescription(f"opt_measure:{name}")
-            t = run_once(name)
-            if t < MICRO_CUTOFF_S:
-                t = min([t] + [run_once(name) for _ in range(MICRO_REPS - 1)])
-            rep_times[name].append(t)
-            spark.sparkContext.setJobDescription(None)
-
-    stats = {
-        n: {
-            "best": round(min(ts), 3),
-            "median": round(sorted(ts)[len(ts) // 2], 3),
-            "spread": round(max(ts) - min(ts), 3),
-        }
-        for n, ts in rep_times.items()
-    }
+    stats = time_queries(spark, QUERIES, names, sf_dir, args.reps, "opt_measure")
     print(json.dumps({"stats": stats, "sf_dir": sf_dir, "n": args.reps}))
 
 
