@@ -139,42 +139,3 @@ def register(fn: Callable, oracle: str, memo: bool = True) -> Callable:
     ORACLE[name] = oracle
     return fn
 
-
-def twin_batch(pdfs, key, last_ts_us: int, last_eid: int):
-    """Materialize one keyed group's micro-batch for a streaming twin and
-    enforce the family's ordering contract as a MECHANISM, not prose.
-
-    ``applyInPandasWithState`` hands the group's micro-batch as an
-    iterator of Arrow chunks (split at
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``) in no guaranteed
-    time order, so per-chunk sorting is NOT a per-batch sort. This helper
-    concatenates ALL chunks first and sorts the whole batch once by
-    (ts, event_id) — the batch queries' exact window order.
-
-    Across batches the twins require a per-key event-time-ordered feed
-    (a log-compacted topic / sorted replay provides it; otherwise compose
-    ``streaming.order.ordered_events_stream`` upstream). That contract is
-    asserted LOUDLY here: a batch whose first event is at or before the
-    key's stored (last_ts_us, last_eid) position raises instead of
-    silently miscounting. Returns None for an empty batch.
-    """
-    import pandas as pd
-
-    parts = [p for p in pdfs if len(p)]
-    if not parts:
-        return None
-    pdf = parts[0] if len(parts) == 1 else pd.concat(parts)
-    pdf = pdf.sort_values(["ts", "event_id"])
-    first = (
-        int(pdf["ts"].astype("int64").iloc[0]) // 1_000,
-        int(pdf["event_id"].iloc[0]),
-    )
-    if last_eid >= 0 and first <= (last_ts_us, last_eid):
-        raise ValueError(
-            f"streaming-twin ordering contract violated for key {key}: "
-            f"batch starts at (ts_us, event_id)={first} but state is "
-            f"already past ({last_ts_us}, {last_eid}); feed this twin a "
-            "per-key event-time-ordered stream (compose "
-            "streaming.order.ordered_events_stream upstream)"
-        )
-    return pdf

@@ -1229,28 +1229,24 @@ def session_path_stream(
 # ---------------------------------------------------------------------------
 # Streaming twin of the Markov transition build: the batch query's
 # per-user lead() window cannot run on an unbounded stream, so the
-# chaining state (each user's LAST event) moves into keyed state via
-# ``applyInPandasWithState`` — the engine's custom-stateful-operator
-# surface (the analog of the reference's KeyedProcessFunction +
-# ValueState idiom: FT flink-streaming-java .../functions/
+# chaining state (each user's LAST event) moves into keyed state, folded
+# by ``streaming.order.keyed_fold`` — the engine's custom-stateful-
+# operator surface (the analog of the reference's KeyedProcessFunction
+# + ValueState idiom: FT flink-streaming-java .../functions/
 # KeyedProcessFunction.java with per-key state as in
 # KeyedStream.java:1009's queryable ValueState; see streaming/core.py
 # for the family mapping). Each micro-batch emits the per-user
 # (from_type, to_type) transition-count INCREMENTS observed in that
 # batch, chained across batches through the stored last event; a
 # downstream aggregation (or the test's store) folds increments into
-# the same transition matrix as the batch query.
-# Ordering contract (MECHANIZED, round 10): the whole micro-batch is
-# materialized and sorted ONCE by (ts, event_id) — the batch query's
-# exact lead() order — via ``_util.twin_batch`` (per-chunk sorting is
-# wrong: applyInPandasWithState splits a group's batch across Arrow
-# chunks in no guaranteed time order). Across batches the per-user
-# feed must be event-time-ordered; twin_batch RAISES on violation
-# instead of silently miscounting, and
-# ``streaming.order.ordered_events_stream`` is the shipped
-# watermark-buffered reorder stage to compose upstream when the raw
-# feed is unordered. State per user is ONE (type, ts, event_id)
-# triple — constant, never event-bounded.
+# the same transition matrix as the batch query. The driver folds the
+# whole micro-batch in (ts, event_id) order — the batch query's exact
+# lead() order — and enforces the per-user cross-batch ordering
+# contract (a feed out of order raises;
+# ``streaming.order.ordered_events_stream`` is the reorder stage to
+# compose upstream when the raw feed is unordered).
+# State per user is ONE (type, ts, event_id) triple — constant, never
+# event-bounded.
 # ---------------------------------------------------------------------------
 def markov_transitions_stream(events_stream: DataFrame) -> DataFrame:
     """Per-micro-batch transition-count increments over an events
@@ -1258,46 +1254,24 @@ def markov_transitions_stream(events_stream: DataFrame) -> DataFrame:
     Emits (user_id, from_type, to_type, n_trans) rows in append mode;
     sum n_trans by (from_type, to_type) downstream to recover the
     batch ``markov_event_transitions`` counts."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from ..streaming.order import keyed_fold
 
-    from ._util import twin_batch
-
-    def chain(key, pdfs, state: GroupState):
-        last_type, _last_ts, _last_eid = (
-            state.get if state.exists else (None, -1, -1)
-        )
-        pdf = twin_batch(pdfs, key, _last_ts, _last_eid)
-        if pdf is None:
-            return
+    def chain(state, rows, _wm):
+        (last_type,) = state
         counts: dict = {}
-        us = pdf["ts"].astype("int64") // 1_000
-        for ts_us, eid, et in zip(us, pdf["event_id"], pdf["event_type"]):
+        for et in rows["event_type"].tolist():
             if last_type is not None:
                 k = (last_type, et)
                 counts[k] = counts.get(k, 0) + 1
-            last_type, _last_ts, _last_eid = et, int(ts_us), int(eid)
-        if last_type is not None:
-            state.update((last_type, _last_ts, _last_eid))
-        if counts:
-            ks = sorted(counts)
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(ks),
-                    "from_type": [k[0] for k in ks],
-                    "to_type": [k[1] for k in ks],
-                    "n_trans": [counts[k] for k in ks],
-                }
-            )
+            last_type = et
+        return (last_type,), [(*k, counts[k]) for k in sorted(counts)], None
 
-    return events_stream.groupBy("user_id").applyInPandasWithState(
+    return keyed_fold(
+        events_stream,
         chain,
-        outputStructType=(
-            "user_id long, from_type string, to_type string, n_trans long"
-        ),
-        stateStructType="last_type string, last_ts_us long, last_eid long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "last_type string",
+        (None,),
+        "from_type string, to_type string, n_trans long",
     )
 
 
@@ -1312,62 +1286,39 @@ def markov_transitions_stream(events_stream: DataFrame) -> DataFrame:
 # State per user is the cohort week + the offset set — bounded by the
 # OBSERVATION SPAN in weeks (a time bound, not an event bound), the
 # same boundedness class as the batch query's weeks² output — plus the
-# (ts, event_id) feed position backing the family's mechanized
-# ordering guard (``_util.twin_batch``). Under the event-time-ordered
-# feed contract the first-seen week IS the min week, so cohort
-# assignment matches the batch MIN exactly; an out-of-order feed now
-# raises instead of silently assigning a later cohort (compose
-# ``streaming.order.ordered_events_stream`` upstream to provide the
-# order).
+# (ts, event_id) feed position ``streaming.order.keyed_fold`` checks
+# the ordering contract against. Under that contract the first-seen
+# week IS the min week, so cohort assignment matches the batch MIN
+# exactly; an out-of-order feed raises instead of silently assigning a
+# later cohort.
 # ---------------------------------------------------------------------------
 def cohort_retention_stream(events_stream: DataFrame) -> DataFrame:
     """Append-mode (user_id, cohort_week, week_offset) increments over
     an events STREAM with columns (ts timestamp, user_id, event_id,
     ...). Each (user, week) is credited exactly once across the whole
     stream."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from ..streaming.order import keyed_fold
 
-    from ._util import twin_batch
-
-    def credit(key, pdfs, state: GroupState):
-        cohort, seen, last_ts, last_eid = (
-            state.get if state.exists else (None, [], -1, -1)
-        )
-        pdf = twin_batch(pdfs, key, last_ts, last_eid)
-        if pdf is None:
-            return
+    def credit(state, rows, _wm):
+        cohort, seen = state
         seen = set(seen)
         fresh = []
-        us = pdf["ts"].astype("int64") // 1_000
-        for wk in (int(t) // 1_000_000 // 86400 // 7 for t in us):
+        for wk in (t // 1_000_000 // 86400 // 7 for t in rows["ts"].tolist()):
             if cohort is None:
                 cohort = wk
             off = wk - cohort
             if off not in seen:
                 seen.add(off)
                 fresh.append(off)
-        last_ts = int(us.iloc[-1])
-        last_eid = int(pdf["event_id"].iloc[-1])
-        state.update((cohort, sorted(seen), last_ts, last_eid))
-        if fresh:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(fresh),
-                    "cohort_week": [cohort] * len(fresh),
-                    "week_offset": sorted(fresh),
-                }
-            )
+        out = [(cohort, off) for off in sorted(fresh)]
+        return (cohort, sorted(seen)), out, None
 
-    return events_stream.groupBy("user_id").applyInPandasWithState(
+    return keyed_fold(
+        events_stream,
         credit,
-        outputStructType="user_id long, cohort_week long, week_offset long",
-        stateStructType=(
-            "cohort_week long, seen array<long>, last_ts_us long, "
-            "last_eid long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "cohort_week long, seen array<long>",
+        (None, []),
+        "cohort_week long, week_offset long",
     )
 
 
@@ -1384,11 +1335,7 @@ def cohort_retention_stream(events_stream: DataFrame) -> DataFrame:
 # while tombstoned) emits nothing — the changelog is the view's
 # derivative, not the event stream's.
 # State per user is one (has, value, deleted, ts, id) record —
-# constant; the ordering contract is the family's mechanized one
-# (``_util.twin_batch``: whole-batch sort by (ts, event_id), loud
-# failure on an out-of-order feed; compose
-# ``streaming.order.ordered_events_stream`` upstream when the raw
-# feed is unordered).
+# constant; the ordering contract is ``streaming.order.keyed_fold``'s.
 # ---------------------------------------------------------------------------
 def cdc_upsert_stream(events_stream: DataFrame) -> DataFrame:
     """Append-mode changelog (user_id, op, v, ts) over an events STREAM
@@ -1396,28 +1343,15 @@ def cdc_upsert_stream(events_stream: DataFrame) -> DataFrame:
     op ∈ {insert, update, delete}; v is the new visible value (null for
     delete). Replaying the changelog reproduces the latest-wins
     dimension view at every batch boundary."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from ..streaming.order import keyed_fold
 
-    from ._util import twin_batch
-
-    def merge(key, pdfs, state: GroupState):
-        has, v, dead, ts_us, eid = (
-            state.get if state.exists else (False, 0.0, False, -1, -1)
-        )
-        pdf = twin_batch(pdfs, key, ts_us, eid)
-        if pdf is None:
-            return
+    def merge(state, rows, _wm):
+        has, v, dead = state
         prev_visible = None if (dead or not has) else v
-        us = pdf["ts"].astype("int64") // 1_000
-        for t, e, et, val in zip(
-            us, pdf["event_id"], pdf["event_type"], pdf["value"]
-        ):
+        for et, val in zip(rows["event_type"].tolist(), rows["value"].tolist()):
             if et == "signup":
                 has, v = True, float(val)
             dead = et == "error"
-            ts_us, eid = int(t), int(e)
-        state.update((has, v, dead, ts_us, eid))
         visible = None if (dead or not has) else v
         # NaN-aware no-op suppression: a signup carrying a null/NaN value
         # makes `visible` NaN, and NaN != NaN would otherwise re-emit a
@@ -1429,29 +1363,20 @@ def cdc_upsert_stream(events_stream: DataFrame) -> DataFrame:
             and prev_visible != prev_visible
         )
         if same:
-            return
+            return (has, v, dead), [], None
         op = (
             "delete"
             if visible is None
             else ("insert" if prev_visible is None else "update")
         )
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "op": [op],
-                "v": [visible],
-                "ts": [pd.Timestamp(ts_us, unit="us")],
-            }
-        )
+        return (has, v, dead), [(op, visible, rows["ts"].iloc[-1])], None
 
-    return events_stream.groupBy("user_id").applyInPandasWithState(
+    return keyed_fold(
+        events_stream,
         merge,
-        outputStructType="user_id long, op string, v double, ts timestamp",
-        stateStructType=(
-            "has boolean, v double, dead boolean, ts_us long, eid long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "has boolean, v double, dead boolean",
+        (False, 0.0, False),
+        "op string, v double, ts timestamp",
     )
 
 

@@ -897,10 +897,10 @@ WHERE event_type = '{NEXT_A_TYPE}'
 # therefore exactly a nonempty subset of the run CONTAINING a_k:
 # 2^(k-1) rows per run (the subset's minimum is the start position).
 #
-# Batch analog: the same gaps-and-islands runs frame as oneOrMore,
-# then an explode over the 2^(k-1) subset bitmasks — bit i of
-# combo_mask selects a_(i+1) (the first k-1 elements; a_k is always
-# consumed), n_matched = bit_count + 1. The output is intrinsically
+# Batch analog: cep_one_or_more's (run, B) matches, then an explode
+# over the 2^(k-1) subset bitmasks — bit i of combo_mask selects
+# a_(i+1) (the first k-1 elements; a_k is always consumed),
+# n_matched = bit_count + 1. The output is intrinsically
 # EXPONENTIAL in the run length — no engine should materialize it
 # unbounded at 100 TB — so runs longer than COMB_MAX_RUN produce no
 # combination rows (documented cap, ≤ 2^9 rows per island; the
@@ -908,52 +908,28 @@ WHERE event_type = '{NEXT_A_TYPE}'
 # and the cap never vacuizes the query). a_first_ts is RUN metadata
 # (the island's first A), not the match's start — the mask's lowest
 # set bit identifies the start element. Stream twin:
-# streaming/cep.py:cep_allow_combinations_stream enumerates the same
-# masks when B closes the carried run.
+# streaming/cep.py:cep_allow_combinations_stream explodes
+# cep_one_or_more_stream's matches with the same ``combination_masks``.
 # ---------------------------------------------------------------------------
 COMB_MAX_RUN = 10
 
 
-def cep_allow_combinations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev2 = _numbered_islands(spark, sf_dir)
-    runs = (
-        ev2.filter(F.col("event_type") == ONE_A_TYPE)
-        .groupBy("user_id", "island")
-        .agg(
-            F.count(F.lit(1)).alias("run_len"),
-            F.min("ts").alias("a_first_ts"),
-            F.max("rn").alias("end_rn"),
-        )
-        .filter(F.col("run_len") <= COMB_MAX_RUN)
-    )
-    b = ev2.filter(F.col("event_type") == ONE_B_TYPE).select(
-        "user_id",
-        F.col("event_id").alias("b_event_id"),
-        F.col("ts").alias("b_ts"),
-        "rn",
-    )
-    joined = b.join(
-        runs, (b.user_id == runs.user_id) & (b.rn == runs.end_rn + 1)
-    ).select(
-        "b_event_id",
-        b.user_id.alias("user_id"),
-        "run_len",
-        "a_first_ts",
-        "b_ts",
-    )
+def combination_masks(runs: DataFrame) -> DataFrame:
+    """Explode each (run, B) match row of ``runs`` (a ``run_len``
+    column) into its 2^(run_len-1) allowCombinations matches:
+    ``combo_mask`` (long) and ``n_matched`` (int) appended."""
     masks = F.sequence(
         F.lit(0).cast("long"),
         F.expr("shiftleft(1L, run_len - 1) - 1L"),
     )
-    return joined.select(
-        "b_event_id",
-        "user_id",
-        "run_len",
-        "a_first_ts",
-        "b_ts",
-        F.explode(masks).alias("combo_mask"),
-    ).withColumn(
+    return runs.select("*", F.explode(masks).alias("combo_mask")).withColumn(
         "n_matched", (F.bit_count("combo_mask") + F.lit(1)).cast("int")
+    )
+
+
+def cep_allow_combinations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return combination_masks(
+        cep_one_or_more(spark, sf_dir).filter(F.col("run_len") <= COMB_MAX_RUN)
     )
 
 

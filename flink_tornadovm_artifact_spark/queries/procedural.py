@@ -10,8 +10,8 @@ round:
 - ``pi_estimation_weyl``  — TestPiEstimation.java:52-58 (map sample +
   reduce sum)
 - ``dft_events``          — TestDFT.java:83 (map over indices with
-  broadcast signal; rows-only — libm cos differs across engines by ulps,
-  so it is golden-tested against NumPy in tests/test_kernels.py instead)
+  broadcast signal; also golden-tested against NumPy in
+  tests/test_kernels.py)
 - ``kmeans_pipeline``     — KMeans.java:118-128 (bulk iteration)
 - ``logreg_pipeline``     — LogisticRegression.java:71-88 (SGD loop)
 - ``pagerank_pipeline``   — graph/PageRank.java (bulk iteration)
@@ -20,11 +20,16 @@ round:
 - ``sssp_pipeline``       — flink-gelly/.../library/
   SingleSourceShortestPaths.java (delta iteration, Gelly library)
 
-Oracle policy: the three kernels whose math is order-independent or
-bit-reproducible across engines (vadd, matmul at 4 dp, Weyl-sequence pi)
-carry DuckDB oracles; the iterative pipelines use the driver's rows-only
-check (sanctioned for iterative algorithms) and are golden-tested against
-NumPy in tests/ — mirroring the reference's CPU-vs-GPU self-verification.
+Oracle policy: every query here is checked against a DuckDB oracle.
+The three kernels whose math is order-independent or bit-reproducible
+across engines (vadd, matmul at 4 dp, Weyl-sequence pi) are checked
+against the same math in SQL; ``dft_events`` against the definition DFT
+in the kernel's angle-expression order (engines differ by last-ulp trig
+only); k-means, logistic regression, PageRank and SSSP against their
+loops unrolled as chained CTEs in the same float expression order; and
+connected components against an exact recursive-CTE closure. The
+pipelines are also golden-tested against NumPy in tests/ — mirroring the
+reference's CPU-vs-GPU self-verification.
 """
 
 from __future__ import annotations
@@ -164,8 +169,8 @@ FROM pts
 # DFT of the first 2048 event values (ordered by event_id) — the
 # reference's smallest swept size (Evaluation/Speedups.java:60-67:
 # 2048 → 65536) — distributed over output indices with the signal
-# broadcast. Rows-only: cos/sin libm results differ across engines by
-# ulps (golden-tested vs NumPy instead).
+# broadcast. Checked against DuckDB's definition DFT, which differs by
+# last-ulp cos/sin only, and golden-tested vs NumPy.
 # ---------------------------------------------------------------------------
 _DFT_N = 2048
 
@@ -211,7 +216,8 @@ FROM ks CROSS JOIN sig GROUP BY k
 
 
 # ---------------------------------------------------------------------------
-# Iterative pipelines (rows-only: data-dependent float iteration orders).
+# Iterative pipelines, each checked against its loop unrolled in DuckDB
+# SQL (connected components: an exact recursive-CTE closure).
 # ---------------------------------------------------------------------------
 def kmeans_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3 Lloyd iterations on the (l_quantity, 100*l_discount) plane from

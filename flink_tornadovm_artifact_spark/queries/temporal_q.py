@@ -362,8 +362,8 @@ SELECT CAST(3 AS INTEGER), '{FUNNEL_STEPS[2]}', CAST(n3 AS BIGINT),
 
 # ---------------------------------------------------------------------------
 # Streaming twin of the funnel: the batch query's three first-hit
-# join+aggs become ONE per-user state machine in keyed state
-# (``applyInPandasWithState`` — the reference's KeyedProcessFunction +
+# join+aggs become ONE per-user state machine in keyed state, folded by
+# ``streaming.order.keyed_fold`` (the reference's KeyedProcessFunction +
 # ValueState idiom, FT flink-streaming-java .../functions/
 # KeyedProcessFunction.java): the state holds the first-hit
 # timestamps (t1, t2, t3); an event advances the machine iff it is the
@@ -375,7 +375,7 @@ SELECT CAST(3 AS INTEGER), '{FUNNEL_STEPS[2]}', CAST(n3 AS BIGINT),
 # (user_id, step, step_ts) row in append mode; counting rows per step
 # downstream reproduces the batch panel's n_users column.
 # State per user is three timestamps plus the (ts, event_id) feed
-# position backing the family's mechanized ordering guard — constant;
+# position the driver checks the ordering contract against — constant;
 # no per-user event history is ever retained (the CEP NFA analog
 # keeps partial matches; the funnel machine is memoryless beyond its
 # first-hits).
@@ -384,28 +384,18 @@ def funnel_conversion_stream(events_stream: DataFrame) -> DataFrame:
     """Append-mode (user_id, step, step_ts) first-hit rows over an
     events STREAM with columns (ts timestamp, user_id, event_id,
     event_type); each (user, step) is emitted at most once across the
-    stream. Ordering is the family's mechanized contract
-    (``_util.twin_batch``): the whole micro-batch is sorted once by
-    (ts, event_id) and an out-of-order cross-batch feed raises loudly
-    (compose ``streaming.order.ordered_events_stream`` upstream for an
-    unordered raw feed). First-hit sentinels are -1, not 0, so an
-    event at exactly the epoch still registers and advances."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    stream. Ordering is ``streaming.order.keyed_fold``'s contract: each
+    micro-batch is folded in (ts, event_id) order and an out-of-order
+    cross-batch feed raises (compose
+    ``streaming.order.ordered_events_stream`` upstream for an unordered
+    raw feed). First-hit sentinels are -1, not 0, so an event at
+    exactly the epoch still registers and advances."""
+    from ..streaming.order import keyed_fold
 
-    from ._util import twin_batch
-
-    def advance(key, pdfs, state: GroupState):
-        t1, t2, t3, last_ts, last_eid = (
-            state.get if state.exists else (-1, -1, -1, -1, -1)
-        )
-        pdf = twin_batch(pdfs, key, last_ts, last_eid)
-        if pdf is None:
-            return
+    def advance(state, rows, _wm):
+        t1, t2, t3 = state
         hits = []  # (step, ts_us)
-        us = pdf["ts"].astype("int64") // 1_000
-        for ts_us, et in zip(us, pdf["event_type"]):
-            ts_us = int(ts_us)
+        for ts_us, et in zip(rows["ts"].tolist(), rows["event_type"].tolist()):
             if et == FUNNEL_STEPS[0] and t1 < 0:
                 t1 = ts_us
                 hits.append((1, ts_us))
@@ -415,27 +405,12 @@ def funnel_conversion_stream(events_stream: DataFrame) -> DataFrame:
             elif et == FUNNEL_STEPS[2] and t2 >= 0 and ts_us > t2 and t3 < 0:
                 t3 = ts_us
                 hits.append((3, ts_us))
-        state.update(
-            (t1, t2, t3, int(us.iloc[-1]), int(pdf["event_id"].iloc[-1]))
-        )
-        if hits:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(hits),
-                    "step": [h[0] for h in hits],
-                    "step_ts": [
-                        pd.Timestamp(h[1], unit="us") for h in hits
-                    ],
-                }
-            )
+        return (t1, t2, t3), hits, None
 
-    return events_stream.groupBy("user_id").applyInPandasWithState(
+    return keyed_fold(
+        events_stream,
         advance,
-        outputStructType="user_id long, step int, step_ts timestamp",
-        stateStructType=(
-            "t1_us long, t2_us long, t3_us long, last_ts_us long, "
-            "last_eid long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "t1_us long, t2_us long, t3_us long",
+        (-1, -1, -1),
+        "step int, step_ts timestamp",
     )

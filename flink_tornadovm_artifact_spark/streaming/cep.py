@@ -5,17 +5,16 @@ The stateful mirror of ``queries/cep.py`` — the Spark analog of running
 (``FT/flink-libraries/flink-cep/.../CEP.java``). Flink's NFA keeps, per
 key, the set of partial matches (here: pending A events) and completes a
 match when B arrives inside the time constraint; partial matches past
-their deadline are pruned on watermark advance. This module implements
-that exact lifecycle with ``applyInPandasWithState``:
+their deadline are pruned on watermark advance. Each twin here is an
+input projection plus a fold run by ``streaming.order.keyed_fold``,
+which applies elements in (ts, event_id) order under the ordering
+contract stated there. For ``cep_followed_by_stream``:
 
 - keyed state = pending (a_event_id, a_ts) partial matches;
-- elements are applied in event-time order (the deterministic stand-in
-  for arrival order on a file-replay source, same convention as
-  triggers.py);
 - a B event completes EVERY pending A within ``T`` — each completed A is
   removed, so each A emits at most once (first-B semantics, identical to
   the batch form's min-over-following-frame);
-- pending As whose deadline (a_ts + T) has passed the key's max observed
+- pending As whose deadline (a_ts + T) has passed the key's latest
   event time are pruned — they can never complete on an in-order stream;
   state per key is therefore bounded by the number of As inside one T
   span, the same bound as Flink's NFA partial-match buffer.
@@ -27,30 +26,28 @@ CEP operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .core import _interval_ms
+from .order import keyed_fold
+
+_COLS = ("user_id", "event_id", "ts", "event_type")
 
 
-def _batch_rows(pdfs):
-    """Concatenate a state-function's chunk iterator into one frame in
-    (ts, event_id) order with a µs epoch column, or None when the
-    invocation carries no data (timeout path). ONE definition of the
-    module's ordering and precision conventions — every stateful twin
-    routes through it, so a tiebreak or precision change cannot drift
-    between twins."""
-    chunks = [p for p in pdfs if len(p)]
-    if not chunks:
-        return None, None
-    rows = pd.concat(chunks, ignore_index=True).sort_values(
-        ["ts", "event_id"]
+def _split(pending):
+    """The (ids, timestamps) state columns of (id, ts) pairs."""
+    return [p[0] for p in pending], [p[1] for p in pending]
+
+
+def _events(rows, *extra):
+    """(event_id, ts_us, event_type, *extra) per row, as Python values."""
+    return zip(
+        rows["event_id"].tolist(),
+        rows["ts"].tolist(),
+        rows["event_type"].tolist(),
+        *(rows[c].tolist() for c in extra),
     )
-    return rows, rows["ts"].astype("int64") // 1_000
 
 
 def cep_followed_by_stream(
@@ -65,75 +62,40 @@ def cep_followed_by_stream(
     ts, event_type."""
     within_us = _interval_ms(within) * 1000
 
-    def run(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids, ts_list, max_ts = state.get
-            pending = list(zip(ids, ts_list))
-            max_ts = int(max_ts)
-        else:
-            pending, max_ts = [], 0
-        out: list[tuple[int, int, int]] = []  # (a_event_id, a_ts, b_ts)
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            # full µs precision: the batch twin compares at µs, and a
-            # ms truncation would accept pairs sitting within 1 ms past
-            # the within() bound (enforced inside _batch_rows)
-            for eid, t, typ in zip(
-                rows["event_id"], ts_us, rows["event_type"]
-            ):
-                t = int(t)
-                max_ts = max(max_ts, t)
-                if typ == a_type:
-                    pending.append((int(eid), t))
-                elif typ == b_type:
-                    matched = [p for p in pending if p[1] + within_us >= t]
-                    out.extend((aid, ats, t) for aid, ats in matched)
-                    pending = [p for p in pending if p[1] + within_us < t]
-            # prune partial matches that can no longer complete in order
-            pending = [p for p in pending if p[1] + within_us >= max_ts]
-        state.update(
-            (
-                [p[0] for p in pending],
-                [p[1] for p in pending],
-                max_ts,
-            )
-        )
+    def fold(state, rows, _wm):
+        if rows is None:
+            return None, [], None
+        pending = list(zip(*state))
+        out = []  # (a_event_id, a_ts, b_ts)
+        # full µs precision: the batch twin compares at µs, and a ms
+        # truncation would accept pairs sitting within 1 ms past the
+        # within() bound
+        for eid, t, typ in _events(rows):
+            if typ == a_type:
+                pending.append((eid, t))
+            elif typ == b_type:
+                out.extend((aid, ats, t) for aid, ats in pending
+                           if ats + within_us >= t)
+                pending = [p for p in pending if p[1] + within_us < t]
+        # prune partial matches that can no longer complete in order
+        last = rows["ts"].iloc[-1]
+        pending = [p for p in pending if p[1] + within_us >= last]
         # state lives while the key can still complete a match; the
-        # watermark passing the last deadline cleans it up (timeout API
-        # is ms-based — cleanup precision is irrelevant)
-        state.setTimeoutTimestamp((max_ts + within_us) // 1000 + 1)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "a_event_id": [o[0] for o in out],
-                    "a_ts": pd.to_datetime(
-                        [o[1] for o in out], unit="us"
-                    ),
-                    "b_ts": pd.to_datetime(
-                        [o[2] for o in out], unit="us"
-                    ),
-                }
-            )
+        # watermark passing the last deadline cleans it up
+        return _split(pending), out, int(last) + within_us
 
     keyed = (
         events.filter(F.col("event_type").isin(a_type, b_type))
         .withWatermark("ts", watermark)
-        .select("user_id", "event_id", "ts", "event_type")
+        .select(*_COLS)
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, a_event_id long, a_ts timestamp, b_ts timestamp"
-        ),
-        stateStructType=(
-            "a_ids array<long>, a_ts_us array<long>, max_ts long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_fold(
+        keyed,
+        fold,
+        "a_ids array<long>, a_ts_us array<long>",
+        ([], []),
+        "a_event_id long, a_ts timestamp, b_ts timestamp",
+        deadlines=True,
     )
 
 
@@ -153,73 +115,43 @@ def cep_times_stream(
     inclusive RANGE frame [t - T, t].
 
     State per key is bounded by the As inside one T span; cleanup uses
-    the same deadline timeout as ``cep_followed_by_stream``.
-
-    ORDERING CAVEAT: events are sorted by event time only WITHIN each
-    micro-batch. A late-but-within-watermark A arriving in a later
-    batch is counted against a window that already advanced past it —
-    its frame may include later-timestamped peers and may have lost
-    entries an earlier, larger timestamp already evicted — which can
-    diverge from the batch oracle and from Flink's NFA (which buffers
-    by event time up to the watermark). The twins therefore assume
-    per-key in-order arrival across micro-batches (exact for the
-    file-replay sources used here; a fully late-tolerant variant would
-    buffer rows in state and process them at watermark timeout).
+    the same deadline timeout as ``cep_followed_by_stream``. ``n < 1``
+    raises ``ValueError``, as Flink's ``Pattern.times`` does.
     """
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     within_us = _interval_ms(within) * 1000
 
-    def run(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            (win_list, max_ts) = state.get
-            window = [int(t) for t in win_list]
-            max_ts = int(max_ts)
-        else:
-            window, max_ts = [], 0
-        out: list[tuple[int, int, int]] = []  # (a_event_id, a_ts, count)
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            # process same-timestamp events as ONE group: the batch
-            # RANGE frame is value-defined, so every peer at time t sees
-            # ALL peers at t in its frame — counting one-by-one would
-            # give the earlier peers a smaller count
-            for t, grp in rows.assign(_t=ts_us.values).groupby("_t", sort=True):
-                t = int(t)
-                max_ts = max(max_ts, t)
-                window = [w for w in window if w >= t - within_us]
-                window.extend([t] * len(grp))
-                if len(window) >= n:
-                    out.extend(
-                        (int(eid), t, len(window))
-                        for eid in grp["event_id"]
-                    )
-        state.update((window, max_ts))
-        state.setTimeoutTimestamp((max_ts + within_us) // 1000 + 1)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "a_event_id": [o[0] for o in out],
-                    "a_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                    "n_in_window": [o[2] for o in out],
-                }
-            )
+    def fold(state, rows, _wm):
+        if rows is None:
+            return None, [], None
+        window = [int(t) for t in state[0]]
+        out = []  # (a_event_id, a_ts, n_in_window)
+        # process same-timestamp events as ONE group: the batch RANGE
+        # frame is value-defined, so every peer at time t sees ALL peers
+        # at t in its frame — counting one-by-one would give the earlier
+        # peers a smaller count
+        for t, grp in rows.groupby("ts", sort=True):
+            t = int(t)
+            window = [w for w in window if w >= t - within_us]
+            window.extend([t] * len(grp))
+            if len(window) >= n:
+                out.extend((eid, t, len(window))
+                           for eid in grp["event_id"].tolist())
+        return (window,), out, int(rows["ts"].iloc[-1]) + within_us
 
     keyed = (
         events.filter(F.col("event_type") == a_type)
         .withWatermark("ts", watermark)
         .select("user_id", "event_id", "ts")
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, a_event_id long, a_ts timestamp, n_in_window long"
-        ),
-        stateStructType="win_ts_us array<long>, max_ts long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_fold(
+        keyed,
+        fold,
+        "win_ts_us array<long>",
+        ([],),
+        "a_event_id long, a_ts timestamp, n_in_window long",
+        deadlines=True,
     )
 
 
@@ -238,59 +170,33 @@ def cep_one_or_more_stream(
     the reference's per-prefix match set.
 
     The pattern has no within() bound, so state never expires on a
-    deadline — it is O(1) per key (three longs), the degenerate best
-    case of Flink's NFA buffer. Processes the FULL event stream (every
-    type can break a run), in (ts, event_id) order within each
-    micro-batch; like the other twins it assumes per-key in-order
-    arrival ACROSS micro-batches (see module caveat on
-    cep_times_stream).
+    deadline — it is O(1) per key, the degenerate best case of Flink's
+    NFA buffer. Processes the FULL event stream (every type can break a
+    run).
     """
 
-    def run(key, pdfs, state: GroupState):
-        if state.exists:
-            run_len, first_ts, last_seen = (int(x) for x in state.get)
-        else:
-            run_len, first_ts, last_seen = 0, 0, 0
+    def fold(state, rows, _wm):
+        run_len, first_ts = state
         out = []  # (b_event_id, b_ts, a_first_ts, run_len)
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ in zip(rows["event_id"], ts_us, rows["event_type"]):
-                t = int(t)
-                last_seen = max(last_seen, t)
-                if typ == a_type:
-                    if run_len == 0:
-                        first_ts = t
-                    run_len += 1
-                else:
-                    if typ == b_type and run_len >= 1:
-                        out.append((int(eid), t, first_ts, run_len))
-                    run_len, first_ts = 0, 0
-        state.update((run_len, first_ts, last_seen))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "b_event_id": [o[0] for o in out],
-                    "b_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                    "a_first_ts": pd.to_datetime(
-                        [o[2] for o in out], unit="us"
-                    ),
-                    "run_len": [o[3] for o in out],
-                }
-            )
+        for eid, t, typ in _events(rows):
+            if typ == a_type:
+                if run_len == 0:
+                    first_ts = t
+                run_len += 1
+            else:
+                if typ == b_type and run_len >= 1:
+                    out.append((eid, t, first_ts, run_len))
+                run_len, first_ts = 0, 0
+        return (run_len, first_ts), out, None
 
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, b_event_id long, b_ts timestamp, "
-            "a_first_ts timestamp, run_len long"
-        ),
-        stateStructType="run_len long, first_ts_us long, last_seen_us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    keyed = events.withWatermark("ts", watermark).select(*_COLS)
+    return keyed_fold(
+        keyed,
+        fold,
+        "run_len long, first_ts_us long",
+        (0, 0),
+        "b_event_id long, b_ts timestamp, a_first_ts timestamp, "
+        "run_len long",
     )
 
 
@@ -304,57 +210,17 @@ def cep_times_range_stream(
 ) -> DataFrame:
     """Streaming twin of ``queries/cep.py:cep_times_range`` — the
     ``times(from, to).consecutive().greedy().next(B)`` bounded-range
-    quantifier. Identical looping-run state to
-    ``cep_one_or_more_stream`` with the range check at match time (the
-    NFA's accepting condition); same O(1)-per-key state and the same
-    cross-batch in-order assumption.
+    quantifier: ``cep_one_or_more_stream``'s matches whose run length is
+    in [n_from, n_to] (the NFA's accepting condition), as the batch form
+    filters ``cep_one_or_more``. ``n_from < 0`` or ``n_from > n_to``
+    raises ``ValueError``, as Flink's ``Pattern.times`` does.
     """
-
-    def run(key, pdfs, state: GroupState):
-        if state.exists:
-            run_len, first_ts, last_seen = (int(x) for x in state.get)
-        else:
-            run_len, first_ts, last_seen = 0, 0, 0
-        out = []
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ in zip(rows["event_id"], ts_us, rows["event_type"]):
-                t = int(t)
-                last_seen = max(last_seen, t)
-                if typ == a_type:
-                    if run_len == 0:
-                        first_ts = t
-                    run_len += 1
-                else:
-                    if typ == b_type and n_from <= run_len <= n_to:
-                        out.append((int(eid), t, first_ts, run_len))
-                    run_len, first_ts = 0, 0
-        state.update((run_len, first_ts, last_seen))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "b_event_id": [o[0] for o in out],
-                    "b_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                    "a_first_ts": pd.to_datetime(
-                        [o[2] for o in out], unit="us"
-                    ),
-                    "run_len": [o[3] for o in out],
-                }
-            )
-
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, b_event_id long, b_ts timestamp, "
-            "a_first_ts timestamp, run_len long"
-        ),
-        stateStructType="run_len long, first_ts_us long, last_seen_us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    if n_from < 0:
+        raise ValueError(f"n_from must be >= 0, got {n_from}")
+    if n_from > n_to:
+        raise ValueError(f"n_from must be <= n_to, got {n_from} > {n_to}")
+    return cep_one_or_more_stream(events, a_type, b_type, watermark).filter(
+        F.col("run_len").between(n_from, n_to)
     )
 
 
@@ -369,52 +235,29 @@ def cep_optional_stream(
     ``begin(V).next(C).optional().next(B)`` 0-or-1 quantifier under
     strict contiguity. Keyed state is the last TWO events' (type, id):
     the optional middle element means a B matches on (V, C, B) or
-    (·, V, B). O(1) per key; same cross-batch in-order assumption as
-    the other twins.
+    (·, V, B). O(1) per key.
     """
 
-    def run(key, pdfs, state: GroupState):
-        if state.exists:
-            p1t, p1i, p2t, p2i = state.get
-        else:
-            p1t, p1i, p2t, p2i = "", 0, "", 0
+    def fold(state, rows, _wm):
+        p1t, p1i, p2t, p2i = state
         out = []  # (b_event_id, b_ts, view_id, click_id_or_None)
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ in zip(rows["event_id"], ts_us, rows["event_type"]):
-                eid, t = int(eid), int(t)
-                if typ == b_type:
-                    if p1t == c_type and p2t == v_type:
-                        out.append((eid, t, int(p2i), int(p1i)))
-                    elif p1t == v_type:
-                        out.append((eid, t, int(p1i), None))
-                p2t, p2i, p1t, p1i = p1t, p1i, typ, eid
-        state.update((p1t, p1i, p2t, p2i))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "b_event_id": [o[0] for o in out],
-                    "b_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                    "view_event_id": [o[2] for o in out],
-                    "click_event_id": pd.array(
-                        [o[3] for o in out], dtype="Int64"
-                    ),
-                }
-            )
+        for eid, t, typ in _events(rows):
+            if typ == b_type:
+                if p1t == c_type and p2t == v_type:
+                    out.append((eid, t, p2i, p1i))
+                elif p1t == v_type:
+                    out.append((eid, t, p1i, None))
+            p2t, p2i, p1t, p1i = p1t, p1i, typ, eid
+        return (p1t, p1i, p2t, p2i), out, None
 
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, b_event_id long, b_ts timestamp, "
-            "view_event_id long, click_event_id long"
-        ),
-        stateStructType="p1t string, p1i long, p2t string, p2i long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    keyed = events.withWatermark("ts", watermark).select(*_COLS)
+    return keyed_fold(
+        keyed,
+        fold,
+        "p1t string, p1i long, p2t string, p2i long",
+        ("", 0, "", 0),
+        "b_event_id long, b_ts timestamp, view_event_id long, "
+        "click_event_id long",
     )
 
 
@@ -443,8 +286,7 @@ def cep_after_match_stream(
 
     State is O(run length) — bounded by the longest consecutive A-run,
     the same bound as the reference's buffer (no within() bound on this
-    pattern, so no deadline pruning). Same cross-batch in-order
-    assumption as the other twins (module caveat on cep_times_stream).
+    pattern, so no deadline pruning).
     """
     from ..queries.cep import SKIP_STRATEGIES
 
@@ -454,53 +296,33 @@ def cep_after_match_stream(
             f"expected one of {SKIP_STRATEGIES}"
         )
 
-    def run(key, pdfs, state: GroupState):
-        starts: list[int] = list(state.get[0]) if state.exists else []
+    def fold(state, rows, _wm):
+        starts = list(state[0])
         out = []  # (b_event_id, b_ts, a_start_ts, match_len)
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ in zip(rows["event_id"], ts_us, rows["event_type"]):
-                t = int(t)
-                if typ == a_type:
-                    starts.append(t)
-                else:
-                    if typ == b_type and starts:
-                        n = len(starts)
-                        if strategy == "no_skip":
-                            picks = range(n)
-                        elif strategy == "skip_past_last_event":
-                            picks = [0]
-                        else:  # skip_to_last
-                            picks = [0] if n == 1 else [0, n - 1]
-                        for i in picks:
-                            out.append((int(eid), t, starts[i], n - i))
-                    starts = []
-        state.update((starts,))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "b_event_id": [o[0] for o in out],
-                    "b_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                    "a_start_ts": pd.to_datetime(
-                        [o[2] for o in out], unit="us"
-                    ),
-                    "match_len": [o[3] for o in out],
-                }
-            )
+        for eid, t, typ in _events(rows):
+            if typ == a_type:
+                starts.append(t)
+            else:
+                if typ == b_type and starts:
+                    n = len(starts)
+                    if strategy == "no_skip":
+                        picks = range(n)
+                    elif strategy == "skip_past_last_event":
+                        picks = [0]
+                    else:  # skip_to_last
+                        picks = [0] if n == 1 else [0, n - 1]
+                    out.extend((eid, t, starts[i], n - i) for i in picks)
+                starts = []
+        return (starts,), out, None
 
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, b_event_id long, b_ts timestamp, "
-            "a_start_ts timestamp, match_len long"
-        ),
-        stateStructType="starts array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    keyed = events.withWatermark("ts", watermark).select(*_COLS)
+    return keyed_fold(
+        keyed,
+        fold,
+        "starts array<long>",
+        ([],),
+        "b_event_id long, b_ts timestamp, a_start_ts timestamp, "
+        "match_len long",
     )
 
 
@@ -520,54 +342,30 @@ def cep_one_or_more_until_stream(
     its B is swallowed and the run resets.
     """
 
-    def run(key, pdfs, state: GroupState):
-        if state.exists:
-            run_len, first_ts, triggered = (int(x) for x in state.get)
-        else:
-            run_len, first_ts, triggered = 0, 0, 0
-        out = []
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ, val in zip(
-                rows["event_id"], ts_us, rows["event_type"], rows["value"]
-            ):
-                t = int(t)
-                if typ == a_type:
-                    if run_len == 0:
-                        first_ts = t
-                    run_len += 1
-                    if val is not None and float(val) > until_x:
-                        triggered = 1
-                else:
-                    if typ == b_type and run_len >= 1 and not triggered:
-                        out.append((int(eid), t, first_ts, run_len))
-                    run_len, first_ts, triggered = 0, 0, 0
-        state.update((run_len, first_ts, triggered))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "b_event_id": [o[0] for o in out],
-                    "b_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                    "a_first_ts": pd.to_datetime(
-                        [o[2] for o in out], unit="us"
-                    ),
-                    "run_len": [o[3] for o in out],
-                }
-            )
+    def fold(state, rows, _wm):
+        run_len, first_ts, triggered = state
+        out = []  # (b_event_id, b_ts, a_first_ts, run_len)
+        for eid, t, typ, val in _events(rows, "value"):
+            if typ == a_type:
+                if run_len == 0:
+                    first_ts = t
+                run_len += 1
+                if val is not None and float(val) > until_x:
+                    triggered = 1
+            else:
+                if typ == b_type and run_len >= 1 and not triggered:
+                    out.append((eid, t, first_ts, run_len))
+                run_len, first_ts, triggered = 0, 0, 0
+        return (run_len, first_ts, triggered), out, None
 
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type", "value"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, b_event_id long, b_ts timestamp, "
-            "a_first_ts timestamp, run_len long"
-        ),
-        stateStructType="run_len long, first_ts_us long, triggered long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    keyed = events.withWatermark("ts", watermark).select(*_COLS, "value")
+    return keyed_fold(
+        keyed,
+        fold,
+        "run_len long, first_ts_us long, triggered long",
+        (0, 0, 0),
+        "b_event_id long, b_ts timestamp, a_first_ts timestamp, "
+        "run_len long",
     )
 
 
@@ -590,68 +388,33 @@ def cep_followed_by_any_stream(
     """
     within_us = _interval_ms(within) * 1000
 
-    def run(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ids, ts_list, max_ts = state.get
-            pending = list(zip(ids, ts_list))
-            max_ts = int(max_ts)
-        else:
-            pending, max_ts = [], 0
-        out: list[tuple[int, int, int, int]] = []
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ in zip(
-                rows["event_id"], ts_us, rows["event_type"]
-            ):
-                t = int(t)
-                max_ts = max(max_ts, t)
-                if typ == a_type:
-                    pending.append((int(eid), t))
-                elif typ == b_type:
-                    out.extend(
-                        (aid, int(eid), ats, t)
-                        for aid, ats in pending
-                        if ats + within_us >= t
-                    )
-            pending = [p for p in pending if p[1] + within_us >= max_ts]
-        state.update(
-            (
-                [p[0] for p in pending],
-                [p[1] for p in pending],
-                max_ts,
-            )
-        )
-        state.setTimeoutTimestamp((max_ts + within_us) // 1000 + 1)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "a_event_id": [o[0] for o in out],
-                    "b_event_id": [o[1] for o in out],
-                    "a_ts": pd.to_datetime([o[2] for o in out], unit="us"),
-                    "b_ts": pd.to_datetime([o[3] for o in out], unit="us"),
-                }
-            )
+    def fold(state, rows, _wm):
+        if rows is None:
+            return None, [], None
+        pending = list(zip(*state))
+        out = []  # (a_event_id, b_event_id, a_ts, b_ts)
+        for eid, t, typ in _events(rows):
+            if typ == a_type:
+                pending.append((eid, t))
+            elif typ == b_type:
+                out.extend((aid, eid, ats, t) for aid, ats in pending
+                           if ats + within_us >= t)
+        last = rows["ts"].iloc[-1]
+        pending = [p for p in pending if p[1] + within_us >= last]
+        return _split(pending), out, int(last) + within_us
 
     keyed = (
         events.filter(F.col("event_type").isin(a_type, b_type))
         .withWatermark("ts", watermark)
-        .select("user_id", "event_id", "ts", "event_type")
+        .select(*_COLS)
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, a_event_id long, b_event_id long, "
-            "a_ts timestamp, b_ts timestamp"
-        ),
-        stateStructType=(
-            "ids array<long>, ts_list array<long>, max_ts long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_fold(
+        keyed,
+        fold,
+        "ids array<long>, ts_list array<long>",
+        ([], []),
+        "a_event_id long, b_event_id long, a_ts timestamp, b_ts timestamp",
+        deadlines=True,
     )
 
 
@@ -672,58 +435,29 @@ def cep_next_stream(
     next_type IS NULL rows are a bounded-input artifact a stream cannot
     observe — documented asymmetry, tested)."""
 
-    def run(key, pdfs, state: GroupState):
-        if state.exists:
-            prev_id, prev_ts, prev_is_a = (int(x) for x in state.get)
-        else:
-            prev_id, prev_ts, prev_is_a = 0, 0, 0
-        out = []
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ in zip(
-                rows["event_id"], ts_us, rows["event_type"]
-            ):
-                t = int(t)
-                if prev_is_a:
-                    is_b = typ == b_type
-                    if is_b and not negate:
-                        out.append((prev_id, int(eid), prev_ts, t))
-                    elif not is_b and negate:
-                        # no matched B exists: the b columns are NULL,
-                        # not fabricated sentinels a consumer could
-                        # mistake for a real event
-                        out.append((prev_id, None, prev_ts, None))
-                prev_id, prev_ts, prev_is_a = (
-                    int(eid),
-                    t,
-                    int(typ == a_type),
-                )
-        state.update((prev_id, prev_ts, prev_is_a))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "a_event_id": [o[0] for o in out],
-                    "b_event_id": pd.array(
-                        [o[1] for o in out], dtype="Int64"
-                    ),
-                    "a_ts": pd.to_datetime([o[2] for o in out], unit="us"),
-                    "b_ts": pd.to_datetime([o[3] for o in out], unit="us"),
-                }
-            )
+    def fold(state, rows, _wm):
+        prev_id, prev_ts, prev_is_a = state
+        out = []  # (a_event_id, b_event_id, a_ts, b_ts)
+        for eid, t, typ in _events(rows):
+            if prev_is_a:
+                is_b = typ == b_type
+                if is_b and not negate:
+                    out.append((prev_id, eid, prev_ts, t))
+                elif not is_b and negate:
+                    # no matched B exists: the b columns are NULL, not
+                    # fabricated sentinels a consumer could mistake for
+                    # a real event
+                    out.append((prev_id, None, prev_ts, None))
+            prev_id, prev_ts, prev_is_a = eid, t, int(typ == a_type)
+        return (prev_id, prev_ts, prev_is_a), out, None
 
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, a_event_id long, b_event_id long, "
-            "a_ts timestamp, b_ts timestamp"
-        ),
-        stateStructType="prev_id long, prev_ts long, prev_is_a long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    keyed = events.withWatermark("ts", watermark).select(*_COLS)
+    return keyed_fold(
+        keyed,
+        fold,
+        "prev_id long, prev_ts long, prev_is_a long",
+        (0, 0, 0),
+        "a_event_id long, b_event_id long, a_ts timestamp, b_ts timestamp",
     )
 
 
@@ -748,76 +482,46 @@ def cep_not_followed_by_stream(
       timeout (the NFA pruning its timed-out partial match).
 
     State is the pending-A buffer bounded by one within() span — the
-    same bound as cep_followed_by_stream — and the same per-key
-    in-order arrival assumption (module caveat on cep_times_stream).
+    same bound as cep_followed_by_stream.
     """
     within_us = _interval_ms(within) * 1000
 
-    def run(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            ids, ts_list = state.get
-            pending = list(zip(ids, ts_list))
-        else:
-            pending = []
-        out: list[tuple[int, int]] = []  # (a_event_id, a_ts)
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        rows, ts_us = _batch_rows(pdfs)
+    def fold(state, rows, wm_us):
+        pending = list(zip(*state))
+        out = []  # (a_event_id, a_ts)
         if rows is not None:
-            for eid, t, typ in zip(
-                rows["event_id"], ts_us, rows["event_type"]
-            ):
-                t = int(t)
+            for eid, t, typ in _events(rows):
                 if typ == a_type:
-                    pending.append((int(eid), t))
+                    pending.append((eid, t))
                 elif typ == b_type:
                     # in-order: this is the FIRST B for every pending A
-                    out.extend(
-                        p for p in pending if p[1] + within_us < t
-                    )
+                    out.extend(p for p in pending if p[1] + within_us < t)
                     pending = []
         # watermark past the deadline: absence confirmed (timeout path)
-        expired = [p for p in pending if p[1] + within_us < wm_us]
-        out.extend(expired)
+        out.extend(p for p in pending if p[1] + within_us < wm_us)
         pending = [p for p in pending if p[1] + within_us >= wm_us]
-        if pending:
-            state.update(
-                ([p[0] for p in pending], [p[1] for p in pending])
-            )
-            state.setTimeoutTimestamp(
-                min(p[1] for p in pending) // 1000 + within_us // 1000 + 1
-            )
-        elif state.exists:
-            # drained: drop the entry entirely — an empty-array update
-            # with no timeout armed would park dead state in the store
-            # for every key the job ever saw
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "a_event_id": [o[0] for o in out],
-                    "a_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                }
-            )
+        if not pending:
+            # drained: drop the entry — a kept state with no timeout
+            # armed would park dead state in the store for every key
+            # the job ever saw
+            return None, out, None
+        return _split(pending), out, min(p[1] for p in pending) + within_us
 
     # NO type filter: the absence timeout must advance on EVERY event
     # in the stream, and a type predicate — whichever side of
     # withWatermark it is written on — gets pushed below the
     # EventTimeWatermark node by Catalyst (it does not reference ts),
     # starving the watermark whenever only non-pattern traffic flows.
-    # The run function ignores other types itself; this matches the
-    # reference, whose CEP operator consumes the full keyed stream.
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, a_event_id long, a_ts timestamp"
-        ),
-        stateStructType="ids array<long>, ts_list array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    # The fold ignores other types itself; this matches the reference,
+    # whose CEP operator consumes the full keyed stream.
+    keyed = events.withWatermark("ts", watermark).select(*_COLS)
+    return keyed_fold(
+        keyed,
+        fold,
+        "ids array<long>, ts_list array<long>",
+        ([], []),
+        "a_event_id long, a_ts timestamp",
+        deadlines=True,
     )
 
 
@@ -838,90 +542,48 @@ def cep_group_followed_by_stream(
     O(group matches in one span). Group matches completing at the same
     VIEW timestamp are counted as ONE peer group (the batch RANGE
     frame is value-defined, so equal-ts peers see each other —
-    cep_times_stream's peer-grouping discipline); like the other
-    twins, cross-batch arrival is assumed per-key in-order. That
-    assumption extends to equal-timestamp peers SPLIT ACROSS
-    micro-batches: the earlier batch's peer has already emitted (or
-    not) by the time the later one arrives, so its row cannot be
-    revised with the larger peer count the batch RANGE frame would
-    report — same class of divergence as the module-wide ordering
-    caveat on cep_times_stream."""
-    from itertools import groupby as _groupby
+    cep_times_stream's peer-grouping discipline). Peers split ACROSS
+    micro-batches are the exception: the earlier batch's peer has
+    already emitted (or not) when the later one arrives, so its row
+    cannot be revised with the larger peer count the batch RANGE frame
+    would report."""
+    from itertools import groupby
 
     within_us = _interval_ms(within) * 1000
 
-    def run(key, pdfs, state: GroupState):
-        if state.exists:
-            prev_id, prev_ts, prev_is_v, ids, hist = state.get
-            prev_id, prev_ts, prev_is_v = (
-                int(prev_id), int(prev_ts), int(prev_is_v),
-            )
-            pairs = list(zip(ids, hist))
-        else:
-            prev_id, prev_ts, prev_is_v, pairs = 0, 0, 0, []
-        out = []
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            # phase 1: detect group matches with the one-slot state;
-            # strict contiguity means v_ts is non-decreasing in
-            # detection order, so the phase-2 groupby is a single pass
-            new_pairs = []  # (v_id, c_id, v_ts)
-            for eid, t, typ in zip(
-                rows["event_id"], ts_us, rows["event_type"]
-            ):
-                t = int(t)
-                if prev_is_v and typ == c_type:
-                    new_pairs.append((prev_id, int(eid), prev_ts))
-                prev_id, prev_ts, prev_is_v = (
-                    int(eid), t, int(typ == v_type),
-                )
-            # phase 2: the times() quantifier over the group-match
-            # stream, equal-v_ts peers processed as one group (each
-            # peer's RANGE frame contains all of them)
-            for v_ts, grp_it in _groupby(new_pairs, key=lambda p: p[2]):
-                grp = list(grp_it)
-                pairs = [p for p in pairs if p[1] >= v_ts - within_us]
-                total = len(pairs) + len(grp)
-                if total >= times_n:
-                    out.extend(
-                        (v_id, c_id, v_ts, total)
-                        for v_id, c_id, _ in grp
-                    )
-                pairs.extend((v_id, v_ts) for v_id, _c, _t in grp)
-        state.update(
-            (
-                prev_id, prev_ts, prev_is_v,
-                [p[0] for p in pairs], [p[1] for p in pairs],
-            )
-        )
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "v_event_id": [o[0] for o in out],
-                    "c_event_id": [o[1] for o in out],
-                    "group_ts": pd.to_datetime(
-                        [o[2] for o in out], unit="us"
-                    ),
-                    "n_groups": [o[3] for o in out],
-                }
-            )
+    def fold(state, rows, _wm):
+        prev_id, prev_ts, prev_is_v, ids, hist = state
+        pairs = list(zip(ids, hist))
+        out = []  # (v_event_id, c_event_id, group_ts, n_groups)
+        # phase 1: detect group matches with the one-slot state; strict
+        # contiguity means v_ts is non-decreasing in detection order, so
+        # the phase-2 groupby is a single pass
+        new_pairs = []  # (v_id, c_id, v_ts)
+        for eid, t, typ in _events(rows):
+            if prev_is_v and typ == c_type:
+                new_pairs.append((prev_id, eid, prev_ts))
+            prev_id, prev_ts, prev_is_v = eid, t, int(typ == v_type)
+        # phase 2: the times() quantifier over the group-match stream,
+        # equal-v_ts peers processed as one group (each peer's RANGE
+        # frame contains all of them)
+        for v_ts, grp_it in groupby(new_pairs, key=lambda p: p[2]):
+            grp = list(grp_it)
+            pairs = [p for p in pairs if p[1] >= v_ts - within_us]
+            total = len(pairs) + len(grp)
+            if total >= times_n:
+                out.extend((v_id, c_id, v_ts, total) for v_id, c_id, _ in grp)
+            pairs.extend((v_id, v_ts) for v_id, _c, _t in grp)
+        return (prev_id, prev_ts, prev_is_v, *_split(pairs)), out, None
 
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, v_event_id long, c_event_id long, "
-            "group_ts timestamp, n_groups long"
-        ),
-        stateStructType=(
-            "prev_id long, prev_ts long, prev_is_v long, "
-            "ids array<long>, hist array<long>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    keyed = events.withWatermark("ts", watermark).select(*_COLS)
+    return keyed_fold(
+        keyed,
+        fold,
+        "prev_id long, prev_ts long, prev_is_v long, "
+        "ids array<long>, hist array<long>",
+        (0, 0, 0, [], []),
+        "v_event_id long, c_event_id long, group_ts timestamp, "
+        "n_groups long",
     )
 
 
@@ -933,76 +595,25 @@ def cep_allow_combinations_stream(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Streaming twin of ``queries/cep.py:cep_allow_combinations`` —
-    ``begin(A).oneOrMore().allowCombinations().next(B)``. Keyed state
-    is identical to ``cep_one_or_more_stream`` (the trailing
-    consecutive A-run: length + first timestamp — three longs); the
-    COMBINATIONS branching needs no extra state because every match of
-    the pattern is a subset of that run containing its last element
-    (strict next(B) anchors the end; NO_SKIP starts an attempt at
-    every a_i). When a B closes a run of length k ≤ ``max_run`` the
-    twin emits the same 2^(k-1) (combo_mask, n_matched) rows the batch
-    enumeration produces — the exponential fan-out happens at EMIT
-    time, never in state, so state stays O(1) per key while the NFA's
-    combination branching is reproduced exactly. Runs longer than
-    ``max_run`` emit nothing; the default is imported from the batch
-    module's COMB_MAX_RUN so the two caps cannot desynchronize (a
-    hardcoded twin cap would silently diverge if the batch cap moved,
-    and the batch/stream differential runs well under the cap).
+    ``begin(A).oneOrMore().allowCombinations().next(B)``: every match of
+    the pattern is a subset of the trailing consecutive A-run containing
+    its last element (strict next(B) anchors the end; NO_SKIP starts an
+    attempt at every a_i). So the twin is ``cep_one_or_more_stream``'s
+    matches of run length k ≤ ``max_run``, each exploded into the same
+    2^(k-1) (combo_mask, n_matched) rows the batch enumeration produces
+    — the fan-out happens after the fold, never in state, as the batch
+    form explodes ``cep_one_or_more``. The default cap is the batch
+    module's COMB_MAX_RUN, so the two caps cannot desynchronize;
+    ``max_run < 1`` raises ``ValueError``.
     """
+    from ..queries.cep import COMB_MAX_RUN, combination_masks
+
     if max_run is None:
-        from ..queries.cep import COMB_MAX_RUN
-
         max_run = COMB_MAX_RUN
-
-    def run(key, pdfs, state: GroupState):
-        if state.exists:
-            run_len, first_ts, last_seen = (int(x) for x in state.get)
-        else:
-            run_len, first_ts, last_seen = 0, 0, 0
-        out = []  # (b_event_id, b_ts, a_first_ts, run_len, mask)
-        rows, ts_us = _batch_rows(pdfs)
-        if rows is not None:
-            for eid, t, typ in zip(rows["event_id"], ts_us, rows["event_type"]):
-                t = int(t)
-                last_seen = max(last_seen, t)
-                if typ == a_type:
-                    if run_len == 0:
-                        first_ts = t
-                    run_len += 1
-                else:
-                    if typ == b_type and 1 <= run_len <= max_run:
-                        for mask in range(1 << (run_len - 1)):
-                            out.append(
-                                (int(eid), t, first_ts, run_len, mask)
-                            )
-                    run_len, first_ts = 0, 0
-        state.update((run_len, first_ts, last_seen))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "b_event_id": [o[0] for o in out],
-                    "b_ts": pd.to_datetime([o[1] for o in out], unit="us"),
-                    "a_first_ts": pd.to_datetime(
-                        [o[2] for o in out], unit="us"
-                    ),
-                    "run_len": [o[3] for o in out],
-                    "combo_mask": [o[4] for o in out],
-                    "n_matched": [o[4].bit_count() + 1 for o in out],
-                }
-            )
-
-    keyed = events.withWatermark("ts", watermark).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=(
-            "user_id long, b_event_id long, b_ts timestamp, "
-            "a_first_ts timestamp, run_len long, combo_mask long, "
-            "n_matched int"
-        ),
-        stateStructType="run_len long, first_ts_us long, last_seen_us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    if max_run < 1:
+        raise ValueError(f"max_run must be >= 1, got {max_run}")
+    return combination_masks(
+        cep_one_or_more_stream(events, a_type, b_type, watermark).filter(
+            F.col("run_len") <= max_run
+        )
     )

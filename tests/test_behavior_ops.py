@@ -27,7 +27,7 @@ from flink_tornadovm_artifact_spark.queries.behavior import (
 )
 from flink_tornadovm_artifact_spark.tables import load
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, stamp_batch
 
 
 @pytest.fixture(scope="module")
@@ -567,6 +567,7 @@ def test_session_path_stream_matches_python(spark, tmp_path):
             ),
             str(src / f"b{i}.parquet"),
         )
+        stamp_batch(src / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "ts timestamp, user_id long, event_id long, event_type string"
@@ -1206,6 +1207,7 @@ def _ordered_event_feed(spark, tmp_path, name):
             ),
             str(src / f"b{i}.parquet"),
         )
+        stamp_batch(src / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "ts timestamp, user_id long, event_id long, event_type string"
@@ -1375,6 +1377,7 @@ def test_markov_stream_recovers_from_checkpoint(spark, tmp_path):
             ),
             str(src / f"b{i}.parquet"),
         )
+        stamp_batch(src / f"b{i}.parquet", i)
 
     def run_once():
         stream = (
@@ -1450,6 +1453,7 @@ def test_cdc_upsert_stream_matches_chunk_replay(spark, tmp_path):
             ),
             str(src / f"b{i}.parquet"),
         )
+        stamp_batch(src / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "ts timestamp, user_id long, event_id long, "

@@ -16,6 +16,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from flink_tornadovm_artifact_spark.queries.cep import cep_followed_by
 from flink_tornadovm_artifact_spark.streaming import (
@@ -1123,3 +1124,21 @@ def test_cep_allow_combinations_stream_matches_batch(spark, tmp_path):
         )
         == want
     )
+
+
+@pytest.mark.parametrize(
+    "twin, kwargs, arg",
+    [
+        ("cep_times_stream", {"n": 0}, "n"),
+        ("cep_times_range_stream", {"n_from": -1}, "n_from"),
+        ("cep_times_range_stream", {"n_from": 5, "n_to": 4}, "n_from"),
+        ("cep_allow_combinations_stream", {"max_run": 0}, "max_run"),
+    ],
+)
+def test_cep_stream_rejects_degenerate_quantifier(twin, kwargs, arg):
+    """Flink's Pattern.times rejects the same inputs; the guard raises
+    before the twin touches its stream (none is passed)."""
+    from flink_tornadovm_artifact_spark import streaming
+
+    with pytest.raises(ValueError, match=f"^{arg} must"):
+        getattr(streaming, twin)(None, **kwargs)

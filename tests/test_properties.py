@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 
 from flink_tornadovm_artifact_spark.operators.scale import salted_agg
 
+from .conftest import stamp_batch
+
 SETTINGS = dict(
     max_examples=8,
     deadline=None,
@@ -626,6 +628,7 @@ def test_funnel_stream_matches_batch_semantics_on_ties(
             ),
             str(d / f"b{i}.parquet"),
         )
+        stamp_batch(d / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "ts timestamp, user_id long, event_id long, event_type string"
@@ -714,6 +717,7 @@ def test_markov_stream_matches_lead_semantics_on_ties(
             ),
             str(d / f"b{i}.parquet"),
         )
+        stamp_batch(d / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "ts timestamp, user_id long, event_id long, event_type string"
@@ -802,6 +806,7 @@ def test_cohort_stream_matches_min_week_semantics(
             ),
             str(d / f"b{i}.parquet"),
         )
+        stamp_batch(d / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema("ts timestamp, user_id long, event_id long")
         .option("maxFilesPerTrigger", 1)
@@ -900,6 +905,7 @@ def test_cdc_changelog_matches_replay_including_undelete(
             ),
             str(d / f"b{i}.parquet"),
         )
+        stamp_batch(d / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "ts timestamp, user_id long, event_id long, "

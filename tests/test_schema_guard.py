@@ -24,8 +24,9 @@ from .conftest import SF_ORACLE
 
 #: name -> reason. Empty on purpose: every query that used to emit a
 #: complex column (multimodal_feature_extract's features array<double>)
-#: has been flattened at the query boundary. Add entries ONLY for
-#: queries deliberately excluded from driver hashing (rows-only checks).
+#: has been flattened at the query boundary. Every registered query is
+#: hash-compared against its DuckDB oracle by the driver, so an entry
+#: needs a reason the driver can still sort that query's rows.
 ALLOWLIST: dict[str, str] = {}
 
 _COMPLEX = {"array", "map", "struct"}

@@ -5,8 +5,9 @@
    fully shuffled arrival, so every twin composed downstream reproduces
    its batch query exactly even on an unordered raw feed.
 2. A twin fed out-of-order data DIRECTLY (no reorder stage) fails
-   LOUDLY (``_util.twin_batch``'s cross-batch monotonicity guard), never
-   silently miscounting.
+   LOUDLY (the cross-batch position check of ``streaming.order.
+   keyed_fold``, the driver every keyed twin runs on), never silently
+   miscounting.
 3. The RocksDB state-store provider and kill-and-restart recovery pins,
    previously Markov-only (test_behavior_ops.py), extended to the
    cohort / funnel / CDC twins.
@@ -22,7 +23,7 @@ import pytest
 
 from flink_tornadovm_artifact_spark.tables import load
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, stamp_batch
 
 _FEED_COLS = ("ts", "user_id", "event_id", "event_type", "value")
 _SCHEMA = (
@@ -86,6 +87,7 @@ def _write_feed(path, chunks, with_sentinels=False):
             ),
             str(path / f"b{i:02d}.parquet"),
         )
+        stamp_batch(path / f"b{i:02d}.parquet", i)
 
 
 def _read_feed(spark, path):
@@ -350,7 +352,10 @@ def test_cdc_twin_on_reordered_shuffled_feed(spark, ordered_src, tmp_path):
 def test_twin_fails_loudly_on_out_of_order_feed(spark, tmp_path):
     """Without the reorder stage, a cross-batch ordering violation must
     RAISE (the r9 form silently miscounted): batch 2 delivers an event
-    earlier than batch 1's last processed position."""
+    earlier than batch 1's last processed position. Checked on a
+    behavior twin and on a CEP twin; the CEP twin's watermark is wider
+    than the feed's gap, so Spark does not drop the older row as late
+    before the state function sees it."""
     import datetime as dt
 
     import pyarrow as pa
@@ -359,6 +364,7 @@ def test_twin_fails_loudly_on_out_of_order_feed(spark, tmp_path):
     from flink_tornadovm_artifact_spark.queries.behavior import (
         markov_transitions_stream,
     )
+    from flink_tornadovm_artifact_spark.streaming import cep_next_stream
 
     src = tmp_path / "ooo_feed"
     src.mkdir()
@@ -379,6 +385,7 @@ def test_twin_fails_loudly_on_out_of_order_feed(spark, tmp_path):
             ),
             str(src / f"b{i}.parquet"),
         )
+        stamp_batch(src / f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "ts timestamp, user_id long, event_id long, event_type string"
@@ -386,8 +393,13 @@ def test_twin_fails_loudly_on_out_of_order_feed(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    with pytest.raises(Exception, match="ordering contract violated"):
-        _drain(markov_transitions_stream(stream), tmp_path / "ooo_ckpt")
+    twins = {
+        "markov": markov_transitions_stream,
+        "cep_next": lambda s: cep_next_stream(s, watermark="1 day"),
+    }
+    for name, twin in twins.items():
+        with pytest.raises(Exception, match="ordering contract violated"):
+            _drain(twin(stream), tmp_path / f"ooo_ckpt_{name}")
 
 
 # ---------------------------------------------------------------------------
@@ -491,6 +503,7 @@ def test_twin_recovers_from_checkpoint(spark, tmp_path, twin):
             ),
             str(src / f"b{i:02d}.parquet"),
         )
+        stamp_batch(src / f"b{i:02d}.parquet", i)
     second = _drain(build(_read_feed(spark, src)), tmp_path / "grow_ckpt")
     assert first, twin
     assert second, twin
