@@ -13,9 +13,12 @@ Every iterative algorithm runs on the one superstep driver,
 ``iteration_models.iterate`` (or, where it carries two frames, on its
 ``checkpoint_counting`` primitive): one eager ``localCheckpoint`` per
 superstep truncates lineage and observes the delta loops' exit count.
+Each loop runs under ``sized_shuffle``, at a shuffle width derived from
+its edge input, and each checkpoint is planned statically: one Spark
+job, and the checkpointed state stays hash-partitioned on its key.
 Loop-invariant edge tables are hash-partitioned on the per-superstep
-join key once (``_partitioned``), so each superstep shuffles only the
-state side.
+join key and checkpointed once (``_partitioned``), so each superstep's
+join on that key needs no exchange on the edge side.
 """
 
 from __future__ import annotations
@@ -53,16 +56,15 @@ def pagerank(
     merge side reads the vertex table), so two supersteps share each
     checkpoint."""
     with _sized_shuffle(edges):
-        # partitioned like the contributions' groupBy, so the rank merge
-        # plans with no exchange on either side; persisted, because a
-        # localCheckpoint drops the hash partitioning
-        vertices = _partitioned(
+        # checkpointed as the distinct left it, hash-partitioned like the
+        # contributions' groupBy, so the rank merge plans with no exchange
+        # on either side; the vertex count is observed on the same job
+        vertices, n = checkpoint_counting(
             edges.select(F.col("src").alias("vertex"))
             .union(edges.select(F.col("dst").alias("vertex")))
             .distinct(),
-            "vertex",
+            F.lit(True),
         )
-        n = vertices.count()
         edges_deg = _partitioned(
             edges.join(
                 edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src"
@@ -92,8 +94,6 @@ def pagerank(
             vertices.withColumn("rank", F.lit(1.0 / n)),
             *_two_per_step(superstep, iterations),
         )
-        vertices.unpersist()
-        edges_deg.unpersist()
         return ranks
 
 
@@ -153,7 +153,6 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
         state, _ = iterate(
             start, lambda s, _i: relax(relax(s)), max_iterations, F.col("changed")
         )
-        und.unpersist()
         return state.select("vertex", "component")
 
 
@@ -213,7 +212,6 @@ def sssp(
         state, _ = iterate(
             start, lambda s, _i: relax(relax(s)), max_iterations, F.col("changed")
         )
-        e.unpersist()
         return state.select("vertex", "distance")
 
 
@@ -436,7 +434,6 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
             .withColumn("label", F.col("vertex"))
         )
         labels, _ = iterate(start, *_two_per_step(superstep, iterations))
-        e.unpersist()
         return labels
 
 
@@ -517,8 +514,6 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
                 (F.coalesce("a", F.lit(0.0)) / F.col("an")).alias("auth"),
             )
         )
-        e.unpersist()
-        e_src.unpersist()
         return scores
 
 
@@ -1027,7 +1022,6 @@ def community_detection(
             )
         )
         state, _ = iterate(start, superstep, iterations)
-        both.unpersist()
         return state.select("vertex", "label")
 
 
@@ -1683,40 +1677,42 @@ def k_core(
     if base is not None:
         if edges is not None:
             raise ValueError("pass either edges or base, not both")
-        e = base.und
     elif edges is None:
         raise ValueError("pass an edge DataFrame or a prebuilt base")
-    else:
-        # materialized once: the first round reads it three times
-        # (degree union ×2 + the semi-join source)
-        e, _ = checkpoint_counting(_undirect(edges))
+    with _sized_shuffle(base.und if edges is None else edges):
+        if edges is None:
+            e = base.und
+        else:
+            # materialized once: the first round reads it three times
+            # (degree union ×2 + the semi-join source)
+            e, _ = checkpoint_counting(_undirect(edges))
 
-    def peel(deg: DataFrame, _i: int) -> DataFrame:
-        removed = deg.filter(F.col("c") < k).select("x")
-        dec = (
-            e.join(removed.withColumnRenamed("x", "v"), "v", "left_semi")
-            .select(F.col("u").alias("x"))
-            .unionAll(
-                e.join(
-                    removed.withColumnRenamed("x", "u"), "u", "left_semi"
-                ).select(F.col("v").alias("x"))
+        def peel(deg: DataFrame, _i: int) -> DataFrame:
+            removed = deg.filter(F.col("c") < k).select("x")
+            dec = (
+                e.join(removed.withColumnRenamed("x", "v"), "v", "left_semi")
+                .select(F.col("u").alias("x"))
+                .unionAll(
+                    e.join(
+                        removed.withColumnRenamed("x", "u"), "u", "left_semi"
+                    ).select(F.col("v").alias("x"))
+                )
+                .groupBy("x")
+                .agg(F.count(F.lit(1)).alias("d"))
             )
-            .groupBy("x")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        return (
-            deg.join(removed, "x", "left_anti")
-            .join(dec, "x", "left")
-            .select("x", (F.col("c") - F.coalesce("d", F.lit(0))).alias("c"))
-        )
+            return (
+                deg.join(removed, "x", "left_anti")
+                .join(dec, "x", "left")
+                .select("x", (F.col("c") - F.coalesce("d", F.lit(0))).alias("c"))
+            )
 
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionAll(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    deg, below_k = iterate(deg, peel, max_iterations, F.col("c") < k)
+        deg = (
+            e.select(F.col("u").alias("x"))
+            .unionAll(e.select(F.col("v").alias("x")))
+            .groupBy("x")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        deg, below_k = iterate(deg, peel, max_iterations, F.col("c") < k)
     if below_k:
         # a silently-truncated peel would return a non-core superset
         raise RuntimeError(

@@ -18,17 +18,23 @@ whole-stage codegen. One eager ``localCheckpoint`` per superstep cuts
 the unrolled lineage (plan size must not grow with iteration count),
 and the exit test is a count observed on that same checkpoint job —
 Flink's workset-empty termination without a separate Spark job.
+
+Every loop runs inside one ``sized_shuffle`` scope, which sets the
+shuffle width from the loop's input, and every checkpoint is planned
+with AQE off inside it: one Spark job per checkpoint, and the
+checkpointed state keeps its hash partitioning on the key, the way the
+reference keeps its solution set partitioned across supersteps. AQE
+stays on for everything outside the checkpoints.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .sizing import sized_shuffle
+from .sizing import scoped_conf, sized_shuffle
 
 
 def checkpoint_counting(
@@ -38,12 +44,21 @@ def checkpoint_counting(
     it with the number of its rows where ``cond`` holds (``None`` when
     no ``cond`` is given). The count is a ``DataFrame.observe`` metric
     filled by the checkpoint's own job, so it costs no extra Spark job,
-    where a separate ``filter(cond).isEmpty()`` costs one."""
-    if cond is None:
-        return df.localCheckpoint(eager=True), None
-    obs = Observation()
-    df = df.observe(obs, F.count_if(cond).alias("n")).localCheckpoint(eager=True)
-    return df, obs.get["n"]
+    where a separate ``filter(cond).isEmpty()`` costs one.
+
+    The checkpoint is planned and run with AQE off, at the session's
+    shuffle width, which the loop's ``sized_shuffle`` scope has set from
+    its input. Planned statically, the checkpoint is one job holding all
+    of its stages (AQE submits each shuffle stage as a job of its own),
+    and the checkpointed relation keeps the final exchange's hash
+    partitioning, so the next superstep's join and merge on the state
+    key plan no exchange on the state side."""
+    with scoped_conf(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
+        if cond is None:
+            return df.localCheckpoint(eager=True), None
+        obs = Observation()
+        df = df.observe(obs, F.count_if(cond).alias("n")).localCheckpoint(eager=True)
+        return df, obs.get["n"]
 
 
 def iterate(
@@ -81,10 +96,10 @@ def iterate(
 
 def _partitioned(edges: DataFrame, key: str) -> DataFrame:
     """A loop-invariant frame hash-partitioned on its per-superstep join
-    key at the session shuffle width and persisted, so every superstep's
-    join shuffles only the state side."""
+    key at the session shuffle width and checkpointed, so every
+    superstep's join shuffles only the state side."""
     width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return edges.repartition(width, key).persist(StorageLevel.MEMORY_AND_DISK)
+    return checkpoint_counting(edges.repartition(width, key))[0]
 
 
 def _symmetrized(edges: DataFrame, direction: str) -> DataFrame:
@@ -151,7 +166,6 @@ def gather_sum_apply_iteration(
 
         start = vertices.select("id", "value", F.lit(True).alias("changed"))
         state, _ = iterate(start, superstep, max_iterations, F.col("changed"))
-        e.unpersist()
         return state.select("id", "value")
 
 
@@ -199,12 +213,13 @@ def vertex_centric_iteration(
     groupBy the caller puts inside ``compute``). Terminates when no
     messages remain — Pregel's global halt — or at
     ``max_supersteps``. Returns the final (id, value) state."""
-    solution, _ = checkpoint_counting(vertices.select("id", "value"))
-    messages, n = checkpoint_counting(initial_messages, F.lit(True))
-    for superstep in range(max_supersteps):
-        if n == 0:
-            break
-        solution, messages = compute(superstep, solution, messages)
-        solution, _ = checkpoint_counting(solution)
-        messages, n = checkpoint_counting(messages, F.lit(True))
-    return solution
+    with sized_shuffle(vertices):
+        solution, _ = checkpoint_counting(vertices.select("id", "value"))
+        messages, n = checkpoint_counting(initial_messages, F.lit(True))
+        for superstep in range(max_supersteps):
+            if n == 0:
+                break
+            solution, messages = compute(superstep, solution, messages)
+            solution, _ = checkpoint_counting(solution)
+            messages, n = checkpoint_counting(messages, F.lit(True))
+        return solution

@@ -1,12 +1,16 @@
 """Shuffle-width scoping for iterative pipelines.
 
-Each superstep of an iterative pipeline localCheckpoints (or collects)
-its result, which materializes at the session shuffle width BEFORE AQE
-can coalesce — under a default 200-partition session a small input
-schedules 200 tasks per stage per iteration, pure scheduling overhead.
-Deriving the width from the input keeps the code scale-adaptive: a
-100 TB input arrives in thousands of partitions and gets a matching
-shuffle width, while test-scale data gets single-digit widths.
+A superstep loop plans each checkpoint statically (AQE off, see
+``iteration_models.checkpoint_counting``), so nothing coalesces its
+shuffles after the fact: the width has to be right before the plan
+runs. ``sized_shuffle`` derives it from the loop's input, the partition
+count of its widest source, read off the physical plan without running
+a job. A one-partition input gets width 1; a 100 TB input that arrives
+in thousands of splits keeps its thousands.
+
+There is no constant floor: a floor only adds empty tasks to every
+stage of every superstep of a small loop, which AQE would coalesce away
+but a statically planned checkpoint runs, every one of them.
 """
 
 from __future__ import annotations
@@ -17,20 +21,46 @@ from pyspark.sql import DataFrame
 
 
 @contextmanager
-def sized_shuffle(df: DataFrame, floor: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` to ``df``'s own partition
-    count for the duration of the block, restoring the previous value
-    after (even on error)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(floor, df.rdd.getNumPartitions())),
-    )
+def scoped_conf(spark, key: str, value: str):
+    """Set one SQL conf for the block and restore the previous value
+    after, also when the block raises."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(key, prev)
+
+
+def _source_widths(plan) -> list[int]:
+    """Partition counts of the sources under a physical plan. A cached
+    relation counts as the sources of its cached plan, so that nothing
+    is materialized to size it; building a leaf's RDD runs no job."""
+    leaves = plan.collectLeaves().iterator()
+    out = []
+    while leaves.hasNext():
+        leaf = leaves.next()
+        kind = leaf.getClass().getSimpleName()
+        if kind == "InMemoryTableScanExec":
+            out += _source_widths(leaf.relation().cachedPlan())
+        elif kind == "AdaptiveSparkPlanExec":
+            out += _source_widths(leaf.inputPlan())
+        else:
+            out.append(leaf.execute().getNumPartitions())
+    return out
+
+
+@contextmanager
+def sized_shuffle(df: DataFrame):
+    """Scope ``spark.sql.shuffle.partitions`` to the partition count of
+    ``df``'s widest source (at least 1) for the duration of the block,
+    restoring the previous value after (even on error). The width is
+    read off the physical plan, so sizing runs no job, where
+    ``df.rdd.getNumPartitions()`` would execute every adaptive shuffle
+    stage under ``df`` to read its coalesced count."""
+    width = max([1, *_source_widths(df._jdf.queryExecution().sparkPlan())])
+    with scoped_conf(df.sparkSession, "spark.sql.shuffle.partitions", str(width)):
+        yield
 
 
 def spread_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

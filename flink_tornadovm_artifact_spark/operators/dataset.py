@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.iteration_models import checkpoint_counting
+from ..functions.sizing import sized_shuffle
 
 ColumnOrName = Column | str
 
@@ -237,11 +238,12 @@ class Dataset:
         the DataFrame; each round is checkpointed, truncating lineage the
         way the reference caches marshalled buffers across iterations."""
         cur = self.df
-        for i in range(max_iterations):
-            prev = cur
-            cur, _ = checkpoint_counting(step(cur, i))
-            if converged is not None and converged(prev, cur):
-                break
+        with sized_shuffle(cur):
+            for i in range(max_iterations):
+                prev = cur
+                cur, _ = checkpoint_counting(step(cur, i))
+                if converged is not None and converged(prev, cur):
+                    break
         return Dataset(cur)
 
     def iterate_delta(
@@ -254,12 +256,13 @@ class Dataset:
         evolve; terminates early when the workset empties, a count
         observed on the workset's own checkpoint."""
         solution, ws = self.df, workset.df
-        for i in range(max_iterations):
-            solution, ws = step(solution, ws, i)
-            solution, _ = checkpoint_counting(solution)
-            ws, n = checkpoint_counting(ws, F.lit(True))
-            if n == 0:
-                break
+        with sized_shuffle(solution):
+            for i in range(max_iterations):
+                solution, ws = step(solution, ws, i)
+                solution, _ = checkpoint_counting(solution)
+                ws, n = checkpoint_counting(ws, F.lit(True))
+                if n == 0:
+                    break
         return Dataset(solution)
 
     # -- sinks (§2.A) ---------------------------------------------------

@@ -87,8 +87,12 @@ def keyed_fold(
     ``ValueError``, which fails the query, rather than fold events out
     of order. A log-compacted topic or a sorted replay meets the
     contract; for any other feed, run ``ordered_events_stream``
-    upstream. A key whose state was dropped starts afresh, with no
-    position to check against.
+    upstream. Under ``deadlines``, a key whose fold drops its state
+    keeps its position, with an empty fold state, until the watermark
+    passes it, and is dropped then: past that point Spark discards
+    older events as late before they reach the fold. Without deadlines
+    nothing would ever clean such an entry up, so a dropped key starts
+    afresh, with no position to check against.
     """
     import pandas as pd
 
@@ -124,6 +128,10 @@ def keyed_fold(
             last_eid = int(rows["event_id"].iloc[-1])
         wm_us = state.getCurrentWatermarkMs() * 1_000 if deadlines else None
         acc, out, deadline_us = fold(tuple(acc), rows, wm_us)
+        if acc is None and deadlines and last_eid >= 0 and last_ts >= wm_us:
+            # keep a drained key's position until the watermark passes
+            # it; from then on Spark drops older events as late
+            acc, deadline_us = init, last_ts
         if acc is not None:
             state.update((*acc, last_ts, last_eid))
             if deadline_us is not None:

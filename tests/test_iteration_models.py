@@ -440,3 +440,135 @@ def test_superstep_loops_reject_zero_steps(spark, call):
     e = spark.createDataFrame([(0, 1), (1, 2), (2, 3), (3, 0)], "src long, dst long")
     with pytest.raises(ValueError, match="max_steps"):
         call(graph, e)
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; return its result and
+    the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_sized_shuffle_runs_no_job(spark):
+    """The loop width comes off the physical plan: sizing a shuffled,
+    joined input or an unmaterialized persisted one starts no Spark job,
+    a one-partition input gets width 1 (no floor) and a wider input
+    keeps its partition count."""
+    from flink_tornadovm_artifact_spark.functions.sizing import sized_shuffle
+
+    def width(df):
+        with sized_shuffle(df):
+            return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    shuffled = (
+        spark.range(0, 100, numPartitions=3)
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count()
+        .join(spark.range(0, 3, numPartitions=2).withColumnRenamed("id", "k"), "k")
+    )
+    cached = spark.range(0, 50, numPartitions=5).repartition(7).persist()
+    got, jobs = _jobs_in_group(
+        spark,
+        "test_sized_shuffle_runs_no_job",
+        lambda: (width(shuffled), width(cached), width(spark.range(0, 9, numPartitions=1))),
+    )
+    cached.unpersist()
+    assert jobs == []
+    assert got == (3, 5, 1)
+
+
+def test_checkpoint_keeps_hash_partitioning(spark):
+    """A superstep checkpoint of a frame hash-partitioned on ``k``, joined
+    on ``k`` with a frame partitioned the same way, plans no exchange
+    over the checkpoint's scan (the size-based broadcast is off, so the
+    join is a shuffle join)."""
+    from flink_tornadovm_artifact_spark.functions.iteration_models import (
+        checkpoint_counting,
+    )
+    from flink_tornadovm_artifact_spark.functions.sizing import scoped_conf
+
+    def keyed(n):
+        return spark.range(n).select((F.col("id") % 5).alias("k"), "id")
+
+    state, _ = checkpoint_counting(keyed(40).repartition(4, "k"))
+    other = keyed(20).withColumnRenamed("id", "w").repartition(4, "k")
+    with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"), scoped_conf(
+        spark, "spark.sql.adaptive.enabled", "false"
+    ):
+        plan = state.join(other, "k")._jdf.queryExecution().executedPlan()
+    shuffled = []
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            leaves = node.collectLeaves().iterator()
+            while leaves.hasNext():
+                shuffled.append(leaves.next().getClass().getSimpleName())
+        kids = node.children()
+        nodes += [kids.apply(i) for i in range(kids.size())]
+    assert shuffled == ["RangeExec"]  # only the other side's own repartition
+
+
+def test_sssp_runs_one_job_per_checkpoint(spark, monkeypatch):
+    """Each superstep checkpoint of sssp on the path graph is one Spark
+    job holding all of its stages."""
+    from flink_tornadovm_artifact_spark.functions import iteration_models
+    from flink_tornadovm_artifact_spark.functions.graph import sssp
+
+    checkpoints = []
+    real = iteration_models.checkpoint_counting
+
+    def counted(df, cond=None):
+        checkpoints.append(cond)
+        return real(df, cond)
+
+    monkeypatch.setattr(iteration_models, "checkpoint_counting", counted)
+    e = _edges(spark, [(0, 1, 1), (1, 2, 1), (2, 3, 1), (3, 4, 1), (4, 2, 1)])
+    got, jobs = _jobs_in_group(
+        spark,
+        "test_sssp_runs_one_job_per_checkpoint",
+        lambda: sssp(e.withColumnRenamed("value", "weight"), source=0),
+    )
+    assert {r.vertex: r.distance for r in got.collect()} == {v: v for v in range(5)}
+    assert len(checkpoints) > 2
+    assert len(jobs) == len(checkpoints)
+
+
+def test_loops_restore_session_conf(spark):
+    """The superstep scope puts ``spark.sql.adaptive.enabled`` and
+    ``spark.sql.shuffle.partitions`` back after a loop, after a step
+    that raises, and after a checkpoint whose job fails."""
+    from flink_tornadovm_artifact_spark.functions.graph import connected_components
+    from flink_tornadovm_artifact_spark.functions.iteration_models import (
+        checkpoint_counting,
+        iterate,
+    )
+    from flink_tornadovm_artifact_spark.functions.sizing import sized_shuffle
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = [spark.conf.get(k) for k in keys]
+    e = spark.range(0, 4, numPartitions=1).select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % 4).alias("dst")
+    )
+    connected_components(e).collect()
+    assert [spark.conf.get(k) for k in keys] == before
+
+    seen = []
+
+    def failing(state, _i):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("step failed")
+
+    with pytest.raises(RuntimeError, match="step failed"), sized_shuffle(e):
+        iterate(e, failing, 3)
+    assert seen == ["1"]
+    assert [spark.conf.get(k) for k in keys] == before
+
+    with pytest.raises(Exception, match="checkpoint failed"), sized_shuffle(e):
+        checkpoint_counting(e.select(F.raise_error(F.lit("checkpoint failed"))))
+    assert [spark.conf.get(k) for k in keys] == before

@@ -53,7 +53,7 @@ from flink_tornadovm_artifact_spark.queries.pipeline import (
 )
 from flink_tornadovm_artifact_spark.tables import load
 
-from .conftest import SF_ORACLE, SF_SMOKE
+from .conftest import SF_ORACLE, SF_SMOKE, stamp_batch
 
 
 # ---------------------------------------------------------------------------
@@ -275,6 +275,7 @@ def _write_dedup_chunks(feed, chunks):
             ),
             str(feed / f"b{i:02d}.parquet"),
         )
+        stamp_batch(feed / f"b{i:02d}.parquet", i)
 
 
 def _dedup_stream(spark, feed):

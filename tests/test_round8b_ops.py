@@ -25,7 +25,7 @@ from flink_tornadovm_artifact_spark.queries.pipeline import (
 )
 from flink_tornadovm_artifact_spark.tables import load
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, stamp_batch
 
 
 def test_pii_audit_matches_fixture_shapes(spark):
@@ -205,11 +205,14 @@ def test_hll_stream_matches_batch_registers(spark, tmp_path):
     src = tmp_path / "hll_stream"
     src.mkdir()
     half = len(collected) // 2
-    for name, part in (("b0", collected[:half]), ("b1", collected[half:])):
+    for i, (name, part) in enumerate(
+        (("b0", collected[:half]), ("b1", collected[half:]))
+    ):
         pq.write_table(
             pa.table({"text": pa.array([r.text for r in part], pa.string())}),
             str(src / f"{name}.parquet"),
         )
+        stamp_batch(src / f"{name}.parquet", i)
     stream = (
         spark.readStream.schema("text string")
         .option("maxFilesPerTrigger", 1)

@@ -33,7 +33,7 @@ from flink_tornadovm_artifact_spark.queries.pipeline import (
 )
 from flink_tornadovm_artifact_spark.tables import load
 
-from .conftest import SF_ORACLE, SF_SMOKE
+from .conftest import SF_ORACLE, SF_SMOKE, stamp_batch
 
 
 def _gopher_flags(text: str) -> dict[str, bool]:
@@ -348,7 +348,9 @@ def test_gopher_stream_matches_batch_panel(spark, tmp_path):
     src = tmp_path / "gopher_stream"
     src.mkdir()
     half = len(collected) // 2
-    for name, part in (("b0", collected[:half]), ("b1", collected[half:])):
+    for i, (name, part) in enumerate(
+        (("b0", collected[:half]), ("b1", collected[half:]))
+    ):
         pq.write_table(
             pa.table(
                 {
@@ -358,6 +360,7 @@ def test_gopher_stream_matches_batch_panel(spark, tmp_path):
             ),
             str(src / f"{name}.parquet"),
         )
+        stamp_batch(src / f"{name}.parquet", i)
     stream = (
         spark.readStream.schema("source string, text string")
         .option("maxFilesPerTrigger", 1)

@@ -353,9 +353,11 @@ def test_twin_fails_loudly_on_out_of_order_feed(spark, tmp_path):
     """Without the reorder stage, a cross-batch ordering violation must
     RAISE (the r9 form silently miscounted): batch 2 delivers an event
     earlier than batch 1's last processed position. Checked on a
-    behavior twin and on a CEP twin; the CEP twin's watermark is wider
-    than the feed's gap, so Spark does not drop the older row as late
-    before the state function sees it."""
+    behavior twin and on two CEP twins; the CEP twins' watermark is
+    wider than the feed's gap, so Spark does not drop the older row as
+    late before the state function sees it. The absence twin's first
+    batch drains its pending A (the purchase follows in time), so the
+    check holds only if the drained key keeps its position."""
     import datetime as dt
 
     import pyarrow as pa
@@ -364,42 +366,60 @@ def test_twin_fails_loudly_on_out_of_order_feed(spark, tmp_path):
     from flink_tornadovm_artifact_spark.queries.behavior import (
         markov_transitions_stream,
     )
-    from flink_tornadovm_artifact_spark.streaming import cep_next_stream
-
-    src = tmp_path / "ooo_feed"
-    src.mkdir()
-    t0 = dt.datetime(2024, 1, 1)
-    batches = (
-        [(t0 + dt.timedelta(hours=2), 1, 2, "view")],
-        [(t0 + dt.timedelta(hours=1), 1, 1, "click")],  # older than b0
+    from flink_tornadovm_artifact_spark.streaming import (
+        cep_next_stream,
+        cep_not_followed_by_stream,
     )
-    for i, part in enumerate(batches):
-        pq.write_table(
-            pa.table(
-                {
-                    "ts": pa.array([r[0] for r in part], pa.timestamp("us")),
-                    "user_id": pa.array([r[1] for r in part], pa.int64()),
-                    "event_id": pa.array([r[2] for r in part], pa.int64()),
-                    "event_type": pa.array([r[3] for r in part], pa.string()),
-                }
-            ),
-            str(src / f"b{i}.parquet"),
+
+    t0 = dt.datetime(2024, 1, 1)
+    h = dt.timedelta(hours=1)
+
+    def feed(name, batches):
+        src = tmp_path / name
+        src.mkdir()
+        for i, part in enumerate(batches):
+            pq.write_table(
+                pa.table(
+                    {
+                        "ts": pa.array([r[0] for r in part], pa.timestamp("us")),
+                        "user_id": pa.array([r[1] for r in part], pa.int64()),
+                        "event_id": pa.array([r[2] for r in part], pa.int64()),
+                        "event_type": pa.array([r[3] for r in part], pa.string()),
+                    }
+                ),
+                str(src / f"b{i}.parquet"),
+            )
+            stamp_batch(src / f"b{i}.parquet", i)
+        return (
+            spark.readStream.schema(
+                "ts timestamp, user_id long, event_id long, event_type string"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
         )
-        stamp_batch(src / f"b{i}.parquet", i)
-    stream = (
-        spark.readStream.schema(
-            "ts timestamp, user_id long, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+
+    view_then_older_click = (
+        [(t0 + 2 * h, 1, 2, "view")],
+        [(t0 + h, 1, 1, "click")],  # older than b0
+    )
+    error_purchase_then_older_error = (
+        [(t0, 1, 1, "error"), (t0 + h / 6, 1, 2, "purchase")],
+        [(t0 - h, 1, 3, "error")],  # older than b0
     )
     twins = {
-        "markov": markov_transitions_stream,
-        "cep_next": lambda s: cep_next_stream(s, watermark="1 day"),
+        "markov": (markov_transitions_stream, view_then_older_click),
+        "cep_next": (
+            lambda s: cep_next_stream(s, watermark="1 day"),
+            view_then_older_click,
+        ),
+        "cep_not_followed_by": (
+            lambda s: cep_not_followed_by_stream(s, watermark="1 day"),
+            error_purchase_then_older_error,
+        ),
     }
-    for name, twin in twins.items():
+    for name, (twin, batches) in twins.items():
         with pytest.raises(Exception, match="ordering contract violated"):
-            _drain(twin(stream), tmp_path / f"ooo_ckpt_{name}")
+            _drain(twin(feed(f"ooo_feed_{name}", batches)), tmp_path / f"ooo_ckpt_{name}")
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,7 @@ from flink_tornadovm_artifact_spark.streaming import (
 )
 from flink_tornadovm_artifact_spark.tables import load
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, stamp_batch
 
 
 @pytest.fixture(scope="module")
@@ -244,7 +244,6 @@ def test_watermark_drops_late_rows_across_microbatches(spark, tmp_path):
     """True late-data policy check: a row older than the watermark arriving
     in a LATER micro-batch is dropped from the windowed aggregate
     (allowedLateness semantics, WindowedStream.java:158)."""
-    import time as _time
 
     import pandas as pd
     import pyarrow as pa
@@ -271,15 +270,16 @@ def test_watermark_drops_late_rows_across_microbatches(spark, tmp_path):
 
     # batch 1: window [0,10) has 2 rows; watermark advances to 25 min
     write_batch("b1.parquet", [(1, 0.0, 7), (2, 9.0, 7), (3, 30.0, 7)])
-    _time.sleep(1.1)  # mtime-ordered triggers
+    stamp_batch(d / "b1.parquet", 1)  # mtime-ordered triggers
     # batch 2: fresh row only — [0,10) state emits and EVICTS this batch
     # (Spark only guarantees the drop after eviction; a late row arriving
     # in the same batch as the eviction still merges)
     write_batch("b2.parquet", [(4, 50.0, 7)])
-    _time.sleep(1.1)
+    stamp_batch(d / "b2.parquet", 2)
     # batch 3: the very-late row for the already-evicted [0,10) window,
     # plus a fresh row to finalize remaining windows
     write_batch("b3.parquet", [(5, 2.0, 7), (6, 70.0, 7)])
+    stamp_batch(d / "b3.parquet", 3)
 
     stream = events_file_stream(spark, str(d), max_files_per_trigger=1)
     got = memory_sink_run(
@@ -298,7 +298,6 @@ def test_keyed_process_timeout_fires_on_watermark(spark, tmp_path):
     """Event-time timer semantics (KeyedProcessFunction
     registerEventTimeTimer): a key's session flushes only after the
     watermark passes its last event + gap with no new input."""
-    import time as _time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -325,13 +324,14 @@ def test_keyed_process_timeout_fires_on_watermark(spark, tmp_path):
     # NB: minute 0 would equal the INITIAL watermark (epoch 0) and
     # applyInPandasWithState drops not-after-watermark rows as late.
     write_batch("b1.parquet", [(1, 100.0, 7, 1.0), (2, 105.0, 7, 2.0)])
-    _time.sleep(1.1)
+    stamp_batch(d / "b1.parquet", 1)
     # batch 2: user 9 at minute 160 → watermark advances to 150, past
     # user 7's timer at minute 105 + 10 = 115 → user 7's session flushes
     write_batch("b2.parquet", [(3, 160.0, 9, 5.0)])
-    _time.sleep(1.1)
+    stamp_batch(d / "b2.parquet", 2)
     # batch 3: push the watermark again so batch 2's advance is applied
     write_batch("b3.parquet", [(4, 170.0, 9, 6.0)])
+    stamp_batch(d / "b3.parquet", 3)
 
     stream = events_file_stream(spark, str(d), max_files_per_trigger=1)
     got = memory_sink_run(
@@ -367,7 +367,6 @@ def test_read_keyed_state_from_checkpoint(spark, tmp_path):
     Savepoint.load → readKeyedState): a stopped query's keyed aggregate
     state is readable offline from the checkpoint, and batchId
     time-travels to an earlier micro-batch's state."""
-    import time as _time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -390,8 +389,9 @@ def test_read_keyed_state_from_checkpoint(spark, tmp_path):
         )
 
     write("b0.parquet", [(1, 1.0), (1, 2.0), (2, 10.0)])
-    _time.sleep(1.1)  # mtime-ordered triggers
+    stamp_batch(src / "b0.parquet", 0)  # mtime-ordered triggers
     write("b1.parquet", [(2, 20.0), (3, 5.0)])
+    stamp_batch(src / "b1.parquet", 1)
 
     stream = (
         spark.readStream.schema("user_id long, value double")
@@ -516,7 +516,6 @@ def test_statestore_queryable_state_live_lookup(spark, tmp_path):
     lookups against a RUNNING query's checkpoint reflect each committed
     micro-batch without any side sink, and an unseen key returns None.
     (QueryableStateClient visibility = last completed checkpoint.)"""
-    import time as _time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -541,6 +540,7 @@ def test_statestore_queryable_state_live_lookup(spark, tmp_path):
         )
 
     write("b0.parquet", [(1, 1.0), (1, 2.0), (2, 10.0)])
+    stamp_batch(src / "b0.parquet", 0)
     agg = (
         spark.readStream.schema("user_id long, value double")
         .parquet(str(src))
@@ -560,8 +560,8 @@ def test_statestore_queryable_state_live_lookup(spark, tmp_path):
         # lookup WHILE the query is still running
         assert qs.get(user_id=1) == {"count": 2, "sum": 3.0}
         assert qs.get(user_id=3) is None
-        _time.sleep(1.1)
         write("b1.parquet", [(1, 4.0), (3, 5.0)])
+        stamp_batch(src / "b1.parquet", 1)
         q.processAllAvailable()
         assert qs.get(user_id=1) == {"count": 3, "sum": 7.0}
         assert qs.get(user_id=3) == {"count": 1, "sum": 5.0}
